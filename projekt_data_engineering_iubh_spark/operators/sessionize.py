@@ -31,7 +31,7 @@ def with_session_seq(
     df: DataFrame,
     *,
     partition_by: Sequence[str],
-    order_by: Sequence[str],
+    order_by: Sequence[str | Column],
     is_marker: Column,
     session_col: str = "session_seq",
 ) -> DataFrame:

@@ -12,8 +12,9 @@ errors (:70-116), enriched-event output (:173-188), hourly summary
    generator emits exactly that) sorts End < measurements < Start, which
    reproduces file order deterministically on any partitioning.
 2. **Cached shared subtree** — the reference recomputes the whole lineage
-   for its second write action (SURVEY.md §3 step 7); ``run`` persists the
-   enriched events once.
+   for its second write action (SURVEY.md §3 step 7); ``run`` persists one
+   frame, the flagged events joined to their cycle's start and duration,
+   and both sinks read it.
 3. **Idempotent summary** — the README documents a staging+merge the code
    never had (D1/D4); the parquet sink overwrites per ``summary_date``
    partition (re-running a day replaces it, byte-identical), and the JDBC
@@ -34,9 +35,9 @@ Two further OUTPUT-SCHEMA deviations, also deliberate:
    column type to do that, so the rounding is applied in the plan to
    keep both sinks byte-equivalent.
 
-Scale: the only shuffles are the per-machine window sort and the two
-hourly aggregations; the cycle-times side of both joins is broadcast
-(8× smaller than events, per the fixed cycle shape). One machine-day is
+Scale: the only shuffles are the per-machine window sort and the one
+hourly aggregation; the cycle-times side of the join is broadcast (8×
+smaller than events, per the fixed cycle shape). One machine-day is
 ~1.15 M rows; the machine_id key domain is what parallelizes a fleet.
 """
 
@@ -105,17 +106,15 @@ def cleanse(raw: DataFrame) -> DataFrame:
     ``try_`` variants restore the reference's bad-row-tolerant semantics
     without disabling ANSI for everything else.
     """
-    return (
-        raw.withColumn(
-            "event_timestamp",
-            F.try_to_timestamp("timestamp", F.lit(TIMESTAMP_FORMAT_INPUT)),
-        )
-        .withColumn("value_num", F.col("value").try_cast("double"))
-        .fillna("", subset=["parameter_name"])
-        .dropna(subset=["event_timestamp", "machine_id", "event_name"])
-        .drop("timestamp", "value")
-        .withColumnRenamed("value_num", "value")
-    )
+    return raw.select(
+        "machine_id",
+        "event_name",
+        F.coalesce("parameter_name", F.lit("")).alias("parameter_name"),
+        F.try_to_timestamp("timestamp", F.lit(TIMESTAMP_FORMAT_INPUT)).alias(
+            "event_timestamp"
+        ),
+        F.col("value").try_cast("double").alias("value"),
+    ).dropna(subset=["event_timestamp", "machine_id", "event_name"])
 
 
 def _marker_rank() -> F.Column:
@@ -142,40 +141,41 @@ def compute_cycles(
     parallelizes across splits instead of serializing on the hot machine
     key. Only valid when file order == time order.
     """
+    is_start = F.col("event_name") == CYCLE_START_EVENT
     if presorted:
         with_seq = with_session_seq_presorted(
-            events,
-            is_marker=F.col("event_name") == CYCLE_START_EVENT,
-            session_col="cycle_seq",
+            events, is_marker=is_start, session_col="cycle_seq"
         )
     else:
         with_seq = with_session_seq(
-            events.withColumn("marker_rank", _marker_rank()),
+            events,
             partition_by=["machine_id"],
-            order_by=["event_timestamp", "marker_rank", "parameter_name"],
-            is_marker=F.col("event_name") == CYCLE_START_EVENT,
+            order_by=["event_timestamp", _marker_rank(), "parameter_name"],
+            is_marker=is_start,
             session_col="cycle_seq",
-        ).drop("marker_rank")
+        )
 
-    boundaries = (
-        with_seq.filter(F.col("cycle_seq") > 0)
-        .filter(F.col("event_name").isin(CYCLE_START_EVENT, CYCLE_END_EVENT))
+    cycle_times = (
+        with_seq.filter(
+            (F.col("cycle_seq") > 0)
+            & F.col("event_name").isin(CYCLE_START_EVENT, CYCLE_END_EVENT)
+        )
         .groupBy("machine_id", "cycle_seq")
         .agg(
             F.min("event_timestamp").alias("cycle_start_ts"),
             F.max("event_timestamp").alias("cycle_end_ts"),
         )
+        .select(
+            "machine_id",
+            "cycle_seq",
+            "cycle_start_ts",
+            F.round(
+                (F.unix_micros("cycle_end_ts") - F.unix_micros("cycle_start_ts"))
+                / F.lit(1000000.0),
+                3,
+            ).alias("cycle_time_seconds"),
+        )
     )
-    cycle_times = boundaries.withColumn(
-        "cycle_time_seconds",
-        F.round(
-            (
-                F.unix_micros("cycle_end_ts") - F.unix_micros("cycle_start_ts")
-            )
-            / F.lit(1000000.0),
-            3,
-        ),
-    ).select("machine_id", "cycle_seq", "cycle_start_ts", "cycle_time_seconds")
     return with_seq, cycle_times
 
 
@@ -184,27 +184,31 @@ def flag_errors(events: DataFrame, rules: dict[str, Any]) -> DataFrame:
     return with_error_flag(events, rules, PARAMETER_EVENT_MAPPING)
 
 
+def _with_cycle_times(events_err: DataFrame, cycle_times: DataFrame) -> DataFrame:
+    """J1: attach each event's cycle start and duration (NULL before the
+    first Cycle_Start). Both outputs read these joined rows."""
+    return events_err.join(
+        F.broadcast(cycle_times), on=["machine_id", "cycle_seq"], how="left"
+    )
+
+
+def _enriched(joined: DataFrame) -> DataFrame:
+    """P13 + P5: the enriched-event output columns."""
+    return joined.select(
+        "event_timestamp",
+        "machine_id",
+        "event_name",
+        "parameter_name",
+        F.round("value", 2).alias("value"),
+        "is_error",
+        "cycle_seq",
+        "cycle_time_seconds",
+    )
+
+
 def enriched_events(events_err: DataFrame, cycle_times: DataFrame) -> DataFrame:
     """J1 + P13 + P5: attach per-cycle duration to every event row."""
-    return (
-        events_err.join(
-            F.broadcast(
-                cycle_times.select("machine_id", "cycle_seq", "cycle_time_seconds")
-            ),
-            on=["machine_id", "cycle_seq"],
-            how="left",
-        )
-        .select(
-            "event_timestamp",
-            "machine_id",
-            "event_name",
-            "parameter_name",
-            F.round("value", 2).alias("value"),
-            "is_error",
-            "cycle_seq",
-            "cycle_time_seconds",
-        )
-    )
+    return _enriched(_with_cycle_times(events_err, cycle_times))
 
 
 def _force(name: str, param: str) -> F.Column:
@@ -225,107 +229,73 @@ def _err_count(param: str, event: str) -> F.Column:
     )
 
 
+def _zero_filled(agg: F.Column, scale: int) -> F.Column:
+    """``fillna(0)`` (NULL and NaN → 0), then round to ``scale`` dp."""
+    return F.round(F.coalesce(F.nanvl(agg, F.lit(None)), F.lit(0.0)), scale)
+
+
+def _summary(joined: DataFrame) -> DataFrame:
+    """A2 + A3 + P14/P15/P13 over the joined rows, in one aggregation whose
+    output is the SUMMARY_COLUMNS (+ total_error_count) in order.
+
+    Every cycle has exactly one Cycle_Start row, so counting those rows is
+    the cycle count and the cycle-time stats over them are per-cycle
+    stats: the reference's cycle-side and event-side rollups (J2 + J3,
+    joined FULL OUTER) have equal key sets and collapse into this pass."""
+    cycle_time = F.when(
+        F.col("event_name") == CYCLE_START_EVENT, F.col("cycle_time_seconds")
+    )
+    forces = [
+        _zero_filled(fn(_force(event, "PP_Force")), 2).alias(f"{name}_{kind}_force")
+        for kind, event in (("pick", "Pick_Check"), ("place", "Place_Check"))
+        for name, fn in (("avg", F.avg), ("max", F.max), ("min", F.min))
+    ]
+    return (
+        joined.filter(F.col("cycle_start_ts").isNotNull())
+        .groupBy(
+            F.to_date("cycle_start_ts").alias("summary_date"),
+            F.hour("cycle_start_ts").alias("hour_of_day"),
+            "machine_id",
+        )
+        .agg(
+            *forces,
+            _err_count("AS_VacuumUnits", "AS_Check").alias("as_vacuum_error_count"),
+            _err_count("PP_VacuumUnits", "Pick_Check").alias("pp_vacuum_error_count"),
+            _err_count("AS_VacuumUnits", "AS_Blowoff_Check").alias(
+                "as_release_error_count"
+            ),
+            _err_count("PP_VacuumUnits", "Place_Check").alias("pp_release_error_count"),
+            _err_count("PP_Force", "Pick_Check").alias("pick_force_error_count"),
+            _err_count("PP_Force", "Place_Check").alias("place_force_error_count"),
+            F.count(cycle_time).alias("cycle_count"),
+            _zero_filled(F.min(cycle_time), 3).alias("min_cycle_time_seconds"),
+            _zero_filled(F.max(cycle_time), 3).alias("max_cycle_time_seconds"),
+            _zero_filled(F.avg(cycle_time), 3).alias("avg_cycle_time_seconds"),
+            F.sum("is_error").alias("total_error_count"),
+        )
+    )
+
+
 def hourly_summary(events_err: DataFrame, cycle_times: DataFrame) -> DataFrame:
     """A2 + A3 + J2 + J3 + P14/P15/P13: the 19-column wide hourly rollup.
 
     Events bucket into the hour their *cycle started* (reference joins
     cycle_start_ts back before extracting date/hour, :207-214)."""
-    cyc = (
-        cycle_times.withColumn("summary_date", F.to_date("cycle_start_ts"))
-        .withColumn("hour_of_day", F.hour("cycle_start_ts"))
-        .filter(F.col("summary_date").isNotNull())
-    )
-    cycle_summary = cyc.groupBy("summary_date", "hour_of_day", "machine_id").agg(
-        F.countDistinct("cycle_seq").alias("cycle_count"),
-        F.avg("cycle_time_seconds").alias("avg_cycle_time_seconds"),
-        F.min("cycle_time_seconds").alias("min_cycle_time_seconds"),
-        F.max("cycle_time_seconds").alias("max_cycle_time_seconds"),
-    )
+    return _summary(_with_cycle_times(events_err, cycle_times))
 
-    ev = (
-        events_err.join(
-            F.broadcast(
-                cycle_times.select("machine_id", "cycle_seq", "cycle_start_ts")
-            ),
-            on=["machine_id", "cycle_seq"],
-            how="left",
-        )
-        .withColumn("summary_date", F.to_date("cycle_start_ts"))
-        .withColumn("hour_of_day", F.hour("cycle_start_ts"))
-        .filter(F.col("summary_date").isNotNull())
-    )
-    event_summary = ev.groupBy("summary_date", "hour_of_day", "machine_id").agg(
-        F.avg(_force("Pick_Check", "PP_Force")).alias("avg_pick_force"),
-        F.max(_force("Pick_Check", "PP_Force")).alias("max_pick_force"),
-        F.min(_force("Pick_Check", "PP_Force")).alias("min_pick_force"),
-        F.avg(_force("Place_Check", "PP_Force")).alias("avg_place_force"),
-        F.max(_force("Place_Check", "PP_Force")).alias("max_place_force"),
-        F.min(_force("Place_Check", "PP_Force")).alias("min_place_force"),
-        _err_count("AS_VacuumUnits", "AS_Check").alias("as_vacuum_error_count"),
-        _err_count("PP_VacuumUnits", "Pick_Check").alias("pp_vacuum_error_count"),
-        _err_count("AS_VacuumUnits", "AS_Blowoff_Check").alias(
-            "as_release_error_count"
-        ),
-        _err_count("PP_VacuumUnits", "Place_Check").alias("pp_release_error_count"),
-        _err_count("PP_Force", "Pick_Check").alias("pick_force_error_count"),
-        _err_count("PP_Force", "Place_Check").alias("place_force_error_count"),
-        F.sum("is_error").alias("total_error_count"),
-    )
 
-    summary = (
-        cycle_summary.join(
-            event_summary,
-            on=["summary_date", "hour_of_day", "machine_id"],
-            how="outer",
-        )
-        .fillna(
-            0,
-            subset=[
-                "cycle_count",
-                "avg_cycle_time_seconds",
-                "min_cycle_time_seconds",
-                "max_cycle_time_seconds",
-                "avg_pick_force",
-                "max_pick_force",
-                "min_pick_force",
-                "avg_place_force",
-                "max_place_force",
-                "min_place_force",
-                "as_vacuum_error_count",
-                "pp_vacuum_error_count",
-                "as_release_error_count",
-                "pp_release_error_count",
-                "pick_force_error_count",
-                "place_force_error_count",
-                "total_error_count",
-            ],
-        )
-    )
-    for col, scale in [
-        ("min_cycle_time_seconds", 3),
-        ("max_cycle_time_seconds", 3),
-        ("avg_cycle_time_seconds", 3),
-        ("avg_pick_force", 2),
-        ("max_pick_force", 2),
-        ("min_pick_force", 2),
-        ("avg_place_force", 2),
-        ("max_place_force", 2),
-        ("min_place_force", 2),
-    ]:
-        summary = summary.withColumn(col, F.round(F.col(col), scale))
-    return summary.select(*SUMMARY_COLUMNS, "total_error_count")
+def _joined(raw: DataFrame, rules: dict[str, Any]) -> DataFrame:
+    """The batch DAG up to the fork into the two outputs."""
+    with_seq, cycle_times = compute_cycles(cleanse(raw))
+    return _with_cycle_times(flag_errors(with_seq, rules), cycle_times)
 
 
 def transform(
     raw: DataFrame, rules: dict[str, Any]
 ) -> tuple[DataFrame, DataFrame]:
     """Full logical pipeline: raw CSV rows → (enriched events, hourly summary)."""
-    events = cleanse(raw)
-    with_seq, cycle_times = compute_cycles(events)
-    events_err = flag_errors(with_seq, rules)
-    return enriched_events(events_err, cycle_times), hourly_summary(
-        events_err, cycle_times
-    )
+    joined = _joined(raw, rules)
+    return _enriched(joined), _summary(joined)
 
 
 def run(
@@ -344,41 +314,34 @@ def run(
       implemented (D1), at the granularity its per-machine daily files
       actually arrive in.
     """
-    events_err_cached = None
-    raw = read_events_csv(spark, input_csv)
-    events = cleanse(raw)
-    with_seq, cycle_times = compute_cycles(events)
-    events_err_cached = flag_errors(with_seq, rules).persist()
-    cycle_times = cycle_times.persist()
+    joined = _joined(read_events_csv(spark, input_csv), rules).persist()
     try:
-        enriched = enriched_events(events_err_cached, cycle_times)
-        summary = hourly_summary(events_err_cached, cycle_times)
-
-        (
-            enriched.withColumn("event_date", F.to_date("event_timestamp"))
-            .write.mode("append")
-            .partitionBy("event_date")
-            .parquet(f"{output_dir}/processed_machine_events")
+        enriched = _enriched(joined).withColumn(
+            "event_date", F.to_date("event_timestamp")
         )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        enriched.write.mode("append").partitionBy("event_date").parquet(
+            f"{output_dir}/processed_machine_events"
+        )
         # partition by (date, machine): a rerun of one machine-day replaces
         # exactly that pair — partitioning by date alone would clobber other
         # machines' rows for the same day when jobs run per machine-file
+        summary = _summary(joined)
         (
             summary.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("summary_date", "machine_id")
             .parquet(f"{output_dir}/hourly_machine_summary")
         )
-        n_events = spark.read.parquet(
+        # read back with the written schemas: no inference job per read
+        n_events = spark.read.schema(enriched.schema).parquet(
             f"{output_dir}/processed_machine_events"
         ).count()
-        n_summary = spark.read.parquet(
+        n_summary = spark.read.schema(summary.schema).parquet(
             f"{output_dir}/hourly_machine_summary"
         ).count()
         return {"events": n_events, "summary_rows": n_summary}
     finally:
-        events_err_cached.unpersist()
-        cycle_times.unpersist()
+        joined.unpersist()
 
 
 def validate_input_filename(name: str) -> str | None:

@@ -38,11 +38,9 @@ def write_partitioned(
     mode="overwrite_partitions" replaces only the partitions present in
     ``df`` (idempotent daily rerun); "append"/"overwrite" as in Spark.
     """
-    spark = df.sparkSession
     writer = df.repartition(*[df[c] for c in partition_by]).write
     if mode == "overwrite_partitions":
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        writer = writer.mode("overwrite")
+        writer = writer.mode("overwrite").option("partitionOverwriteMode", "dynamic")
     else:
         writer = writer.mode(mode)
     writer.partitionBy(*partition_by).parquet(path)

@@ -46,12 +46,11 @@ def write_idempotent_hourly(batch_df: DataFrame, batch_id: int, output_dir: str)
     emits different hours of the same date in different batches — a
     date-grained overwrite would clobber previously emitted hours (see
     pipeline_stream.write_summary_batch)."""
-    spark = batch_df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (
         batch_df.withColumn("summary_date", F.to_date(F.col("hour_window.start")))
         .withColumn("hour_of_day", F.hour(F.col("hour_window.start")))
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("summary_date", "hour_of_day")
         .parquet(output_dir)
     )

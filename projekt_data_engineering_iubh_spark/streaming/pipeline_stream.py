@@ -108,13 +108,12 @@ def write_summary_batch(batch_df: DataFrame, batch_id: int, output_dir: str) -> 
     the hours emitted by earlier batches (caught by the e2e test). With the
     hour in the key, a replayed batch (failure recovery) still lands on
     exactly its own partitions → idempotent."""
-    spark = batch_df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     (
         batch_df.withColumn("summary_date", F.to_date(F.col("hour_window.start")))
         .withColumn("hour_of_day", F.hour(F.col("hour_window.start")))
         .drop("hour_window")
         .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("summary_date", "hour_of_day", "machine_id")
         .parquet(output_dir)
     )

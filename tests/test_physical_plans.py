@@ -9,7 +9,10 @@ from __future__ import annotations
 
 import pytest
 
+from projekt_data_engineering_iubh_spark.pipeline import daily_aggregator as da
+from projekt_data_engineering_iubh_spark.pipeline.config import DEFAULT_RULES
 from projekt_data_engineering_iubh_spark.plans import all_queries
+from tests.test_pipeline_golden import FIXTURE_ROWS
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -612,3 +615,40 @@ def test_routed_serve_plan_reads_stored_router_no_training(spark):
     # per routing join (the pre-r13 shape), and nothing may retrain it
     assert not any("super_cell#" in ln for ln in scans), plan
     assert "BroadcastExchange" in plan, plan
+
+
+@pytest.fixture(scope="module")
+def golden_csv(tmp_path_factory):
+    p = tmp_path_factory.mktemp("daily") / "day.csv"
+    p.write_text("\n".join(FIXTURE_ROWS) + "\n")
+    return str(p)
+
+
+def test_daily_summary_single_hourly_aggregate(spark, golden_csv):
+    """The hourly summary is ONE aggregation over the events joined to
+    their cycle: no cycle-side rollup, no FULL OUTER join between two
+    rollups, no sort-merge join. The four HashAggregate nodes are the
+    per-cycle bounds (broadcast side) and the hourly rollup, each as a
+    partial + final pair."""
+    _, summary = da.transform(da.read_events_csv(spark, golden_csv), DEFAULT_RULES)
+    plan = summary._jdf.queryExecution().executedPlan().toString()
+    assert "SortMergeJoin" not in plan, plan
+    assert "Outer" not in plan, plan
+    assert plan.count("HashAggregate(") == 4, plan
+
+
+def test_daily_run_job_budget(spark, golden_csv, tmp_path):
+    """``run`` launches at most 10 Spark jobs: the cached joined frame's
+    two window shuffles and broadcast, the two sinks and the two
+    schema-given count readbacks."""
+    sc = spark.sparkContext
+    tag = "daily_run_job_budget"
+    sc.addJobTag(tag)
+    try:
+        da.run(spark, golden_csv, str(tmp_path / "wh"), DEFAULT_RULES)
+    finally:
+        sc.removeJobTag(tag)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()  # the status store is fed async
+    jobs = len(jsc.statusTracker().getJobIdsForTag(tag))
+    assert 0 < jobs <= 10, jobs

@@ -136,7 +136,7 @@ def test_hourly_summary_golden(outputs):
     h1 = rows[("2024-05-01", 1, "M1")]
     assert h1.cycle_count == 1
     assert h1.avg_cycle_time_seconds == 0.0
-    # outer-join zero-fill: no force measurements that hour
+    # zero-fill: no force measurements that hour
     assert h1.avg_pick_force == 0.0 and h1.max_place_force == 0.0
     assert h1.as_vacuum_error_count == 1
     assert h1.total_error_count == 1

@@ -5,6 +5,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from projekt_data_engineering_iubh_spark.catalog import load_table
+from projekt_data_engineering_iubh_spark.pipeline import daily_aggregator as da
+from projekt_data_engineering_iubh_spark.pipeline.config import DEFAULT_RULES
 from projekt_data_engineering_iubh_spark.sources import jdbc, parquet as pq
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -45,6 +47,34 @@ def test_overwrite_partitions_is_idempotent(spark, tmp_path):
         just_97, path, partition_by=["order_year"], mode="overwrite_partitions"
     )
     assert pq.read(spark, path).count() == n1
+
+
+def test_overwrite_after_overwrite_partitions_is_static(spark, tmp_path):
+    # the dynamic mode is a per-write option: a later plain "overwrite"
+    # replaces the whole table, not just the partitions it writes
+    path = str(tmp_path / "t")
+    xy = spark.createDataFrame([("x", 1), ("y", 2)], "p string, v int")
+    pq.write_partitioned(xy, path, partition_by=["p"], mode="overwrite_partitions")
+    z = spark.createDataFrame([("z", 3)], "p string, v int")
+    pq.write_partitioned(z, path, partition_by=["p"], mode="overwrite")
+    assert sorted(r.p for r in pq.read(spark, path).collect()) == ["z"]
+
+
+def test_daily_run_leaves_partition_overwrite_mode(spark, tmp_path):
+    csv = tmp_path / "day.csv"
+    csv.write_text(
+        "timestamp,machine_id,event_name,parameter_name,value\n"
+        "2024-05-01T00:00:01.000Z,M1,Cycle_Start,,\n"
+        "2024-05-01T00:00:01.140Z,M1,AS_Check,AS_VacuumUnits,75.55\n"
+        "2024-05-01T00:00:01.600Z,M1,Cycle_End,,\n"
+    )
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "static")
+    try:
+        da.run(spark, str(csv), str(tmp_path / "wh"), DEFAULT_RULES)
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.unset(key)
 
 
 def test_merge_sql_shape():
