@@ -15,6 +15,9 @@ rankings tie out exactly.
 from __future__ import annotations
 
 import hashlib
+import threading
+from collections import OrderedDict
+from concurrent.futures import Future
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
@@ -2916,20 +2919,45 @@ def _arr_sql(vals: list) -> str:
 # the unresolved Column per exact expression string: pure compile
 # state, the same class as the JVM's janino codegen cache — no data, no
 # results, keyed by the full text so a different codebook is a
-# different entry. Bounded: cleared wholesale past _EXPR_CACHE_MAX
-# distinct strings (long-lived test sessions touch many roots).
-_EXPR_CACHE: dict[str, F.Column] = {}
+# different entry. Bounded: least-recently-used eviction past
+# _EXPR_CACHE_MAX distinct strings (long-lived test sessions touch many
+# roots), under a lock — emb_knn_join_recall builds plans from two
+# driver threads, and a miss parses its text once while the other
+# thread waits for that parse.
+class _LruMemo:
+    """Bounded, thread-safe memo of ``build(key)``: least-recently-used
+    eviction past ``maxsize`` entries; concurrent misses on one key call
+    ``build`` once. A failed build is not cached."""
+
+    def __init__(self, build, maxsize: int):
+        self._build, self._maxsize = build, maxsize
+        self._lock = threading.Lock()
+        self._entries: OrderedDict[str, Future] = OrderedDict()
+
+    def get(self, key: str):
+        with self._lock:
+            fut = self._entries.get(key)
+            miss = fut is None
+            if miss:
+                fut = self._entries[key] = Future()
+                if len(self._entries) > self._maxsize:
+                    self._entries.popitem(last=False)
+            else:
+                self._entries.move_to_end(key)
+        if miss:
+            try:
+                fut.set_result(self._build(key))
+            except BaseException as e:
+                with self._lock:
+                    if self._entries.get(key) is fut:
+                        del self._entries[key]
+                fut.set_exception(e)
+        return fut.result()
+
+
 _EXPR_CACHE_MAX = 256
-
-
-def _cached_expr(s: str) -> F.Column:
-    col = _EXPR_CACHE.get(s)
-    if col is None:
-        if len(_EXPR_CACHE) >= _EXPR_CACHE_MAX:
-            _EXPR_CACHE.clear()
-        col = F.expr(s)
-        _EXPR_CACHE[s] = col
-    return col
+_EXPR_CACHE = _LruMemo(F.expr, _EXPR_CACHE_MAX)
+_cached_expr = _EXPR_CACHE.get
 
 
 def _isq_sql(a: str, b: str) -> str:

@@ -24,7 +24,15 @@ event-time watermarks):
 * an append-mode window is emitted by a batch that runs AFTER the
   watermark passes its end — with foreachBatch that reliably happens when
   the next data arrives. The trailing windows of a stopped feed flush via
-  the batch job, or by nudging the source with newer data.
+  the batch job, or by nudging the source with newer data;
+* the watermark sits on the event time floored to a grid of
+  ``gcd(watermark, 1 hour)`` — the hour itself for the default delay
+  (``hourly_stream.hourly_groupby``). The reported ``eventTime.watermark``
+  is therefore grid-aligned and only moves when a drop crosses a grid
+  line. The batch that emits a window and the rows dropped as late are
+  the same as with the raw event time, but a drop that crosses no grid
+  line runs one trigger, not a data trigger plus an empty eviction
+  batch.
 """
 
 from __future__ import annotations
@@ -40,6 +48,10 @@ from projekt_data_engineering_iubh_spark.pipeline.config import (
 from projekt_data_engineering_iubh_spark.pipeline.daily_aggregator import (
     INPUT_SCHEMA,
     cleanse,
+)
+from projekt_data_engineering_iubh_spark.streaming.hourly_stream import (
+    hourly_groupby,
+    write_hour_partitions,
 )
 
 
@@ -82,41 +94,26 @@ def hourly_error_rollup(
         (F.col("event_name") == ev) & (F.col("parameter_name") == p),
         F.col("value"),
     )
-    return (
-        flagged.withWatermark("event_timestamp", watermark)
-        .groupBy(
-            F.window("event_timestamp", "1 hour").alias("hour_window"),
-            F.col("machine_id"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("is_error").alias("total_error_count"),
-            F.avg(force("Pick_Check", "PP_Force")).alias("avg_pick_force"),
-            F.avg(force("Place_Check", "PP_Force")).alias("avg_place_force"),
-        )
+    return hourly_groupby(
+        flagged, "event_timestamp", watermark, F.col("machine_id")
+    ).agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum("is_error").alias("total_error_count"),
+        F.avg(force("Pick_Check", "PP_Force")).alias("avg_pick_force"),
+        F.avg(force("Place_Check", "PP_Force")).alias("avg_place_force"),
     )
 
 
 def write_summary_batch(batch_df: DataFrame, batch_id: int, output_dir: str) -> None:
     """foreachBatch sink: idempotent per (date, hour, machine) partition
-    merge.
+    merge (``hourly_stream.write_hour_partitions``).
 
     The partition key MUST include the hour here, unlike the batch job's
     (date, machine): append-mode emits each window in whatever batch
     closes it, so consecutive batches write *different hours* of the same
     machine-day — a (date, machine)-grained dynamic overwrite would clobber
-    the hours emitted by earlier batches (caught by the e2e test). With the
-    hour in the key, a replayed batch (failure recovery) still lands on
-    exactly its own partitions → idempotent."""
-    (
-        batch_df.withColumn("summary_date", F.to_date(F.col("hour_window.start")))
-        .withColumn("hour_of_day", F.hour(F.col("hour_window.start")))
-        .drop("hour_window")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("summary_date", "hour_of_day", "machine_id")
-        .parquet(output_dir)
-    )
+    the hours emitted by earlier batches (caught by the e2e test)."""
+    write_hour_partitions(batch_df, output_dir, "machine_id", keep_window=False)
 
 
 def start_pipeline(

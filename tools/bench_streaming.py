@@ -39,23 +39,28 @@ from projekt_data_engineering_iubh_spark.session import get_spark  # noqa: E402
 
 def _progress_stats(q) -> tuple[int, float, list[dict]]:
     """(total rows, total trigger-exec seconds, per-trigger breakdown)
-    over the query's recentProgress, data-carrying triggers only."""
+    over the query's recentProgress. Rows and seconds count the
+    data-carrying triggers; the breakdown lists every trigger, including
+    the empty batches a moving watermark schedules to evict state, so
+    ``len(breakdown) / drops`` is the triggers a drop costs."""
     rows = 0
     secs = 0.0
     trig = []
     for p in q.recentProgress:
-        n = p.get("numInputRows") or 0
-        if not n:
+        dur = p.get("durationMs") or {}
+        if "addBatch" not in dur:  # an idle-poll event, no batch ran
             continue
-        ms = (p.get("durationMs") or {}).get("triggerExecution") or 0
-        rows += n
-        secs += ms / 1000.0
+        n = p.get("numInputRows") or 0
+        ms = dur.get("triggerExecution") or 0
+        if n:
+            rows += n
+            secs += ms / 1000.0
         trig.append(
             {
                 "batchId": p.get("batchId"),
                 "rows": n,
                 "trigger_ms": ms,
-                "addBatch_ms": (p.get("durationMs") or {}).get("addBatch"),
+                "addBatch_ms": dur["addBatch"],
             }
         )
     return rows, secs, trig
@@ -98,6 +103,7 @@ def bench_pipeline(spark, work: Path, days: int, machines: int) -> dict:
         "trigger_exec_sec": round(secs, 2),
         "sustained_rows_per_sec": round(rows / secs) if secs else None,
         "wall_sec": round(time.perf_counter() - wall0, 2),
+        "triggers_per_drop": round(len(trig) / days, 2),
         "triggers": trig,
     }
 
@@ -178,6 +184,7 @@ def bench_neardup(spark, work: Path, sf_dir: str, batches: int) -> dict:
         "trigger_exec_sec": round(secs, 2),
         "sustained_rows_per_sec": round(rows / secs) if secs else None,
         "wall_sec": round(time.perf_counter() - wall0, 2),
+        "triggers_per_drop": round(len(trig) / batches, 2),
         "triggers": trig,
     }
 
@@ -255,6 +262,7 @@ def bench_vector(spark, work: Path, sf_dir: str, batches: int) -> dict:
         "trigger_exec_sec": round(secs, 2),
         "sustained_rows_per_sec": round(rows / secs) if secs else None,
         "wall_sec": round(time.perf_counter() - wall0, 2),
+        "triggers_per_drop": round(len(trig) / batches, 2),
         "triggers": trig,
     }
 
@@ -344,6 +352,7 @@ def bench_codes(spark, work: Path, sf_dir: str, batches: int) -> dict:
         "trigger_exec_sec": round(secs, 2),
         "sustained_rows_per_sec": round(delivered / secs) if secs else None,
         "wall_sec": round(time.perf_counter() - wall0, 2),
+        "triggers_per_drop": round(len(trig) / batches, 2),
         "triggers": trig,
     }
 
@@ -424,6 +433,7 @@ def bench_deletes(spark, work: Path, sf_dir: str, batches: int) -> dict:
         "trigger_exec_sec": round(secs, 2),
         "sustained_keys_per_sec": round(delivered / secs) if secs else None,
         "wall_sec": round(time.perf_counter() - wall0, 2),
+        "triggers_per_drop": round(len(trig) / batches, 2),
         "triggers": trig,
     }
 
