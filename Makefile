@@ -1,11 +1,39 @@
 # Convenience targets. The test suite itself is plain pytest; these wrap
 # the environment-gated flows that need services or non-default env.
 
-.PHONY: test bench verify postgres-up postgres-live-test postgres-down \
-        postgres-local-up postgres-local-test postgres-local-down
+.PHONY: test test-full perfbench bench verify postgres-up \
+        postgres-live-test postgres-down postgres-local-up \
+        postgres-local-test postgres-local-down
+
+# The tier-1 run (ROADMAP.md): the default suite skips the heavy
+# lifecycle/stream files (tests/conftest.py).
+TEST_ENV = SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" \
+           SPARK_LOCAL_DIRS=/tmp/spark-local
+PYTEST = python -m pytest tests/ -q --continue-on-collection-errors \
+         -p no:cacheprovider
+FULL_TESTS_RECORD ?= FULL_TESTS.json
 
 test:
-	python -m pytest tests/ -q
+	$(TEST_ENV) timeout -k 10 2670 $(PYTEST)
+
+# The whole suite, heavy files included (~30 min on 4 cores). Writes the
+# run's counts, failures and wall time to $(FULL_TESTS_RECORD), the
+# per-round record.
+test-full:
+	$(TEST_ENV) SPARK_GRAFT_FULL_TESTS=1 \
+	SPARK_GRAFT_FULL_TESTS_RECORD=$(FULL_TESTS_RECORD) \
+	timeout -k 10 5400 $(PYTEST)
+
+CHECK_CORRECT = 'import json, sys; r = json.load(sys.stdin); print(r); sys.exit(not r["correct"])'
+
+# The benchmark's own tests, then one smoke-size run of each workload;
+# a run fails the target unless its result line says "correct".
+perfbench:
+	python3 -m pytest perfbench/test_perfbench.py -q -p no:cacheprovider
+	for w in machine llm_curation; do \
+	  python3 perfbench/run.py --workload $$w --seed 1 --seconds 1 --tiny \
+	  | tail -n 1 | python3 -c $(CHECK_CORRECT) || exit 1; \
+	done
 
 bench:
 	python bench.py

@@ -77,15 +77,31 @@ def quantize_normalized(emb: F.Column) -> F.Column:
     vector would silently drop out of the index on one engine and not
     the other. ``greatest(norm, 1e-30)`` pins both engines to the same
     finite divisor; since every element of a zero-norm vector is zero,
-    the quantized result is the exact all-zeros code on both sides."""
+    the quantized result is the exact all-zeros code on both sides.
+
+    The norm is bound ONCE per row, outside the element lambda: an outer
+    one-element ``transform(array(norm), n -> transform(emb, x -> …))``
+    then ``element_at(…, 1)``. Catalyst does not hoist loop-invariant
+    expressions out of a lambda, so a norm Column referenced inside the
+    element lambda re-runs its dim-term fold for EVERY element — O(dim²)
+    interpreted work per vector instead of O(dim). The double operations
+    and their order are unchanged, so the codes are bit-identical to the
+    inline formulation and to the DuckDB rendering. NULL stays NULL (the
+    inner transform of a NULL array), empty stays empty."""
     from projekt_data_engineering_iubh_spark.functions import vectors as vx
 
     n = F.greatest(vx.norm(emb), F.lit(1e-30))
-    return F.transform(
-        emb,
-        lambda x: F.floor(
-            x.cast("double") / n * F.lit(float(FIXED_SCALE))
-        ).cast("long"),
+    return F.element_at(
+        F.transform(
+            F.array(n),
+            lambda nv: F.transform(
+                emb,
+                lambda x: F.floor(
+                    x.cast("double") / nv * F.lit(float(FIXED_SCALE))
+                ).cast("long"),
+            ),
+        ),
+        1,
     )
 
 

@@ -17,6 +17,7 @@ from __future__ import annotations
 import hashlib
 import threading
 from collections import OrderedDict
+from collections.abc import Hashable
 from concurrent.futures import Future
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
@@ -2766,10 +2767,11 @@ def _train_books(
 
     ``seeds`` (r14): the per-m seed lists ``[[(cell, cq), ...], ...]``
     when the caller already derived them driver-side (_ivfpq_train
-    computes the pq_codes seed residuals from its one widened seed
+    derives them with :func:`_book_seeds` from its one widened seed
     collect — pure python, bit-identical arithmetic, one fewer Spark
-    job); None keeps the self-collecting path (pinned equivalent by
-    tests/test_pq_books_stacked.py)."""
+    job); None keeps the self-collecting path. Both give the same books
+    — pinned, including an exact tie in the coarse assignment, by
+    tests/test_pq_books_stacked.py::test_derived_seeds_equal_self_collected*."""
     slices = ",".join(
         f"slice(remb, {m * subdim + 1}, {subdim})" for m in range(pq_m)
     )
@@ -2853,17 +2855,27 @@ def _ivfpq_train(
 
     ``normalized=True`` unit-normalizes every vector BEFORE fixed-point
     quantization (km.quantize_normalized) so L2/ADC order == cosine
-    order — the cosine-faithful index variant (r9)."""
+    order — the cosine-faithful index variant (r9).
+
+    The corpus is scanned, spread and quantized ONCE: ``qv`` is a lazy
+    localCheckpoint that the widened seed collect below fills (it
+    computes every partition; Spark's LocalRDDCheckpointData would run
+    any it missed). The coarse Lloyd rounds, the residual checkpoint and
+    the caller's query/refine sides all read that checkpoint instead of
+    re-scanning, re-spreading and re-quantizing ``embeddings`` per job —
+    no new job, the seed collect was already there."""
     e = spread(load_table(spark, sf_dir, "embeddings"))
     q = km.quantize_normalized if normalized else km.quantize
     qv = e.select("vec_id", q(F.col("embedding")).alias("qemb"))
-    # ONE widened seed collect (r14): the coarse trainer needs the
-    # vec_id < _KM_K rows, the M sub-codebooks need the vec_id <
-    # pq_codes residuals — both constant-size. Collect the union once;
-    # the book seeds' coarse assignment + residual are re-derived in
-    # pure python with the same integer arithmetic/tie-break as
-    # _ivfpq_residuals (pinned by tests/test_pq_books_stacked.py), so
-    # the stacked trainer's own seed job disappears.
+    qv = qv.localCheckpoint(eager=False)
+    # ONE widened seed collect (r14), which also fills qv's checkpoint:
+    # the coarse trainer needs the vec_id < _KM_K rows, the M
+    # sub-codebooks need the vec_id < pq_codes residuals — both
+    # constant-size. Collect the union once; the book seeds' coarse
+    # assignment + residual are re-derived in pure python with the same
+    # integer arithmetic/tie-break as _ivfpq_residuals (_book_seeds,
+    # pinned by tests/test_pq_books_stacked.py), so the stacked
+    # trainer's own seed job disappears.
     seed_rows = (
         qv.filter(F.col("vec_id") < max(_KM_K, pq_codes))
         .select("vec_id", "qemb")
@@ -2884,6 +2896,23 @@ def _ivfpq_train(
     )
 
     subdim = EMB_DIM // pq_m
+    book_seeds = _book_seeds(seed_rows, coarse_cqs, pq_m, pq_codes, subdim)
+    book_cells, books = _train_books(
+        res, pq_m, pq_codes, _PQT_ITERS, subdim, seeds=book_seeds
+    )
+
+    codes = _ivfpq_encode_residuals(res, books, subdim)
+    asg = res.select("vec_id", "cell")
+    return qv, asg, coarse_cells, coarse_cqs, book_cells, books, codes
+
+
+def _book_seeds(
+    seed_rows: list, coarse_cqs: list, pq_m: int, pq_codes: int, subdim: int
+) -> list[list]:
+    """_train_books' per-m seed lists from collected (vec_id, qemb) rows:
+    the vec_id < pq_codes rows' residual slices against their nearest
+    coarse centroid, with _ivfpq_residuals' integer distance and
+    first-index (lowest cell) tie-break, in pure python."""
     book_seeds: list[list] = [[] for _ in range(pq_m)]
     for r in seed_rows:
         if r.vec_id >= pq_codes:
@@ -2897,13 +2926,7 @@ def _ivfpq_train(
             book_seeds[m].append(
                 (int(r.vec_id), remb[m * subdim:(m + 1) * subdim])
             )
-    book_cells, books = _train_books(
-        res, pq_m, pq_codes, _PQT_ITERS, subdim, seeds=book_seeds
-    )
-
-    codes = _ivfpq_encode_residuals(res, books, subdim)
-    asg = res.select("vec_id", "cell")
-    return qv, asg, coarse_cells, coarse_cqs, book_cells, books, codes
+    return book_seeds
 
 
 def _arr_sql(vals: list) -> str:
@@ -2927,14 +2950,21 @@ def _arr_sql(vals: list) -> str:
 class _LruMemo:
     """Bounded, thread-safe memo of ``build(key)``: least-recently-used
     eviction past ``maxsize`` entries; concurrent misses on one key call
-    ``build`` once. A failed build is not cached."""
+    ``build`` once. A failed build is not cached. ``get`` may pass its
+    own ``build`` when the value depends on more than the key (the
+    session that loads it)."""
 
     def __init__(self, build, maxsize: int):
         self._build, self._maxsize = build, maxsize
         self._lock = threading.Lock()
-        self._entries: OrderedDict[str, Future] = OrderedDict()
+        self._entries: OrderedDict[Hashable, Future] = OrderedDict()
 
-    def get(self, key: str):
+    def clear(self) -> None:
+        with self._lock:
+            self._entries.clear()
+
+    def get(self, key: Hashable, build=None):
+        build = build or self._build
         with self._lock:
             fut = self._entries.get(key)
             miss = fut is None
@@ -2946,7 +2976,7 @@ class _LruMemo:
                 self._entries.move_to_end(key)
         if miss:
             try:
-                fut.set_result(self._build(key))
+                fut.set_result(build(key))
             except BaseException as e:
                 with self._lock:
                     if self._entries.get(key) is fut:
@@ -3756,9 +3786,10 @@ SELECT query_id, neighbor_id, cell, adc_dist, rn FROM ({_IVFPQ_SQL})
 # root path already digests (corpus path, mtime, constants), so it is
 # the complete staleness key. Bounded (r7 dashboard-cache lesson): a
 # long-lived process serving many corpus versions must not grow this
-# without limit — oldest entry evicted past the cap.
-_IVFPQ_CLIENT_CACHE: dict[tuple, tuple] = {}
+# without limit — the least-recently-used root is evicted past the cap,
+# and concurrent first requests for one root load it once (_LruMemo).
 _CLIENT_CACHE_CAP = 8
+_IVFPQ_CLIENT_CACHE = _LruMemo(None, _CLIENT_CACHE_CAP)
 
 
 def _ivfpq_client_state(
@@ -3769,9 +3800,23 @@ def _ivfpq_client_state(
     pq_m: int = _PQ_M,
     pq_codes: int = _PQ_CODES,
 ) -> tuple[list, list, list, list]:
-    key = (root,)  # root already encodes kind AND geometry constants
-    if key in _IVFPQ_CLIENT_CACHE:
-        return _IVFPQ_CLIENT_CACHE[key]
+    # root already encodes kind AND geometry constants
+    return _IVFPQ_CLIENT_CACHE.get(
+        (root,),
+        lambda _key: _load_client_state(
+            spark, root, sf_dir, normalized, pq_m, pq_codes
+        ),
+    )
+
+
+def _load_client_state(
+    spark: SparkSession,
+    root: str,
+    sf_dir: str,
+    normalized: bool,
+    pq_m: int,
+    pq_codes: int,
+) -> tuple[list, list, list, list]:
     coarse = sorted(
         ann_index.read_artifact(spark, root, "coarse").collect(),
         key=lambda r: r.cell,
@@ -3794,15 +3839,7 @@ def _ivfpq_client_state(
         .select("vec_id", q(F.col("embedding")).alias("qemb"))
         .collect()
     )
-    state = (coarse_cells, coarse_cqs, books, qrows)
-    _client_cache_put(key, state)
-    return state
-
-
-def _client_cache_put(key: tuple, state: tuple) -> None:
-    while len(_IVFPQ_CLIENT_CACHE) >= _CLIENT_CACHE_CAP:
-        _IVFPQ_CLIENT_CACHE.pop(next(iter(_IVFPQ_CLIENT_CACHE)))
-    _IVFPQ_CLIENT_CACHE[key] = state
+    return coarse_cells, coarse_cqs, books, qrows
 
 
 @register("emb_ivfpq_serve_lean", oracle=_IVFPQ_LEAN_SQL, driver=False)

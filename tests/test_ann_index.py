@@ -150,11 +150,12 @@ def test_vacuum_stale_removes_only_old_roots(tmp_path, monkeypatch):
 def test_client_cache_is_bounded():
     vq._IVFPQ_CLIENT_CACHE.clear()
     for i in range(vq._CLIENT_CACHE_CAP * 2):
-        vq._client_cache_put((f"root{i}",), (i,))
-    assert len(vq._IVFPQ_CLIENT_CACHE) == vq._CLIENT_CACHE_CAP
+        vq._IVFPQ_CLIENT_CACHE.get((f"root{i}",), lambda _k, i=i: (i,))
+    entries = vq._IVFPQ_CLIENT_CACHE._entries
+    assert len(entries) == vq._CLIENT_CACHE_CAP
     # newest entries survive, oldest evicted
-    assert (f"root{vq._CLIENT_CACHE_CAP * 2 - 1}",) in vq._IVFPQ_CLIENT_CACHE
-    assert ("root0",) not in vq._IVFPQ_CLIENT_CACHE
+    assert (f"root{vq._CLIENT_CACHE_CAP * 2 - 1}",) in entries
+    assert ("root0",) not in entries
     vq._IVFPQ_CLIENT_CACHE.clear()
 
 

@@ -1,8 +1,10 @@
 """The parsed-expression memo behind the IVF-PQ codebook projections:
-bounded LRU eviction and one parse per miss under concurrent callers."""
+bounded LRU eviction and one parse per miss under concurrent callers,
+and the same memo behind the IVF-PQ serve-side client state."""
 
 from __future__ import annotations
 
+import sys
 import threading
 import time
 from collections import Counter
@@ -82,3 +84,43 @@ def test_failed_build_is_not_cached():
 def test_expr_cache_is_the_bounded_memo():
     assert isinstance(_EXPR_CACHE, _LruMemo)
     assert _EXPR_CACHE._maxsize == _EXPR_CACHE_MAX
+
+
+def test_client_state_loads_once_per_root(monkeypatch):
+    """The serve-side client-state cache: 16 concurrent first requests
+    for one root load it once, and a hot root survives eviction."""
+    from projekt_data_engineering_iubh_spark.plans import vector_queries as vq
+
+    build, calls = _counting(delay_s=0.05)
+    monkeypatch.setattr(
+        vq, "_load_client_state", lambda _spark, root, *_a: build(root)
+    )
+    vq._IVFPQ_CLIENT_CACHE.clear()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        n = 16
+        start = threading.Barrier(n)
+        results: list = [None] * n
+
+        def worker(i: int) -> None:
+            start.wait()
+            results[i] = vq._ivfpq_client_state(None, "hot", "sf")
+
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+            assert not t.is_alive()
+        assert results == ["HOT"] * n
+        assert calls["hot"] == 1
+
+        for i in range(vq._CLIENT_CACHE_CAP * 2):
+            vq._ivfpq_client_state(None, f"cold{i}", "sf")
+            vq._ivfpq_client_state(None, "hot", "sf")
+        assert calls["hot"] == 1
+        assert len(vq._IVFPQ_CLIENT_CACHE._entries) == vq._CLIENT_CACHE_CAP
+    finally:
+        sys.setswitchinterval(interval)
+        vq._IVFPQ_CLIENT_CACHE.clear()

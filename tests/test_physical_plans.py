@@ -652,3 +652,24 @@ def test_daily_run_job_budget(spark, golden_csv, tmp_path):
     jsc.listenerBus().waitUntilEmpty()  # the status store is fed async
     jobs = len(jsc.statusTracker().getJobIdsForTag(tag))
     assert 0 < jobs <= 10, jobs
+
+
+def test_adc_knn_join_job_budget(spark):
+    """emb_knn_join_adc end to end — coarse and book training, the
+    residual checkpoint, the candidate join, the collect — launches at
+    most 20 Spark jobs at sf0.001: the corpus is scanned, spread and
+    quantized once into a checkpoint that the seed collect fills, and
+    every later job reads it. Re-deriving the quantized corpus in each
+    job took 26."""
+    sc = spark.sparkContext
+    tag = "adc_knn_join_job_budget"
+    fn = all_queries()["emb_knn_join_adc"].fn
+    sc.addJobTag(tag)
+    try:
+        assert fn(spark, SF_DIR).collect()
+    finally:
+        sc.removeJobTag(tag)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()  # the status store is fed async
+    jobs = len(jsc.statusTracker().getJobIdsForTag(tag))
+    assert 0 < jobs <= 20, jobs

@@ -7,6 +7,8 @@ hash mismatch on every ADC entry."""
 
 from __future__ import annotations
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -86,3 +88,67 @@ def test_literal_trainer_equals_lazy_chain(spark):
             for r in km.kmeans_train(qv, k, iters, 64).collect()
         )
         assert a == b, f"k={k} iters={iters}"
+
+
+def _derived_vs_self_collected(res, seed_rows, coarse_cqs, pq_m, pq_codes,
+                               iters, subdim):
+    seeds = vq._book_seeds(seed_rows, coarse_cqs, pq_m, pq_codes, subdim)
+    derived = vq._train_books(
+        res, pq_m, pq_codes, iters, subdim, seeds=seeds
+    )
+    collected = vq._train_books(res, pq_m, pq_codes, iters, subdim)
+    assert derived == collected, f"iters={iters}"
+
+
+def test_derived_seeds_equal_self_collected(spark):
+    """_ivfpq_train's driver-side book seeds (the widened seed collect +
+    vq._book_seeds) train the same books as _train_books' own seed
+    collect over the Spark-computed residuals."""
+    e = spread(load_table(spark, SF, "embeddings"))
+    qv = e.select(
+        "vec_id", km.quantize_normalized(F.col("embedding")).alias("qemb")
+    ).localCheckpoint(eager=True)
+    seed_rows = sorted(
+        qv.filter(F.col("vec_id") < max(vq._KM_K, vq._PQ_CODES)).collect(),
+        key=lambda r: r.vec_id,
+    )
+    cents = km._train_literal(
+        qv,
+        [(int(r.vec_id), list(r.qemb)) for r in seed_rows
+         if r.vec_id < vq._KM_K],
+        vq._KM_ITERS,
+        vq.EMB_DIM,
+    )
+    cells, cqs = [c for c, _ in cents], [list(q) for _, q in cents]
+    res = vq._ivfpq_residuals(qv, cells, cqs).localCheckpoint(eager=True)
+    for iters in (0, vq._PQT_ITERS):
+        _derived_vs_self_collected(
+            res, seed_rows, cqs, vq._PQ_M, vq._PQ_CODES, iters,
+            vq.EMB_DIM // vq._PQ_M,
+        )
+
+
+def test_derived_seeds_equal_self_collected_on_coarse_tie(spark):
+    """A seed vector exactly equidistant from two coarse centroids: both
+    paths must break the tie to the lower cell, or the seed residual
+    (hence every book) differs."""
+    dim, pq_m, pq_codes = 8, 2, 4
+    cells, cqs = [3, 7], [[0] * dim, [2] * dim]
+    rng = random.Random(7)
+    vecs = [(0, [1] * dim), (1, [0, 2] * (dim // 2)), (2, [2] * dim)]
+    vecs += [
+        (i, [rng.randrange(-3, 6) for _ in range(dim)]) for i in range(3, 40)
+    ]
+    vecs[5] = (5, [1] * dim)  # a tied non-seed row as well
+    qv = spark.createDataFrame(vecs, "vec_id long, qemb array<bigint>")
+    res = vq._ivfpq_residuals(qv, cells, cqs).localCheckpoint(eager=True)
+    tied = {r.vec_id: r.cell for r in res.filter("vec_id IN (0, 1, 5)").collect()}
+    assert tied == {0: 3, 1: 3, 5: 3}
+    seed_rows = sorted(
+        qv.filter(F.col("vec_id") < pq_codes).collect(),
+        key=lambda r: r.vec_id,
+    )
+    for iters in (0, 2):
+        _derived_vs_self_collected(
+            res, seed_rows, cqs, pq_m, pq_codes, iters, dim // pq_m
+        )
