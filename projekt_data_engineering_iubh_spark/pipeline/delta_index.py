@@ -13,7 +13,9 @@ band rows, ``(vec_id,)`` for bucket rows).
 
 The snapshot-generation ANN roots (ivfpq/routed) have their own shared
 wiring (streaming/ann_ingest_stream._make_append_processor + the
-vq generation primitives); the four-store lifecycle matrix test
+pipeline/ann_index generation lifecycle, whose hardlink publish,
+tombstone append-or-fold step and CAS-retry loop the delete and
+resurrect commits below reuse); the four-store lifecycle matrix test
 (tests/test_stream_store_matrix.py) pins all four behind one contract —
 since r13 including the DELETE leg: delete_index_keys /
 resurrect_index_keys below give both band tiers the same O(|keys|)
@@ -26,11 +28,11 @@ itself).
 from __future__ import annotations
 
 import os
-import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from projekt_data_engineering_iubh_spark.pipeline import ann_index
 from projekt_data_engineering_iubh_spark.pipeline import band_delta as _delta
 
 # Tombstone artifact (r13, VERDICT r12 #2): an underscore-prefixed
@@ -41,11 +43,6 @@ from projekt_data_engineering_iubh_spark.pipeline import band_delta as _delta
 # tier's DOC-level key (doc_id for band rows, vec_id for bucket rows) —
 # deleting a document kills ALL its index rows via one anti-join.
 TOMBSTONES_SUBDIR = "_tombstones"
-# each delete generation appends one key part-file; past this many the
-# whole (tiny) key set is rewritten as ONE file — same bound as the ANN
-# tiers' _TOMBSTONE_FOLD_FILES
-_TOMBSTONE_FOLD_FILES = 8
-_DELETE_RETRIES = 8
 
 
 def rebuild_index(
@@ -112,24 +109,6 @@ def read_tombstones(spark: SparkSession, snapshot_dir: str) -> DataFrame | None:
     return spark.read.parquet(path)
 
 
-def _link_snapshot_files(src_dir: str, dst_dir: str) -> None:
-    """Publish src_dir's parquet part-files into dst_dir WITHOUT reading
-    them: hardlink (O(#files) metadata ops regardless of bytes) with a
-    copy fallback for cross-device stores — what makes a tombstone
-    commit O(|keys|) instead of O(index) (the ANN tiers'
-    _link_or_copy_parquet shape, plans/vector_queries.py:3875)."""
-    os.makedirs(dst_dir, exist_ok=True)
-    for name in os.listdir(src_dir):
-        src = os.path.join(src_dir, name)
-        if name.startswith(("_", ".")) or os.path.isdir(src):
-            continue  # _SUCCESS / the tombstones subdir itself
-        dst = os.path.join(dst_dir, name)
-        try:
-            os.link(src, dst)
-        except OSError:
-            shutil.copy2(src, dst)
-
-
 def delete_index_keys(
     spark: SparkSession, index_path: str, keys: DataFrame
 ) -> bool:
@@ -138,13 +117,14 @@ def delete_index_keys(
     before this, a GDPR-erased document's band/bucket rows stayed live
     until a full rebuild, so a deleted doc could still suppress future
     near-duplicates of itself). Same contract as the ANN tiers'
-    _delete_generation: ``keys`` is a one-column frame of doc-level ids
-    (doc_id / vec_id — the column NAME travels into the tombstone
-    artifact and is what reads anti-join on); only ids currently live in
-    the view become new tombstones, so unknown or already-dead keys
-    commit NOTHING (idempotent under foreachBatch replay); the commit is
-    hardlinks of every snapshot data file plus an O(|keys|) key-set
-    write, CAS-retried against concurrent folds/deletes. Deletes take
+    ann_index.delete_generation: ``keys`` is a one-column frame of
+    doc-level ids (doc_id / vec_id — the column NAME travels into the
+    tombstone artifact and is what reads anti-join on); only ids
+    currently live in the view become new tombstones, so unknown or
+    already-dead keys commit NOTHING (idempotent under foreachBatch
+    replay); the commit is hardlinks of every snapshot data file plus an
+    O(|keys|) key-set write, CAS-retried against concurrent
+    folds/deletes. Deletes take
     effect at commit for new readers; in-flight readers keep their
     snapshot. fold_index applies tombstones physically and retires them;
     resurrect_index_keys reverses a delete when the document is
@@ -159,8 +139,8 @@ def delete_index_keys(
     key = keys.columns[0]
     dedup = keys.dropDuplicates([key])
     store.init_store(index_path)
-    for _ in range(_DELETE_RETRIES):
-        cur = store.resolve(index_path)
+
+    def derive(cur: str):
         base = spark.read.parquet(cur)
         delta = _delta.read_delta(spark, index_path)
         view_keys = base.select(key)
@@ -172,37 +152,20 @@ def delete_index_keys(
             new_dead = new_dead.join(tomb, key, "left_anti")
         new_dead = new_dead.localCheckpoint(eager=True)
         if new_dead.isEmpty():
-            return False  # nothing live to delete: idempotent no-op
+            return None  # nothing live to delete: idempotent no-op
 
         def build(data_dir: str) -> None:
-            _link_snapshot_files(cur, data_dir)
-            tomb_dir = os.path.join(data_dir, TOMBSTONES_SUBDIR)
-            if tomb is not None:
-                src_tomb = os.path.join(cur, TOMBSTONES_SUBDIR)
-                n_parts = sum(
-                    1
-                    for f in os.listdir(src_tomb)
-                    if not f.startswith(("_", "."))
-                )
-                if n_parts >= _TOMBSTONE_FOLD_FILES:
-                    # fold the whole (tiny) key set into one file —
-                    # bounds small-file growth under frequent takedowns
-                    tomb.unionByName(new_dead).coalesce(1).write.parquet(
-                        tomb_dir
-                    )
-                    return
-                _link_snapshot_files(src_tomb, tomb_dir)
-            new_dead.coalesce(1).write.mode("append").parquet(tomb_dir)
+            ann_index.link_or_copy_parquet(cur, data_dir)
+            ann_index.append_tombstones(
+                tomb,
+                new_dead,
+                os.path.join(cur, TOMBSTONES_SUBDIR),
+                os.path.join(data_dir, TOMBSTONES_SUBDIR),
+            )
 
-        try:
-            store.commit_snapshot(index_path, build)
-            return True
-        except store.CommitConflict:
-            continue
-    raise store.CommitConflict(
-        f"delete on {index_path} lost the snapshot CAS "
-        f"{_DELETE_RETRIES} times"
-    )
+        return build
+
+    return ann_index.commit_with_retries(index_path, "delete", derive)
 
 
 def resurrect_index_keys(
@@ -217,13 +180,11 @@ def resurrect_index_keys(
     of ``ids`` are tombstoned, commits one snapshot with the key set
     minus them (hardlinked data files — O(|keys|), no index rewrite).
     Returns True iff a commit happened."""
-    from projekt_data_engineering_iubh_spark.pipeline import store
 
-    for _ in range(_DELETE_RETRIES):
-        cur = store.resolve(index_path)
+    def derive(cur: str):
         tomb = read_tombstones(spark, cur)
         if tomb is None:
-            return False
+            return None
         key = tomb.columns[0]
         back = ids.select(key).dropDuplicates([key])
         remaining = tomb.join(back, key, "left_anti").localCheckpoint(
@@ -231,25 +192,19 @@ def resurrect_index_keys(
         )
         # nothing to resurrect: every tombstone survives
         if remaining.count() == tomb.count():
-            return False
+            return None
         keep = not remaining.isEmpty()
 
         def build(data_dir: str) -> None:
-            _link_snapshot_files(cur, data_dir)
+            ann_index.link_or_copy_parquet(cur, data_dir)
             if keep:
                 remaining.coalesce(1).write.parquet(
                     os.path.join(data_dir, TOMBSTONES_SUBDIR)
                 )
 
-        try:
-            store.commit_snapshot(index_path, build)
-            return True
-        except store.CommitConflict:
-            continue
-    raise store.CommitConflict(
-        f"resurrect on {index_path} lost the snapshot CAS "
-        f"{_DELETE_RETRIES} times"
-    )
+        return build
+
+    return ann_index.commit_with_retries(index_path, "resurrect", derive)
 
 
 def fold_index(

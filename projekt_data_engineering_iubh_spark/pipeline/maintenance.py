@@ -208,19 +208,20 @@ import os
 class AnnMaintenancePolicy:
     """When to fold an ANN index root's accumulated generations.
 
-    The r10 curve (tools/delete_serve_curve.py) showed serve wall FLAT
+    The r10 delete/serve curve (BASELINE.md) showed serve wall FLAT
     across 0→50% dead at test scale — serve LATENCY does not tell you
     when to compact; the recorded rule is to trigger on footprint:
 
     * ``max_tombstone_bytes`` — the tombstone key set is the serve
       anti-join's broadcast build side; its bytes (not its age) are
       what grow the per-read work and the per-generation link set.
-      Crossing it runs ``ivfpq_compact`` (folds tombstones away — the
-      one real codes rewrite in the lifecycle).
     * ``max_codes_files`` — O(delta) commits append one codes part-file
       per trigger; scan planning and footer reads degrade with file
-      count long before data size matters. Crossing it runs
-      ``ivfpq_compact(force=True)`` (small-file fold).
+      count long before data size matters.
+
+    Crossing either runs ``ann_index.compact`` — the one real codes
+    rewrite in the lifecycle, which folds tombstones away and collapses
+    small files in one commit.
 
     Both checks are O(#files) filesystem metadata ops — cheap enough to
     run on EVERY streaming trigger, which is where
@@ -271,31 +272,23 @@ def maintain_ann_root(
     on the happy path) and run the matching compaction when a threshold
     is crossed. Tombstone bytes win over file count when both fire
     (the tombstone fold also rewrites codes, so it resets both).
-    Handles BOTH root kinds by inspecting the artifacts present: IVF-PQ
-    roots (books + meta) compact via ivfpq_compact; routed roots
-    (cent_super, no books — r11 #157-#159) via ivfr_compact. Since r12
-    (ivfr_delete_generation) both kinds carry a tombstone tier, so BOTH
-    triggers apply to BOTH kinds — each compactor folds its tombstones
-    away.
+    Kind-free: ann_index.compact folds IVF-PQ and routed roots alike,
+    and both kinds carry a tombstone tier, so both triggers apply to
+    both. A crossed threshold leaves something to fold — a tombstone
+    footprint, or more than one codes file for any max_codes_files > 1
+    — so the compactor's own nothing-to-fold rule only fires when a
+    concurrent winner folded first.
 
     Compaction publishes a NEW snapshot version through the store CAS —
     in-flight readers keep their version, a concurrent trigger that
     lost the race simply re-resolves (same contract as every other
     generation commit). Returns what was measured and whether/why a
     compaction committed, so streaming callers can log the cadence."""
-    from projekt_data_engineering_iubh_spark.plans import (
-        vector_queries as _vq,
-    )
+    from projekt_data_engineering_iubh_spark.pipeline import ann_index
 
     cur = snapstore.resolve(root)
     codes_files, _ = _artifact_footprint(cur, "codes")
     _, tomb_bytes = _artifact_footprint(cur, "tombstones")
-    # root kind from the artifacts present, not an argument: an IVF-PQ
-    # root carries PQ books; a routed root carries the router map. The
-    # policy fires the matching compactor — both tiers have a tombstone
-    # tier now (r12: ivfr_delete_generation), and both compactors fold
-    # tombstones away, so both triggers apply to both kinds.
-    routed = _vq._root_is_routed(cur)
     crossed = None
     if tomb_bytes >= policy.max_tombstone_bytes:
         crossed = "tombstone_bytes"
@@ -304,12 +297,7 @@ def maintain_ann_root(
     compacted = None
     if crossed is not None:
         try:
-            if routed:
-                fold = _vq.ivfr_compact(spark, root)
-            else:
-                fold = _vq.ivfpq_compact(
-                    spark, root, force=(crossed == "codes_files")
-                )
+            fold = ann_index.compact(spark, root)
             # a threshold we measured was crossed, but the compactor's
             # own re-resolve found nothing left to fold: a concurrent
             # winner folded between our footprint census and the

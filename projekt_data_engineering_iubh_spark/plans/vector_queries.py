@@ -3501,9 +3501,11 @@ def emb_knn_join_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 import os  # noqa: E402
-import shutil  # noqa: E402
 
-from projekt_data_engineering_iubh_spark.pipeline import ann_index  # noqa: E402
+from projekt_data_engineering_iubh_spark.pipeline import (  # noqa: E402
+    ann_index,
+    store,
+)
 
 _IVFT_CONSTS = (_KM_K, _KM_ITERS, EMB_DIM, km.FIXED_SCALE)
 _IVFPQ_CONSTS = _IVFT_CONSTS + (_PQ_M, _PQ_CODES, _PQT_ITERS, _IVFPQ_NPROBE)
@@ -3627,19 +3629,10 @@ def _ensure_ivfpq_index(
         _qv, asg, cells, cqs, bcells, books, codes = _ivfpq_train(
             spark, sf_dir, normalized, pq_m, pq_codes
         )
-        spark.createDataFrame(
-            list(zip(cells, map(list, cqs))), "cell int, cq array<bigint>"
-        ).coalesce(1).write.parquet(os.path.join(data_dir, "coarse"))
-        spark.createDataFrame(
-            [
-                (m, code, bcells[m][code], list(books[m][code]))
-                for m in range(pq_m)
-                for code in range(len(books[m]))
-            ],
-            "m int, code int, cell int, cq array<bigint>",
-        ).coalesce(1).write.parquet(os.path.join(data_dir, "books"))
-        codes.drop("qemb").write.parquet(os.path.join(data_dir, "codes"))
-        write_index_meta(spark, data_dir, pq_m, pq_codes, normalized)
+        _write_ivfpq_artifacts(
+            spark, data_dir, cells, cqs, bcells, books, codes,
+            pq_m, pq_codes, normalized,
+        )
 
     # "norm1": normalized roots rebuilt once in r10 — zero-norm-guarded
     # quantize (operators/kmeans.py) + the meta artifact append requires
@@ -4090,12 +4083,6 @@ def _rerank_refine(short: DataFrame, corpus: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _APPEND_CUT = 100  # vec_id < cut trains the codebooks; >= cut is "late"
-_APPEND_RETRIES = 8  # CAS retry bound for concurrent append generations
-# delete generations link prior tombstone part-files and append one new
-# one; at this file count the (tiny) key set is folded into one rewrite
-_TOMBSTONE_FOLD_FILES = 8
-# compaction rewrites live codes into ~this many bytes per part-file
-_COMPACT_TARGET_BYTES = 128 * 1024 * 1024
 
 _IVFPQ_APPEND_SQL = f"""
 SELECT query_id, neighbor_id, cell, adc_dist, rn FROM (
@@ -4115,21 +4102,46 @@ def _ensure_ivfpq_appended_index(spark: SparkSession, sf_dir: str) -> str:
     Each snapshot is full (store contract: readers of v1 never see v2's
     files); at 100 TB the codes union is the compaction write a real
     deployment amortizes — 4 B/vector, map-side, no shuffle."""
-    kind = "ivfpq_app"
-    consts = _IVFPQ_CONSTS + ("norm1", _PQ_COS_M, _APPEND_CUT)
-    root = ann_index.ensure(
+    return _ensure_lifecycle_root(
+        spark,
         sf_dir,
-        "embeddings.parquet",
-        kind,
-        consts,
+        "ivfpq_app",
+        _IVFPQ_CONSTS + ("norm1", _PQ_COS_M, _APPEND_CUT),
         _ivfpq_subset_train_build(spark, sf_dir),
+        _ivfpq_late_vectors,
+        ivfpq_assign,
     )
 
-    from projekt_data_engineering_iubh_spark.pipeline import store
 
-    if store.current_version(root) >= 2:
-        return root  # append already committed for this corpus version
-    ivfpq_append_generation(spark, sf_dir, root, lo=_APPEND_CUT)
+def _ensure_lifecycle_root(
+    spark: SparkSession,
+    sf_dir: str,
+    kind: str,
+    consts: tuple,
+    build,
+    late_vectors,
+    assign,
+    delete: bool = False,
+) -> str:
+    """Committed lifecycle root for a registry entry, each step run only
+    if this corpus version's root has not committed it yet: v1 =
+    ``build`` (training on a frozen subset), v2 = ``late_vectors(spark,
+    sf_dir)`` appended through ``assign`` against v1's frozen artifacts
+    (ann_index.append_generation), and with ``delete`` v3 = tombstones
+    for vec_id % {_DELETE_MOD} == {_DELETE_RES}
+    (ann_index.delete_generation) — deletes spanning BOTH generations."""
+    root = ann_index.ensure(
+        sf_dir, "embeddings.parquet", kind, consts, build
+    )
+    if store.current_version(root) < 2:
+        ann_index.append_generation(
+            spark, root, late_vectors(spark, sf_dir), assign
+        )
+    if delete and store.current_version(root) < 3:
+        keys = load_table(spark, sf_dir, "embeddings").filter(
+            F.col("vec_id") % _DELETE_MOD == _DELETE_RES
+        )
+        ann_index.delete_generation(spark, root, keys)
     return root
 
 
@@ -4140,593 +4152,55 @@ def _ivfpq_subset_train_build(spark: SparkSession, sf_dir: str):
     arrive through append generations, never through retraining)."""
 
     def build(data_dir: str) -> None:
-        e = spread(load_table(spark, sf_dir, "embeddings"))
-        qv = e.select(
+        qv = spread(load_table(spark, sf_dir, "embeddings")).select(
             "vec_id", km.quantize_normalized(F.col("embedding")).alias("qemb")
         )
-        train_qv = qv.filter(F.col("vec_id") < _APPEND_CUT)
-        subdim = EMB_DIM // _PQ_COS_M
-        coarse = (
-            km.kmeans_train(train_qv, _KM_K, _KM_ITERS, EMB_DIM)
-            .orderBy("cell")
-            .collect()
+        ivfpq_train_and_write(
+            spark, qv.filter(F.col("vec_id") < _APPEND_CUT), data_dir
         )
-        cells = [r.cell for r in coarse]
-        cqs = [list(r.cq) for r in coarse]
-        res_train = _ivfpq_residuals(train_qv, cells, cqs).localCheckpoint(
-            eager=True
-        )
-        bcells, books = [], []
-        for m in range(_PQ_COS_M):
-            subv = res_train.select(
-                "vec_id",
-                F.slice("remb", m * subdim + 1, subdim).alias("qemb"),
-            )
-            cents = (
-                km.kmeans_train(subv, _PQ_CODES, _PQT_ITERS, subdim)
-                .orderBy("cell")
-                .collect()
-            )
-            bcells.append([r.cell for r in cents])
-            books.append([list(r.cq) for r in cents])
-        spark.createDataFrame(
-            list(zip(cells, map(list, cqs))), "cell int, cq array<bigint>"
-        ).coalesce(1).write.parquet(os.path.join(data_dir, "coarse"))
-        spark.createDataFrame(
-            [
-                (m, code, bcells[m][code], list(books[m][code]))
-                for m in range(_PQ_COS_M)
-                for code in range(len(books[m]))
-            ],
-            "m int, code int, cell int, cq array<bigint>",
-        ).coalesce(1).write.parquet(os.path.join(data_dir, "books"))
-        _ivfpq_encode_residuals(res_train, books, subdim).drop(
-            "qemb"
-        ).write.parquet(os.path.join(data_dir, "codes"))
-        write_index_meta(spark, data_dir, _PQ_COS_M, _PQ_CODES, True)
 
     return build
 
 
-def write_index_meta(
-    spark: SparkSession,
-    data_dir: str,
-    pq_m: int,
-    pq_codes: int,
-    normalized: bool,
-) -> None:
-    """One-row `meta` artifact stamped into every APPENDABLE snapshot:
-    the PQ geometry and (crucially) whether the codes were built over
-    unit-normalized vectors. Append encodes with quantize_normalized —
-    growing a raw-quantized root would silently mix metrics — so append
-    refuses roots without a meta row asserting normalized=True."""
-    spark.createDataFrame(
-        [(pq_m, pq_codes, normalized, EMB_DIM)],
-        "pq_m int, pq_codes int, normalized boolean, emb_dim int",
-    ).coalesce(1).write.parquet(os.path.join(data_dir, "meta"))
+def _ivfpq_late_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The append lifecycle's v2 delta: every vector past the cut."""
+    return spread(load_table(spark, sf_dir, "embeddings")).filter(
+        F.col("vec_id") >= _APPEND_CUT
+    )
 
 
-def _pq_local_rows(path: str, *, allow_missing: bool = False) -> list[dict]:
-    """Rows of a k-row-scale parquet ARTIFACT directory, read with
-    pyarrow on the driver (r13): the snapshot client state (meta, coarse
-    centroids, codebooks, router tables) is constant-size driver state
-    by contract, and reading it through spark.read.parquet().collect()
-    paid one Spark job + scheduler round trip PER ARTIFACT — measured
-    ~1.2 s of the IVF-PQ serve wall (3 artifacts) for data a local
-    footer read returns in milliseconds. Data-sized artifacts (codes,
-    tombstones) stay DataFrames — this helper is for what was already
-    being collected.
+def ivfpq_assign(cur: str, late: DataFrame) -> DataFrame:
+    """ann_index.append_generation's IVF-PQ step: encode (vec_id,
+    embedding) rows against snapshot ``cur``'s FROZEN coarse centroids
+    and codebooks with the argmin kernels training used
+    (_ivfpq_residuals / _ivfpq_encode_residuals) — byte-identical codes
+    to a from-scratch encode, exactly FAISS ``add``.
 
-    A directory with no part files raises FileNotFoundError (r14,
-    ADVICE r13 #2) — the spark.read.parquet this replaced failed loudly
-    on missing artifacts, and a silent ``[]`` here would surface far
-    from the cause (e.g. as a degenerate literal router). Callers with
-    a legitimately-absent artifact (read_index_meta's legacy roots)
-    pass ``allow_missing=True``."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    files = sorted(glob.glob(os.path.join(path, "*.parquet")))
-    if not files and not allow_missing:
-        raise FileNotFoundError(
-            f"_pq_local_rows: no parquet part files under {path!r}"
+    Geometry and metric come from the snapshot's meta artifact, NOT the
+    module constants: roots built with any (pq_m, pq_codes) append
+    correctly, and roots built over RAW (unnormalized) vectors are
+    refused loudly — this encoder normalizes, so growing a raw root
+    would silently mix metrics and corrupt the codes."""
+    meta = ann_index.read_index_meta(cur)
+    if meta is None or not meta.normalized:
+        raise ValueError(
+            f"snapshot {cur} is not an appendable index: missing meta "
+            "artifact or built over unnormalized vectors (append "
+            "encodes with quantize_normalized)"
         )
-    rows: list[dict] = []
-    for f in files:
-        rows.extend(pq.read_table(f).to_pylist())
-    return rows
-
-
-def _stage_delta(df: DataFrame, root: str) -> tuple[str, int]:
-    """Write a generation's delta ONCE into a staging dir under the root
-    (same filesystem, so the commit can HARDLINK the part-file instead of
-    running a second Spark write job) and count its rows from the parquet
-    FOOTERS (driver-side metadata, no job). Returns (staging_path, rows).
-
-    r14, guide §5: the previous per-trigger shape paid one
-    localCheckpoint job to pin the delta, an isEmpty probe, and another
-    write job inside the commit — three actions at the ~0.4 s/job floor
-    for a micro-batch of a few hundred rows. The staged write pins,
-    counts, and publishes with ONE job plus filesystem metadata ops.
-    Caller must shutil.rmtree the staging dir when done — part-files
-    hardlinked into a committed snapshot survive the unlink."""
-    import glob as _glob
-    import uuid
-
-    import pyarrow.parquet as _pa_pq
-
-    staging = os.path.join(root, f".delta_{uuid.uuid4().hex}")
-    df.coalesce(1).write.parquet(staging)
-    n = sum(
-        _pa_pq.ParquetFile(f).metadata.num_rows
-        for f in _glob.glob(os.path.join(staging, "*.parquet"))
-    )
-    return staging, n
-
-
-def read_index_meta(spark: SparkSession, snapshot_dir: str):
-    """Return the meta row of a snapshot (attribute access), or None for
-    legacy roots."""
-    import types
-
-    path = os.path.join(snapshot_dir, "meta")
-    if not os.path.isdir(path):
-        return None
-    rows = _pq_local_rows(path, allow_missing=True)
-    return types.SimpleNamespace(**rows[0]) if rows else None
-
-
-def _link_or_copy_parquet(src_dir: str, dst_dir: str) -> None:
-    """Publish src_dir's parquet part-files into dst_dir WITHOUT reading
-    them: hardlink (same-filesystem metadata ops, O(#files) regardless of
-    bytes) with a copy fallback for cross-device stores. This is what
-    makes a snapshot generation O(delta): before it, every append/delete
-    commit re-wrote the full codes artifact through Spark — a per-trigger
-    O(corpus) write that is trivial at 20k vectors and fatal at 100 TB
-    (the Delta/Iceberg manifest trick, done at the filesystem level so
-    readers still see one self-contained parquet directory). Vacuuming a
-    superseded version only unlinks its directory entries; shared inodes
-    survive in every later snapshot that linked them."""
-    os.makedirs(dst_dir, exist_ok=True)
-    for name in os.listdir(src_dir):
-        if name.startswith(("_", ".")):
-            continue  # _SUCCESS / hidden sidecars
-        src, dst = os.path.join(src_dir, name), os.path.join(dst_dir, name)
-        try:
-            os.link(src, dst)
-        except FileExistsError:
-            # part-file names carry a per-job UUID, so a collision means
-            # two generations produced the same name — corrupt silently
-            # overwriting it would lose a file; fail loudly instead
-            raise
-        except OSError:
-            shutil.copy2(src, dst)  # cross-device store: copy fallback
-
-
-def _link_frozen_artifacts(cur: str, data_dir: str) -> None:
-    """coarse/books/meta are frozen across every generation — link them."""
-    for name in ("coarse", "books", "meta"):
-        src = os.path.join(cur, name)
-        if os.path.isdir(src):
-            _link_or_copy_parquet(src, os.path.join(data_dir, name))
-
-
-def _link_routed_artifacts(cur: str, data_dir: str) -> None:
-    """The routed root's frozen tier: centroids + the two-level router
-    (supers, cent_super) are immutable across the root's whole lineage
-    (the r10 consistency law) — every generation links them."""
-    for name in ("centroids", "supers", "cent_super"):
-        src = os.path.join(cur, name)
-        if os.path.isdir(src):
-            _link_or_copy_parquet(src, os.path.join(data_dir, name))
-
-
-def _root_is_routed(cur: str) -> bool:
-    """Root kind from the artifacts present (same detection rule as
-    pipeline/maintenance.maintain_ann_root): a routed root carries the
-    persisted router map and no PQ books."""
-    return os.path.isdir(os.path.join(cur, "cent_super")) and not (
-        os.path.isdir(os.path.join(cur, "books"))
-    )
-
-
-def _load_router(spark: SparkSession, cur: str) -> "km.TwoLevelRouter":
-    """Reconstruct a snapshot's frozen TwoLevelRouter with the k-row
-    router tables read locally (pyarrow — see _pq_local_rows) so routing
-    embeds them as literals without a collect job per table. The
-    DataFrame fields stay lazy parquet reads for any join-shaped
-    consumer."""
-    supers = sorted(
-        (int(r["super_cell"]), list(r["scq"]))
-        for r in _pq_local_rows(os.path.join(cur, "supers"))
-    )
-    cent_super = sorted(
-        (int(r["cell"]), list(r["cq"]), int(r["super_cell"]))
-        for r in _pq_local_rows(os.path.join(cur, "cent_super"))
-    )
-    return km.TwoLevelRouter(
-        spark.read.parquet(os.path.join(cur, "supers")),
-        spark.read.parquet(os.path.join(cur, "cent_super")),
-        supers,
-        cent_super,
-    )
-
-
-def _read_tombstones(spark: SparkSession, snapshot_dir: str):
-    """The snapshot's live tombstone key set (vec_id), or None if the
-    version carries no deletes (absent artifact == empty set)."""
-    path = os.path.join(snapshot_dir, "tombstones")
-    if not os.path.isdir(path):
-        return None
-    return spark.read.parquet(path).select("vec_id")
-
-
-def read_live_codes(spark: SparkSession, snapshot_dir: str) -> DataFrame:
-    """The snapshot's SERVING view of its codes: every committed code
-    row minus the live tombstones (FAISS ``remove_ids`` semantics
-    without rewriting the codes at delete time). With no tombstones the
-    plan is the bare codes scan — zero cost on the undeleted path; with
-    tombstones it is one anti-join against a key set that is tiny
-    relative to the corpus (and broadcast by AQE when it fits)."""
-    codes = spark.read.parquet(os.path.join(snapshot_dir, "codes"))
-    tomb = _read_tombstones(spark, snapshot_dir)
-    if tomb is None:
-        return codes
-    return codes.join(tomb, "vec_id", "left_anti")
-
-
-def ivfpq_append_generation(
-    spark: SparkSession,
-    sf_dir: str | None,
-    root: str,
-    *,
-    lo: int = 0,
-    hi: int | None = None,
-    vectors: DataFrame | None = None,
-) -> bool:
-    """Commit ONE append generation to an IVF-PQ index root: encode new
-    corpus vectors against the root's FROZEN codebooks (read from the
-    CURRENT snapshot — never retrained) and publish current-codes ∪
-    new-codes as the next snapshot version. Returns True iff a new
-    version was committed.
-
-    New vectors come either from the corpus table (``lo <= vec_id <
-    hi`` — the registry entry's two-version lifecycle) or from an
-    explicit ``vectors`` frame with (vec_id, embedding) — the streaming
-    ingest's micro-batch. Vectors whose vec_id is already encoded are
-    anti-joined away (duplicates WITHIN the delta are also collapsed —
-    two overlapping files landing in one trigger must not commit the
-    same vec_id twice), and an empty delta commits NOTHING, which is
-    what makes a replayed foreachBatch trigger (checkpoint recovery)
-    land exactly once (streaming/ann_ingest_stream.py; chain tested in
-    tests/test_ann_index.py::test_multi_generation_append_chain).
-
-    On ``store.CommitConflict`` (a concurrent appender won the CAS) the
-    function honors the store contract — re-resolve, re-derive, retry —
-    by looping: the delta is re-anti-joined against the WINNER's codes,
-    so vectors the winner already committed drop out and only genuinely
-    new ones retry. Without this, a foreachBatch caller would checkpoint
-    the trigger as done and the batch's vectors would be silently lost.
-    The PQ geometry (M, codes-per-book, subdim) is derived from the
-    stored books artifact, not assumed: roots built with any geometry
-    append correctly."""
-    from projekt_data_engineering_iubh_spark.pipeline import store
-
-    for _ in range(_APPEND_RETRIES):
-        # frozen client state from the current version — NOT retrained.
-        # Re-resolved each attempt: after a lost CAS the winner's codes
-        # are the new anti-join base (books/coarse are frozen forever,
-        # but re-reading them is k x dim — free).
-        cur = store.resolve(root)
-        coarse = sorted(
-            _pq_local_rows(os.path.join(cur, "coarse")),
-            key=lambda r: r["cell"],
+    pq_m, cells, cqs, books = _load_snapshot_client_state(cur)
+    subdim = len(books[0][0])
+    if subdim * pq_m != EMB_DIM or meta.emb_dim != EMB_DIM:
+        raise ValueError(
+            f"books geometry (m={pq_m}, subdim={subdim}) does not "
+            f"tile EMB_DIM={EMB_DIM} for snapshot {cur}"
         )
-        cells = [r["cell"] for r in coarse]
-        cqs = [list(r["cq"]) for r in coarse]
-        # geometry + metric from the snapshot's meta artifact, NOT the
-        # module constants: roots built with any (pq_m, pq_codes) append
-        # correctly, and roots built over RAW (unnormalized) vectors are
-        # refused loudly — this encoder normalizes, so growing a raw
-        # root would silently mix metrics and corrupt the codes.
-        meta = read_index_meta(spark, cur)
-        if meta is None or not meta.normalized:
-            raise ValueError(
-                f"root {root} is not an appendable index: missing meta "
-                "artifact or built over unnormalized vectors (append "
-                "encodes with quantize_normalized)"
-            )
-        pq_m, pq_codes = meta.pq_m, meta.pq_codes
-        brows = _pq_local_rows(os.path.join(cur, "books"))
-        books = [[None] * pq_codes for _ in range(pq_m)]
-        for r in brows:
-            books[r["m"]][r["code"]] = list(r["cq"])
-        books = [[cq for cq in bk if cq is not None] for bk in books]
-        subdim = len(books[0][0])
-        if subdim * pq_m != EMB_DIM or meta.emb_dim != EMB_DIM:
-            raise ValueError(
-                f"books geometry (m={pq_m}, subdim={subdim}) does not "
-                f"tile EMB_DIM={EMB_DIM} for root {root}"
-            )
-
-        if vectors is not None:
-            late = vectors
-        else:
-            late = spread(load_table(spark, sf_dir, "embeddings")).filter(
-                F.col("vec_id") >= lo
-            )
-            if hi is not None:
-                late = late.filter(F.col("vec_id") < hi)
-        late = late.select(
-            "vec_id",
-            km.quantize_normalized(F.col("embedding")).alias("qemb"),
-        ).dropDuplicates(["vec_id"])
-        old_codes = spark.read.parquet(os.path.join(cur, "codes"))
-        tomb = _read_tombstones(spark, cur)
-        # anti-join against LIVE ids: a tombstoned vec_id that arrives
-        # again is a RE-ADD (FAISS remove_ids then add) — it survives the
-        # anti-join, its stale code row and tombstone are dropped below
-        live_ids = old_codes.select("vec_id")
-        if tomb is not None:
-            live_ids = live_ids.join(tomb, "vec_id", "left_anti")
-        # ONE Spark job per trigger (r14): the delta is written straight
-        # to a same-filesystem staging dir (pinning it BEFORE the commit,
-        # same guarantee the localCheckpoint gave), its emptiness read
-        # from the parquet footers, and the commit hardlinks the staged
-        # part-file — the previous checkpoint-then-write shape paid two
-        # jobs plus an isEmpty probe per micro-batch.
-        staging, n_delta = _stage_delta(
-            _ivfpq_encode_residuals(
-                _ivfpq_residuals(late, cells, cqs), books, subdim
-            )
-            .drop("qemb")
-            .join(live_ids, "vec_id", "left_anti"),
-            root,
-        )
-        try:
-            if n_delta == 0:
-                return False  # replayed batch / nothing new: exactly-once
-            new_codes = spark.read.parquet(staging)
-
-            # resurrection (a tombstoned id arriving again) is the ONE
-            # case that must touch existing rows: the dead code row is
-            # replaced and its tombstone dropped — a real rewrite.
-            # Everything else is pure delta, published as hardlinks.
-            resurrect = tomb is not None and not (
-                new_codes.select("vec_id")
-                .join(tomb, "vec_id", "left_semi")
-                .isEmpty()
-            )
-
-            def append(data_dir: str) -> None:
-                # coarse/books/meta are frozen across generations:
-                # linked, never re-read or re-created (a LocalRelation
-                # parquet write costs ~4 s per table on this box —
-                # measured r10)
-                _link_frozen_artifacts(cur, data_dir)
-                if not resurrect:
-                    # O(delta) commit: link every existing codes
-                    # part-file AND the staged delta part-file (one per
-                    # trigger — the staging write coalesced to 1, so
-                    # codes file count grows 1/trigger as the compaction
-                    # story assumes). No Spark job runs in here.
-                    codes_dir = os.path.join(data_dir, "codes")
-                    _link_or_copy_parquet(
-                        os.path.join(cur, "codes"), codes_dir
-                    )
-                    _link_or_copy_parquet(staging, codes_dir)
-                    if tomb is not None:
-                        _link_or_copy_parquet(
-                            os.path.join(cur, "tombstones"),
-                            os.path.join(data_dir, "tombstones"),
-                        )
-                    return
-                # resurrected ids: replace the dead row, drop the
-                # tombstone
-                delta_ids = new_codes.select("vec_id")
-                codes_out = old_codes.join(
-                    delta_ids, "vec_id", "left_anti"
-                ).unionByName(new_codes)
-                live_tomb = tomb.join(delta_ids, "vec_id", "left_anti")
-                if not live_tomb.isEmpty():
-                    live_tomb.coalesce(1).write.parquet(
-                        os.path.join(data_dir, "tombstones")
-                    )
-                codes_out.write.parquet(os.path.join(data_dir, "codes"))
-
-            try:
-                store.commit_snapshot(root, append)
-                return True
-            except store.CommitConflict:
-                continue  # lost the CAS: re-resolve, re-derive the delta
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-    raise store.CommitConflict(
-        f"append to {root} lost the snapshot CAS {_APPEND_RETRIES} times"
+    qv = late.select(
+        "vec_id", km.quantize_normalized(F.col("embedding")).alias("qemb")
     )
-
-
-def ivfpq_delete_generation(
-    spark: SparkSession, root: str, keys: DataFrame
-) -> bool:
-    """Commit ONE delete generation: tombstone the given vec_ids (FAISS
-    ``remove_ids``) WITHOUT rewriting or re-encoding any code row at
-    delete time. The next snapshot version carries the same codebooks
-    and codes plus a ``tombstones`` key-set artifact; every serve path
-    reads codes through read_live_codes (codes anti-join tombstones), so
-    deleted vectors stop appearing in results the moment the version
-    commits while in-flight readers of the prior version are untouched
-    (snapshot isolation). Returns True iff a new version was committed
-    (keys that are unknown or already dead commit NOTHING — idempotent
-    under replay, same as the append's empty-delta skip).
-
-    This is the takedown/GDPR/dedup-rerun shape a 100 TB corpus needs:
-    the delete commit is an O(|keys|) key-set write plus hardlinks of
-    every unchanged artifact (no shuffle of the corpus, no retrain, no
-    codes rewrite — _link_or_copy_parquet). ivfpq_compact folds
-    accumulated tombstones back into a clean full snapshot when the dead
-    fraction warrants one real rewrite.
-
-    Reference scope: the reference engine (648 LoC,
-    /root/reference/src/daily_aggregator.py) has no vector tier; this is
-    north-star training-data-pipeline surface alongside the append
-    lifecycle (#150)."""
-    return _delete_generation(spark, root, keys, _link_frozen_artifacts)
-
-
-def ivfr_delete_generation(
-    spark: SparkSession, root: str, keys: DataFrame
-) -> bool:
-    """Commit ONE delete generation to a ROUTED index root (r12): the
-    takedown face the routed tier was missing — before this, a GDPR
-    erasure or moderation takedown against a routed root meant a full
-    rebuild (VERDICT r11 #2). Identical contract and commit shape as
-    ivfpq_delete_generation: tombstone the given vec_ids without
-    rewriting or re-routing any code row (O(|keys|) key-set write, the
-    router + centroids + codes all hardlinked), idempotent for unknown
-    or already-dead keys, CAS-retried against concurrent generations.
-    Serving reads go through read_live_codes (shared with the IVF-PQ
-    tier — the tombstone artifact layout is deliberately identical), so
-    deletes take effect at commit while in-flight readers keep their
-    snapshot; ivfr_compact folds tombstones into a clean rewrite."""
-    return _delete_generation(spark, root, keys, _link_routed_artifacts)
-
-
-def delete_generation(
-    spark: SparkSession, root: str, keys: DataFrame
-) -> bool:
-    """Kind-dispatching delete: detect the root's tier from its stored
-    artifacts (books ⇒ IVF-PQ, cent_super ⇒ routed — the same rule the
-    maintenance policy uses) and commit the matching tombstone
-    generation. This is the entry point the takedown STREAM uses, so one
-    delete-stream wiring serves both index kinds."""
-    from projekt_data_engineering_iubh_spark.pipeline import store
-
-    routed = _root_is_routed(store.resolve(root))
-    fn = ivfr_delete_generation if routed else ivfpq_delete_generation
-    return fn(spark, root, keys)
-
-
-def _delete_generation(
-    spark: SparkSession,
-    root: str,
-    keys: DataFrame,
-    link_frozen,
-) -> bool:
-    """Shared tombstone-generation core for both index tiers — the only
-    per-tier difference is WHICH artifacts are frozen (coarse/books/meta
-    vs centroids/supers/cent_super), injected as ``link_frozen``."""
-    from projekt_data_engineering_iubh_spark.pipeline import store
-
-    dedup_keys = keys.select("vec_id").dropDuplicates(["vec_id"])
-    for _ in range(_APPEND_RETRIES):
-        cur = store.resolve(root)
-        codes = spark.read.parquet(os.path.join(cur, "codes"))
-        tomb = _read_tombstones(spark, cur)
-        # only ids that are currently LIVE become new tombstones
-        new_dead = dedup_keys.join(
-            codes.select("vec_id"), "vec_id", "left_semi"
-        )
-        if tomb is not None:
-            new_dead = new_dead.join(tomb, "vec_id", "left_anti")
-        new_dead = new_dead.localCheckpoint(eager=True)
-        if new_dead.isEmpty():
-            return False  # nothing live to delete: idempotent no-op
-
-        def build(data_dir: str) -> None:
-            # delete touches NO code row: the whole commit is links
-            # (O(#files) metadata ops) plus the new tombstone keys —
-            # O(|keys|) regardless of index size
-            link_frozen(cur, data_dir)
-            _link_or_copy_parquet(
-                os.path.join(cur, "codes"), os.path.join(data_dir, "codes")
-            )
-            tomb_dir = os.path.join(data_dir, "tombstones")
-            if tomb is not None:
-                # each generation appends one part-file; frequent
-                # takedown triggers would otherwise accumulate small
-                # files unboundedly between code compactions. The key
-                # set is tiny by construction, so once the linked dir
-                # crosses the fold threshold the whole set is rewritten
-                # as ONE file — still O(|all keys|), never O(corpus)
-                n_parts = sum(
-                    1
-                    for f in os.listdir(os.path.join(cur, "tombstones"))
-                    if not f.startswith(("_", "."))
-                )
-                if n_parts >= _TOMBSTONE_FOLD_FILES:
-                    tomb.unionByName(new_dead).coalesce(1).write.parquet(
-                        tomb_dir
-                    )
-                    return
-                _link_or_copy_parquet(
-                    os.path.join(cur, "tombstones"), tomb_dir
-                )
-            new_dead.coalesce(1).write.mode("append").parquet(tomb_dir)
-
-        try:
-            store.commit_snapshot(root, build)
-            return True
-        except store.CommitConflict:
-            continue
-    raise store.CommitConflict(
-        f"delete on {root} lost the snapshot CAS {_APPEND_RETRIES} times"
-    )
-
-
-def ivfpq_compact(
-    spark: SparkSession, root: str, force: bool = False
-) -> bool:
-    """Fold accumulated tombstones into a clean full snapshot: commit a
-    version whose codes are exactly the LIVE rows and which carries no
-    tombstones artifact — the maintenance compaction that bounds the
-    serve path's anti-join key set (run it when the dead fraction
-    justifies one full codes rewrite; until then deletes stay O(|keys|)).
-    Returns False (no commit) when the current version has no
-    tombstones — unless ``force=True``, which rewrites anyway: since
-    generations publish as hardlinks + appended delta part-files
-    (O(delta) commits), the codes file count grows by one per trigger,
-    and a long-running ingest needs this small-file compaction
-    periodically even with zero deletes. Readers of prior versions keep
-    their snapshot; store.vacuum reclaims superseded generations
-    afterwards."""
-    from projekt_data_engineering_iubh_spark.pipeline import store
-
-    for _ in range(_APPEND_RETRIES):
-        cur = store.resolve(root)
-        if _read_tombstones(spark, cur) is None and not force:
-            return False  # already compact
-        live = read_live_codes(spark, cur)
-        # fold to a BOUNDED file count sized from the source footprint
-        # (metadata only): the parquet scan otherwise keeps roughly one
-        # partition per small source file, so the "compacted" write
-        # would re-emit the same file count it was meant to fold
-        src_codes = os.path.join(cur, "codes")
-        codes_bytes = sum(
-            os.path.getsize(os.path.join(src_codes, f))
-            for f in os.listdir(src_codes)
-            if not f.startswith(("_", "."))
-        )
-        n_out = max(1, -(-codes_bytes // _COMPACT_TARGET_BYTES))
-
-        def build(data_dir: str) -> None:
-            _link_frozen_artifacts(cur, data_dir)
-            # the one real rewrite in the lifecycle: codes minus dead
-            # rows, repartitioned to ~128 MiB files (one shuffle of the
-            # live rows — the same cost Delta/Iceberg OPTIMIZE pays)
-            live.repartition(n_out).write.parquet(
-                os.path.join(data_dir, "codes")
-            )
-
-        try:
-            store.commit_snapshot(root, build)
-            return True
-        except store.CommitConflict:
-            continue
-    raise store.CommitConflict(
-        f"compact on {root} lost the snapshot CAS {_APPEND_RETRIES} times"
-    )
+    return _ivfpq_encode_residuals(
+        _ivfpq_residuals(qv, cells, cqs), books, subdim
+    ).drop("qemb")
 
 
 # tombstone predicate for the registry entry's lifecycle: deterministic,
@@ -4753,28 +4227,17 @@ def _ensure_ivfpq_deleted_index(spark: SparkSession, sf_dir: str) -> str:
     vec_id % {_DELETE_MOD} == {_DELETE_RES} (FAISS ``remove_ids``) —
     deletes spanning BOTH the trained and the appended generations, no
     code row rewritten or re-encoded."""
-    kind = "ivfpq_del"
-    consts = _IVFPQ_CONSTS + (
-        "norm1", _PQ_COS_M, _APPEND_CUT, _DELETE_MOD, _DELETE_RES,
-    )
-    root = ann_index.ensure(
+    return _ensure_lifecycle_root(
+        spark,
         sf_dir,
-        "embeddings.parquet",
-        kind,
-        consts,
+        "ivfpq_del",
+        _IVFPQ_CONSTS
+        + ("norm1", _PQ_COS_M, _APPEND_CUT, _DELETE_MOD, _DELETE_RES),
         _ivfpq_subset_train_build(spark, sf_dir),
+        _ivfpq_late_vectors,
+        ivfpq_assign,
+        delete=True,
     )
-
-    from projekt_data_engineering_iubh_spark.pipeline import store
-
-    if store.current_version(root) < 2:
-        ivfpq_append_generation(spark, sf_dir, root, lo=_APPEND_CUT)
-    if store.current_version(root) < 3:
-        keys = load_table(spark, sf_dir, "embeddings").filter(
-            F.col("vec_id") % _DELETE_MOD == _DELETE_RES
-        )
-        ivfpq_delete_generation(spark, root, keys)
-    return root
 
 
 @register("emb_ivfpq_delete_serve", oracle=_IVFPQ_DELETE_SQL)
@@ -4822,9 +4285,7 @@ def emb_ivfpq_append_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _serve_adc_from_snapshot(spark, sf_dir, root)
 
 
-def _load_snapshot_client_state(
-    spark: SparkSession, cur: str
-) -> tuple[int, list, list, list]:
+def _load_snapshot_client_state(cur: str) -> tuple[int, list, list, list]:
     """Collect an IVF-PQ snapshot version's k×dim client state — the
     FAISS-client analog of loading a trained index header: geometry from
     the meta artifact (falling back to the cosine constants for legacy
@@ -4835,16 +4296,16 @@ def _load_snapshot_client_state(
     stored rows) — that subtlety must live in exactly one place
     (ADVICE r11: it had been duplicated verbatim into the join serve).
     Returns ``(pq_m, cells, cqs, books)``; nothing here is data-sized."""
-    meta = read_index_meta(spark, cur)
+    meta = ann_index.read_index_meta(cur)
     pq_m = meta.pq_m if meta is not None else _PQ_COS_M
     pq_codes = meta.pq_codes if meta is not None else _PQ_CODES
     coarse = sorted(
-        _pq_local_rows(os.path.join(cur, "coarse")),
+        ann_index.pq_local_rows(os.path.join(cur, "coarse")),
         key=lambda r: r["cell"],
     )
     cells = [r["cell"] for r in coarse]
     cqs = [list(r["cq"]) for r in coarse]
-    brows = _pq_local_rows(os.path.join(cur, "books"))
+    brows = ann_index.pq_local_rows(os.path.join(cur, "books"))
     books = [[None] * pq_codes for _ in range(pq_m)]
     for r in brows:
         books[r["m"]][r["code"]] = list(r["cq"])
@@ -4862,12 +4323,8 @@ def _serve_adc_from_snapshot(
     (read_live_codes: tombstones anti-joined when present, a bare codes
     scan otherwise). Geometry comes from the snapshot's meta artifact
     (falls back to the cosine constants for legacy roots)."""
-    from projekt_data_engineering_iubh_spark.pipeline import store as _st
-
-    cur = _st.resolve(root)
-    pq_m, coarse_cells, coarse_cqs, books = _load_snapshot_client_state(
-        spark, cur
-    )
+    cur = store.resolve(root)
+    pq_m, coarse_cells, coarse_cqs, books = _load_snapshot_client_state(cur)
     qrows = (
         load_table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") < _PQ_QUERIES)
@@ -4876,7 +4333,7 @@ def _serve_adc_from_snapshot(
         )
         .collect()
     )
-    codes = read_live_codes(spark, cur)
+    codes = ann_index.read_live_codes(spark, cur)
     return _ivfpq_adc_topk(
         spark, coarse_cells, coarse_cqs, books, qrows, codes,
         EMB_DIM // pq_m, pq_m,
@@ -4934,11 +4391,9 @@ def emb_knn_join_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (query_where), ADC shortlist + exact re-rank (refine) — one hash
     certifies frozen-book append parity, tombstone exclusion, and both
     ranking stages of the compressed-domain join at once."""
-    from projekt_data_engineering_iubh_spark.pipeline import store as _st
-
     root = _ensure_ivfpq_deleted_index(spark, sf_dir)
-    cur = _st.resolve(root)
-    pq_m, cells, cqs, books = _load_snapshot_client_state(spark, cur)
+    cur = store.resolve(root)
+    pq_m, cells, cqs, books = _load_snapshot_client_state(cur)
 
     emb = load_table(spark, sf_dir, "embeddings")
     qd = emb.filter(F.col("vec_id") % 2 == 0).select(
@@ -4951,7 +4406,7 @@ def emb_knn_join_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "qslice",
         F.explode(F.array(*[F.lit(i) for i in range(_ADCJ_SLICES)])),
     )
-    corp = read_live_codes(spark, cur).withColumn(
+    corp = ann_index.read_live_codes(spark, cur).withColumn(
         "slice", (F.col("vec_id") % _ADCJ_SLICES).cast("int")
     )
     adc = sum(
@@ -5014,6 +4469,85 @@ def emb_knn_join_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _IVFR_ITERS = 2
+_IVFR_CONSTS = (
+    _IVFR_MIN_CELLS,
+    _IVFR_TARGET_CELL,
+    _IVFR_ITERS,
+    EMB_DIM,
+    km.FIXED_SCALE,
+    km.ROUTER_SUPER_PROBES,
+)
+
+
+def _write_ivfpq_artifacts(
+    spark: SparkSession,
+    data_dir: str,
+    cells: list,
+    cqs: list,
+    bcells: list,
+    books: list,
+    codes: DataFrame,
+    pq_m: int,
+    pq_codes: int,
+    normalized: bool,
+) -> None:
+    """Write an IVF-PQ root's artifacts into ``data_dir``: `coarse`
+    (cell, cq), `books` (m, code, cell, cq), `codes` (vec_id, cell,
+    c0..c{M-1}) and the `meta` geometry row."""
+    spark.createDataFrame(
+        list(zip(cells, map(list, cqs))), "cell int, cq array<bigint>"
+    ).coalesce(1).write.parquet(os.path.join(data_dir, "coarse"))
+    spark.createDataFrame(
+        [
+            (m, code, bcells[m][code], list(books[m][code]))
+            for m in range(pq_m)
+            for code in range(len(books[m]))
+        ],
+        "m int, code int, cell int, cq array<bigint>",
+    ).coalesce(1).write.parquet(os.path.join(data_dir, "books"))
+    codes.drop("qemb").write.parquet(os.path.join(data_dir, "codes"))
+    ann_index.write_index_meta(
+        spark, data_dir, pq_m, pq_codes, normalized, EMB_DIM
+    )
+
+
+def ivfpq_train_and_write(
+    spark: SparkSession, qv: DataFrame, data_dir: str
+) -> None:
+    """Train the cosine-faithful IVF-PQ quantizers over a (vec_id, qemb)
+    frame of unit-normalized vectors — coarse Lloyd, one residual
+    checkpoint, per-subspace codebooks — and write the appendable-root
+    artifacts (coarse, books, codes, meta) into ``data_dir``: the one
+    implementation behind every appendable IVF-PQ bootstrap (#150's v1
+    and streaming/ann_ingest_stream.bootstrap_codes_index), so the
+    artifact layout and training chain cannot fork between them."""
+    subdim = EMB_DIM // _PQ_COS_M
+    coarse = (
+        km.kmeans_train(qv, _KM_K, _KM_ITERS, EMB_DIM)
+        .orderBy("cell")
+        .collect()
+    )
+    cells = [r.cell for r in coarse]
+    cqs = [list(r.cq) for r in coarse]
+    res = _ivfpq_residuals(qv, cells, cqs).localCheckpoint(eager=True)
+    bcells, books = [], []
+    for m in range(_PQ_COS_M):
+        subv = res.select(
+            "vec_id",
+            F.slice("remb", m * subdim + 1, subdim).alias("qemb"),
+        )
+        cents = (
+            km.kmeans_train(subv, _PQ_CODES, _PQT_ITERS, subdim)
+            .orderBy("cell")
+            .collect()
+        )
+        bcells.append([r.cell for r in cents])
+        books.append([list(r.cq) for r in cents])
+    _write_ivfpq_artifacts(
+        spark, data_dir, cells, cqs, bcells, books,
+        _ivfpq_encode_residuals(res, books, subdim), _PQ_COS_M, _PQ_CODES,
+        True,
+    )
 
 
 def routed_train_and_write(spark: SparkSession, e: DataFrame, data_dir: str) -> None:
@@ -5062,16 +4596,8 @@ def _ensure_ivfr_index(spark: SparkSession, sf_dir: str) -> str:
         )
         routed_train_and_write(spark, e, data_dir)
 
-    consts = (
-        _IVFR_MIN_CELLS,
-        _IVFR_TARGET_CELL,
-        _IVFR_ITERS,
-        EMB_DIM,
-        km.FIXED_SCALE,
-        km.ROUTER_SUPER_PROBES,
-    )
     return ann_index.ensure(
-        sf_dir, "embeddings.parquet", "ivfr", consts, build
+        sf_dir, "embeddings.parquet", "ivfr", _IVFR_CONSTS, build
     )
 
 
@@ -5181,10 +4707,7 @@ def emb_ivf_routed_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast — no training, no Lloyd lineage, no argmin over k on the
     serve path."""
     root = _ensure_ivfr_index(spark, sf_dir)
-
-    from projekt_data_engineering_iubh_spark.pipeline import store as _st
-
-    return _routed_serve_from_dir(spark, sf_dir, _st.resolve(root))
+    return _routed_serve_from_dir(spark, sf_dir, store.resolve(root))
 
 
 def _routed_serve_from_dir(
@@ -5199,8 +4722,8 @@ def _routed_serve_from_dir(
     scan when the version carries no tombstones (zero cost on the
     undeleted path — #158/#159 plans unchanged), one anti-join against
     the broadcast-sized key set when it does (r12 delete tier)."""
-    router = _load_router(spark, cur)
-    codes = read_live_codes(spark, cur)
+    router = ann_index.load_router(spark, cur)
+    codes = ann_index.read_live_codes(spark, cur)
     e = spread(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id",
         "embedding",
@@ -5247,117 +4770,21 @@ def _routed_serve_from_dir(
 # ---------------------------------------------------------------------------
 
 
-def ivfr_append_generation(
-    spark: SparkSession,
-    sf_dir: str | None,
-    root: str,
-    *,
-    lo: int = 0,
-    hi: int | None = None,
-    vectors: DataFrame | None = None,
-) -> bool:
-    """Commit ONE append generation to a ROUTED index root: route new
-    corpus vectors through the root's FROZEN router (supers +
-    cent_super read from the CURRENT snapshot — never retrained) and
-    publish current-codes ∪ new-codes as the next version. Returns True
-    iff a new version was committed.
-
-    Same contracts as ivfpq_append_generation (#150): duplicates within
-    the delta collapse, already-coded ids anti-join away (an empty delta
-    commits NOTHING — exactly-once under foreachBatch replay), a lost
-    store CAS re-resolves and re-derives against the winner, and the
-    commit is O(delta): router artifacts + existing codes part-files are
-    hardlinked, only the new rows are written (one part-file per
-    trigger). Routing the delta costs ~(√k + 2k/√k) folds per vector —
-    the same sublinear assignment the build used, which is the whole
-    point of freezing the router: late vectors land in exactly the cells
-    a from-scratch routing of the grown corpus would give them (per-row
+def routed_assign(cur: str, late: DataFrame) -> DataFrame:
+    """ann_index.append_generation's routed step: route (vec_id,
+    embedding) rows through snapshot ``cur``'s FROZEN two-level router
+    (supers + cent_super — never retrained) into (vec_id, cell) code
+    rows. Routing costs ~(√k + 2k/√k) folds per vector — the same
+    sublinear assignment the build used, which is the whole point of
+    freezing the router: late vectors land in exactly the cells a
+    from-scratch routing of the grown corpus would give them (per-row
     routing is independent), so serve-after-append equals a one-pass
-    build. The consistency law holds BY CONSTRUCTION across generations:
-    there is only ever one router in the root's lineage."""
-    from projekt_data_engineering_iubh_spark.pipeline import store
-
-    for _ in range(_APPEND_RETRIES):
-        cur = store.resolve(root)
-        router = _load_router(spark, cur)
-        if vectors is not None:
-            late = vectors
-        else:
-            late = load_table(spark, sf_dir, "embeddings").filter(
-                F.col("vec_id") >= lo
-            )
-            if hi is not None:
-                late = late.filter(F.col("vec_id") < hi)
-        late = late.select(
-            "vec_id", km.quantize(F.col("embedding")).alias("qemb")
-        ).dropDuplicates(["vec_id"])
-        old_codes = spark.read.parquet(os.path.join(cur, "codes"))
-        tomb = _read_tombstones(spark, cur)
-        # anti-join against LIVE ids (same rule as the IVF-PQ tier): a
-        # tombstoned vec_id arriving again is a RE-ADD — it survives the
-        # anti-join; its stale code row and tombstone are dropped below
-        live_ids = old_codes.select("vec_id")
-        if tomb is not None:
-            live_ids = live_ids.join(tomb, "vec_id", "left_anti")
-        # ONE Spark job per trigger (r14): staged delta + footer count +
-        # hardlink publish — same shape and rationale as
-        # ivfpq_append_generation (see _stage_delta)
-        staging, n_delta = _stage_delta(
-            km.route_top_cells(
-                router, late.join(live_ids, "vec_id", "left_anti"),
-                "vec_id", [], 1,
-            ).select("vec_id", F.col("cell").cast("int").alias("cell")),
-            root,
-        )
-        try:
-            if n_delta == 0:
-                return False  # replayed batch / nothing new: exactly-once
-            delta = spark.read.parquet(staging)
-
-            # resurrection (a tombstoned id arriving again) is the ONE
-            # case that must touch existing rows — same contract as the
-            # IVF-PQ append: replace the dead code row, drop its
-            # tombstone
-            resurrect = tomb is not None and not (
-                delta.select("vec_id")
-                .join(tomb, "vec_id", "left_semi")
-                .isEmpty()
-            )
-
-            def append(data_dir: str) -> None:
-                _link_routed_artifacts(cur, data_dir)
-                codes_dir = os.path.join(data_dir, "codes")
-                if not resurrect:
-                    _link_or_copy_parquet(
-                        os.path.join(cur, "codes"), codes_dir
-                    )
-                    _link_or_copy_parquet(staging, codes_dir)
-                    if tomb is not None:
-                        _link_or_copy_parquet(
-                            os.path.join(cur, "tombstones"),
-                            os.path.join(data_dir, "tombstones"),
-                        )
-                    return
-                delta_ids = delta.select("vec_id")
-                codes_out = old_codes.join(
-                    delta_ids, "vec_id", "left_anti"
-                ).unionByName(delta)
-                live_tomb = tomb.join(delta_ids, "vec_id", "left_anti")
-                if not live_tomb.isEmpty():
-                    live_tomb.coalesce(1).write.parquet(
-                        os.path.join(data_dir, "tombstones")
-                    )
-                codes_out.write.parquet(codes_dir)
-
-            try:
-                store.commit_snapshot(root, append)
-                return True
-            except store.CommitConflict:
-                continue  # lost the CAS: re-resolve, re-derive the delta
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-    raise store.CommitConflict(
-        f"append to {root} lost the snapshot CAS {_APPEND_RETRIES} times"
+    build. The consistency law holds BY CONSTRUCTION across
+    generations: there is only ever one router in the root's lineage."""
+    router = ann_index.load_router(late.sparkSession, cur)
+    qv = late.select("vec_id", km.quantize(F.col("embedding")).alias("qemb"))
+    return km.route_top_cells(router, qv, "vec_id", [], 1).select(
+        "vec_id", F.col("cell").cast("int").alias("cell")
     )
 
 
@@ -5367,6 +4794,20 @@ def _ensure_ivfr_appended_index(spark: SparkSession, sf_dir: str) -> str:
     keeps the geometry production-shaped, unlike an absolute id cut),
     odd half routed and committed; v2 = every EVEN vector routed through
     the FROZEN router and appended. No retraining anywhere in v2."""
+    return _ensure_lifecycle_root(
+        spark,
+        sf_dir,
+        "ivfr_app",
+        _IVFR_CONSTS + ("oddtrain",),
+        _ivfr_odd_train_build(spark, sf_dir),
+        _ivfr_even_vectors,
+        routed_assign,
+    )
+
+
+def _ivfr_odd_train_build(spark: SparkSession, sf_dir: str):
+    """Build closure for v1 of the routed append/delete lifecycles:
+    router + cells trained on the ODD corpus half, odd half routed."""
 
     def build(data_dir: str) -> None:
         e = load_table(spark, sf_dir, "embeddings").filter(
@@ -5374,27 +4815,14 @@ def _ensure_ivfr_appended_index(spark: SparkSession, sf_dir: str) -> str:
         ).select("vec_id", km.quantize(F.col("embedding")).alias("qemb"))
         routed_train_and_write(spark, e, data_dir)
 
-    consts = (
-        _IVFR_MIN_CELLS,
-        _IVFR_TARGET_CELL,
-        _IVFR_ITERS,
-        EMB_DIM,
-        km.FIXED_SCALE,
-        km.ROUTER_SUPER_PROBES,
-        "oddtrain",
-    )
-    root = ann_index.ensure(
-        sf_dir, "embeddings.parquet", "ivfr_app", consts, build
-    )
+    return build
 
-    from projekt_data_engineering_iubh_spark.pipeline import store
 
-    if store.current_version(root) < 2:
-        late = load_table(spark, sf_dir, "embeddings").filter(
-            F.col("vec_id") % 2 == 0
-        )
-        ivfr_append_generation(spark, sf_dir, root, vectors=late)
-    return root
+def _ivfr_even_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The routed lifecycles' v2 delta: the EVEN corpus half."""
+    return load_table(spark, sf_dir, "embeddings").filter(
+        F.col("vec_id") % 2 == 0
+    )
 
 
 def _ivfr_app_sql(delete_where: str | None = None) -> str:
@@ -5482,10 +4910,7 @@ def emb_ivf_routed_append_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     CAS retries, exactly-once empty-delta no-op) are shared with the
     #150 lifecycle and pinned in tests/test_ann_index.py."""
     root = _ensure_ivfr_appended_index(spark, sf_dir)
-
-    from projekt_data_engineering_iubh_spark.pipeline import store as _st
-
-    return _routed_serve_from_dir(spark, sf_dir, _st.resolve(root))
+    return _routed_serve_from_dir(spark, sf_dir, store.resolve(root))
 
 
 def _ensure_ivfr_deleted_index(spark: SparkSession, sf_dir: str) -> str:
@@ -5498,42 +4923,16 @@ def _ensure_ivfr_deleted_index(spark: SparkSession, sf_dir: str) -> str:
     rewritten or re-routed. Its OWN store root (distinct consts tag):
     pushing the delete generation onto #159's shared root would shrink
     that entry's serving view and false-MISMATCH its oracle."""
-
-    def build(data_dir: str) -> None:
-        e = load_table(spark, sf_dir, "embeddings").filter(
-            F.col("vec_id") % 2 == 1
-        ).select("vec_id", km.quantize(F.col("embedding")).alias("qemb"))
-        routed_train_and_write(spark, e, data_dir)
-
-    consts = (
-        _IVFR_MIN_CELLS,
-        _IVFR_TARGET_CELL,
-        _IVFR_ITERS,
-        EMB_DIM,
-        km.FIXED_SCALE,
-        km.ROUTER_SUPER_PROBES,
-        "oddtrain",
-        _DELETE_MOD,
-        _DELETE_RES,
-        "del",
+    return _ensure_lifecycle_root(
+        spark,
+        sf_dir,
+        "ivfr_del",
+        _IVFR_CONSTS + ("oddtrain", _DELETE_MOD, _DELETE_RES, "del"),
+        _ivfr_odd_train_build(spark, sf_dir),
+        _ivfr_even_vectors,
+        routed_assign,
+        delete=True,
     )
-    root = ann_index.ensure(
-        sf_dir, "embeddings.parquet", "ivfr_del", consts, build
-    )
-
-    from projekt_data_engineering_iubh_spark.pipeline import store
-
-    if store.current_version(root) < 2:
-        late = load_table(spark, sf_dir, "embeddings").filter(
-            F.col("vec_id") % 2 == 0
-        )
-        ivfr_append_generation(spark, sf_dir, root, vectors=late)
-    if store.current_version(root) < 3:
-        keys = load_table(spark, sf_dir, "embeddings").filter(
-            F.col("vec_id") % _DELETE_MOD == _DELETE_RES
-        )
-        ivfr_delete_generation(spark, root, keys)
-    return root
 
 
 @register(
@@ -5550,7 +4949,8 @@ def emb_ivf_routed_delete_serve(
     lifecycle (router + cells trained on the odd half, evens appended
     through the frozen router), every vec_id % {_DELETE_MOD} ==
     {_DELETE_RES} was tombstoned as a delete generation
-    (ivfr_delete_generation — FAISS ``remove_ids`` on the router tier).
+    (ann_index.delete_generation — FAISS ``remove_ids`` on the router
+    tier).
     No code row was rewritten at delete time: the commit is an
     O(|keys|) key-set write plus hardlinks of router + centroids +
     codes, and the serve plan is #158's verbatim plus ONE anti-join
@@ -5568,56 +4968,4 @@ def emb_ivf_routed_delete_serve(
     through the kind-dispatching delete_generation
     (streaming/ann_ingest_stream.start_codes_delete_stream)."""
     root = _ensure_ivfr_deleted_index(spark, sf_dir)
-
-    from projekt_data_engineering_iubh_spark.pipeline import store as _st
-
-    return _routed_serve_from_dir(spark, sf_dir, _st.resolve(root))
-
-
-def ivfr_compact(spark: SparkSession, root: str) -> bool:
-    """Compaction for a ROUTED index root, folding BOTH accumulated
-    shapes: O(delta) appends grow the codes artifact by one part-file
-    per trigger, and delete generations (ivfr_delete_generation, r12)
-    accumulate a tombstone key set — either warrants the one real codes
-    rewrite. Commits a version whose codes are exactly the LIVE rows
-    (read_live_codes: tombstones anti-joined away) repartitioned from
-    the source FOOTPRINT, not the source file count (a parquet scan
-    keeps ~one partition per small file, so an unsized rewrite re-emits
-    what it was folding: the r11 lesson ivfpq_compact already encodes),
-    carrying NO tombstones artifact, with the router artifacts
-    hardlinked — the router is immutable across the root's whole
-    lineage, compaction included. Returns False when there is nothing
-    to fold (single codes part-file AND no tombstones). Readers of
-    prior versions keep their snapshot."""
-    from projekt_data_engineering_iubh_spark.pipeline import store
-
-    for _ in range(_APPEND_RETRIES):
-        cur = store.resolve(root)
-        src_codes = os.path.join(cur, "codes")
-        parts = [
-            f for f in os.listdir(src_codes)
-            if not f.startswith(("_", "."))
-        ]
-        has_tomb = _read_tombstones(spark, cur) is not None
-        if len(parts) <= 1 and not has_tomb:
-            return False  # already compact
-        codes_bytes = sum(
-            os.path.getsize(os.path.join(src_codes, f)) for f in parts
-        )
-        n_out = max(1, -(-codes_bytes // _COMPACT_TARGET_BYTES))
-        live = read_live_codes(spark, cur)
-
-        def build(data_dir: str) -> None:
-            _link_routed_artifacts(cur, data_dir)
-            live.repartition(n_out).write.parquet(
-                os.path.join(data_dir, "codes")
-            )
-
-        try:
-            store.commit_snapshot(root, build)
-            return True
-        except store.CommitConflict:
-            continue
-    raise store.CommitConflict(
-        f"compact on {root} lost the snapshot CAS {_APPEND_RETRIES} times"
-    )
+    return _routed_serve_from_dir(spark, sf_dir, store.resolve(root))

@@ -1,18 +1,19 @@
 """Streaming ANN CODES ingest: grow the IVF-PQ serving index from a
 vector stream without ever retraining — the streaming face of the batch
-append lifecycle (plans/vector_queries.ivfpq_append_generation, registry
-#150) and the codes-index twin of streaming/vector_stream.py's
-LSH-bucket tier.
+append lifecycle (pipeline/ann_index.append_generation, registry #150)
+and the codes-index twin of streaming/vector_stream.py's LSH-bucket
+tier.
 
 Per micro-batch (foreachBatch):
 
-    batch vectors → unit-normalized fixed-point quantize (the same
-    km.quantize_normalized every cosine-faithful index uses)
+    batch vectors → anti-join against already-encoded vec_ids
+      → unit-normalized fixed-point quantize (the same
+        km.quantize_normalized every cosine-faithful index uses)
       → coarse argmin + per-subspace residual argmin against the
-        CURRENT snapshot's FROZEN codebooks (shared kernels
-        _ivfpq_residuals / _ivfpq_encode_residuals — byte-identical
-        codes to a from-scratch encode, certified by the #150 oracle)
-      → anti-join against already-encoded vec_ids
+        CURRENT snapshot's FROZEN codebooks (vq.ivfpq_assign over the
+        shared kernels _ivfpq_residuals / _ivfpq_encode_residuals —
+        byte-identical codes to a from-scratch encode, certified by the
+        #150 oracle)
       → non-empty delta: commit current-codes ∪ delta as the next
         snapshot version; empty delta: NO commit.
 
@@ -20,7 +21,7 @@ Exactly-once: Structured Streaming replays a trigger after a crash
 between the commit and the checkpoint write; the anti-join + empty-skip
 makes the replay a no-op (no duplicate codes, no empty version). A
 concurrent appender losing the snapshot CAS is handled INSIDE
-ivfpq_append_generation — it re-resolves the winner's snapshot,
+ann_index.append_generation — it re-resolves the winner's snapshot,
 re-anti-joins the delta, and retries until it commits or the delta is
 empty — so a trigger never checkpoints with its vectors uncommitted
 (the store contract: the caller re-derives and retries on conflict).
@@ -31,7 +32,7 @@ Scale shape: per trigger the cluster work is ONE map-side encode of the
 batch (argmin over driver-literal codebooks — no shuffle) plus an
 O(delta) snapshot publish — existing codes part-files HARDLINK into the
 new version and only the delta rows are written (r10;
-vq._link_or_copy_parquet), so trigger cost never scales with index
+ann_index.link_or_copy_parquet), so trigger cost never scales with index
 size. Training remains a one-off sample-sized job at bootstrap.
 
 Reference scope note: the reference engine has no streaming or vector
@@ -46,7 +47,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from projekt_data_engineering_iubh_spark.operators import kmeans as km
-from projekt_data_engineering_iubh_spark.pipeline import store
+from projekt_data_engineering_iubh_spark.pipeline import ann_index, store
 from projekt_data_engineering_iubh_spark.plans import vector_queries as vq
 
 
@@ -63,64 +64,20 @@ def bootstrap_codes_index(
     base-only snapshot on top of v1..vN — that would publish a version
     whose codes silently DROP every streamed append (the checkpointed
     stream will never re-deliver them). An already-initialized root
-    returns untouched (review finding, r11)."""
-    if store.is_store(root):
-        return root
+    returns untouched (review finding, r11; ann_index.build_once)."""
     qv = base.select(
         "vec_id", km.quantize_normalized(F.col("embedding")).alias("qemb")
     )
-    subdim = vq.EMB_DIM // vq._PQ_COS_M
-    coarse = (
-        km.kmeans_train(qv, vq._KM_K, vq._KM_ITERS, vq.EMB_DIM)
-        .orderBy("cell")
-        .collect()
+    return ann_index.build_once(
+        root, lambda d: vq.ivfpq_train_and_write(spark, qv, d)
     )
-    cells = [r.cell for r in coarse]
-    cqs = [list(r.cq) for r in coarse]
-    res = vq._ivfpq_residuals(qv, cells, cqs).localCheckpoint(eager=True)
-    bcells, books = [], []
-    for m in range(vq._PQ_COS_M):
-        subv = res.select(
-            "vec_id",
-            F.slice("remb", m * subdim + 1, subdim).alias("qemb"),
-        )
-        cents = (
-            km.kmeans_train(subv, vq._PQ_CODES, vq._PQT_ITERS, subdim)
-            .orderBy("cell")
-            .collect()
-        )
-        bcells.append([r.cell for r in cents])
-        books.append([list(r.cq) for r in cents])
-
-    def build(data_dir: str) -> None:
-        spark.createDataFrame(
-            list(zip(cells, map(list, cqs))), "cell int, cq array<bigint>"
-        ).coalesce(1).write.parquet(os.path.join(data_dir, "coarse"))
-        spark.createDataFrame(
-            [
-                (m, code, bcells[m][code], list(books[m][code]))
-                for m in range(vq._PQ_COS_M)
-                for code in range(len(books[m]))
-            ],
-            "m int, code int, cell int, cq array<bigint>",
-        ).coalesce(1).write.parquet(os.path.join(data_dir, "books"))
-        vq._ivfpq_encode_residuals(res, books, subdim).drop(
-            "qemb"
-        ).write.parquet(os.path.join(data_dir, "codes"))
-        vq.write_index_meta(spark, data_dir, vq._PQ_COS_M, vq._PQ_CODES, True)
-
-    try:
-        store.commit_snapshot(root, build)
-    except store.CommitConflict:
-        pass  # concurrent bootstrap won with the identical snapshot
-    return root
 
 
-def _make_append_processor(root: str, policy, generation_fn):
+def _make_append_processor(root: str, policy, assign):
     """Shared foreachBatch body for every append-generation tier: one
-    ``generation_fn(spark, None, root, vectors=batch)`` per non-empty
-    trigger, then (with a ``policy``) maintain_ann_root enforces the
-    compaction thresholds — the footprint check is O(#files) metadata,
+    ``ann_index.append_generation(spark, root, batch, assign)`` per
+    non-empty trigger, then (with a ``policy``) maintain_ann_root
+    enforces the compaction thresholds — the footprint check is O(#files) metadata,
     and compaction, when it fires, publishes through the same store CAS
     every generation uses, so a maintenance fold racing the next
     trigger is just another lost-CAS retry. This is what keeps a
@@ -128,7 +85,7 @@ def _make_append_processor(root: str, policy, generation_fn):
     (tests/test_ann_maintenance.py pins the bound)."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        # the isEmpty pre-probe stays (r14 note): the generation fns are
+        # the isEmpty pre-probe stays (r14 note): generations are
         # exactly-once on an empty delta by themselves, but this probe is
         # one cheap scan AND the bench stream lane's numInputRows counts
         # both source scans — dropping it would halve the lane's
@@ -136,7 +93,9 @@ def _make_append_processor(root: str, policy, generation_fn):
         # driver's BENCH series depends on
         if batch_df.isEmpty():
             return
-        generation_fn(batch_df.sparkSession, None, root, vectors=batch_df)
+        ann_index.append_generation(
+            batch_df.sparkSession, root, batch_df, assign
+        )
         if policy is not None:
             from projekt_data_engineering_iubh_spark.pipeline import (
                 maintenance,
@@ -152,9 +111,7 @@ def _make_append_processor(root: str, policy, generation_fn):
 def make_codes_batch_processor(root: str, policy=None):
     """foreachBatch hook: one IVF-PQ append generation per non-empty
     trigger (see _make_append_processor for the shared contract)."""
-    return _make_append_processor(
-        root, policy, vq.ivfpq_append_generation
-    )
+    return _make_append_processor(root, policy, vq.ivfpq_assign)
 
 
 def start_codes_ingest_stream(
@@ -171,11 +128,11 @@ def start_codes_ingest_stream(
 
 def make_delete_batch_processor(root: str, policy=None):
     """foreachBatch hook for the DELETE stream: one tombstone
-    generation per non-empty trigger, dispatched by root kind
-    (plans/vector_queries.delete_generation: books ⇒ IVF-PQ,
-    cent_super ⇒ routed — r12 extends takedowns to routed roots; a root
-    with NO codes artifact is a band-delta dedup index — signature or
-    vector tier — and takes its tombstones through
+    generation per non-empty trigger: a root with a codes artifact is an
+    ANN root of either kind (pipeline/ann_index.delete_generation — r12
+    extended takedowns to routed roots); a root with NO codes artifact
+    is a band-delta dedup index — signature or vector tier — and takes
+    its tombstones through
     pipeline/delta_index.delete_index_keys, r13 closing the last index
     family without a takedown face). Exactly-once falls out of the
     delete's own idempotency — keys that are unknown or already dead
@@ -191,11 +148,9 @@ def make_delete_batch_processor(root: str, policy=None):
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        from projekt_data_engineering_iubh_spark.pipeline import store
-
         ann = os.path.isdir(os.path.join(store.resolve(root), "codes"))
         if ann:
-            vq.delete_generation(spark, root, batch_df)
+            ann_index.delete_generation(spark, root, batch_df)
         else:
             from projekt_data_engineering_iubh_spark.pipeline import (
                 delta_index,
@@ -243,7 +198,7 @@ def start_codes_delete_stream(
 
 # ---------------------------------------------------------------------------
 # ROUTED-index streaming ingest (r11): grow the #157 routed root from a
-# vector stream — per-trigger ivfr_append_generation, the router frozen
+# vector stream — per-trigger append generations, the router frozen
 # forever (one router in the root's lineage BY CONSTRUCTION)
 # ---------------------------------------------------------------------------
 
@@ -255,24 +210,17 @@ def bootstrap_routed_index(
     router on the BASE corpus and commit snapshot v1 (centroids, supers,
     cent_super, codes) — the one-off training job; every later vector
     arrives through the stream and is routed by these frozen artifacts
-    (plans/vector_queries.ivfr_append_generation).
+    (plans/vector_queries.routed_assign).
 
     IDEMPOTENT on an existing root — same restart contract (and same
     review finding) as bootstrap_codes_index: never re-commit a
     base-only snapshot over streamed appends."""
-    if store.is_store(root):
-        return root
     e = base.select(
         "vec_id", km.quantize(F.col("embedding")).alias("qemb")
     )
-
-    try:
-        store.commit_snapshot(
-            root, lambda d: vq.routed_train_and_write(spark, e, d)
-        )
-    except store.CommitConflict:
-        pass  # concurrent bootstrap won with the identical snapshot
-    return root
+    return ann_index.build_once(
+        root, lambda d: vq.routed_train_and_write(spark, e, d)
+    )
 
 
 def make_routed_batch_processor(root: str, policy=None):
@@ -280,10 +228,10 @@ def make_routed_batch_processor(root: str, policy=None):
     non-empty trigger (route batch through the FROZEN stored router,
     anti-join already-coded ids, O(delta) hardlink commit). Exactly-once
     under replay by the same empty-delta no-op contract as the IVF-PQ
-    tier. With a ``policy``, maintain_ann_root detects the routed root
-    from its artifacts and folds small codes files through ivfr_compact
-    on the file-count threshold (shared body: _make_append_processor)."""
-    return _make_append_processor(root, policy, vq.ivfr_append_generation)
+    tier. With a ``policy``, maintain_ann_root folds small codes files
+    through ann_index.compact on the file-count threshold (shared body:
+    _make_append_processor)."""
+    return _make_append_processor(root, policy, vq.routed_assign)
 
 
 def start_routed_ingest_stream(

@@ -404,18 +404,28 @@ def test_multi_generation_append_chain(spark, tmp_path, monkeypatch):
     # v1: train+encode [0,100) — reuse the entry's build via ensure()
     # with the append suppressed by monkeypatching the generation call
     called = {}
-    real_gen = vq.ivfpq_append_generation
+    from pyspark.sql import functions as F
+
+    from projekt_data_engineering_iubh_spark.catalog import load_table, spread
+
+    real_gen = ai.append_generation
     monkeypatch.setattr(
-        vq, "ivfpq_append_generation",
+        ai, "append_generation",
         lambda *a, **kw: called.setdefault("skip", True),
     )
     chain_root = vq._ensure_ivfpq_appended_index(spark, SF)
-    monkeypatch.setattr(vq, "ivfpq_append_generation", real_gen)
+    monkeypatch.setattr(ai, "append_generation", real_gen)
     assert store._committed_versions(chain_root) == [1]
 
-    real_gen(spark, SF, chain_root, lo=100, hi=300)
+    emb = spread(load_table(spark, SF, "embeddings"))
+    real_gen(
+        spark, chain_root,
+        emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 300)),
+        vq.ivfpq_assign,
+    )
     assert store._committed_versions(chain_root) == [1, 2]
-    real_gen(spark, SF, chain_root, lo=300)
+    real_gen(spark, chain_root, emb.filter(F.col("vec_id") >= 300),
+             vq.ivfpq_assign)
     assert store._committed_versions(chain_root) == [1, 2, 3]
 
     def artifact(name):
@@ -506,11 +516,16 @@ def test_append_retries_through_commit_conflict(spark, tmp_path, monkeypatch):
 
     # fresh root at v1 only (suppress the entry's own append)
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx2"))
-    real_gen = vq.ivfpq_append_generation
-    monkeypatch.setattr(vq, "ivfpq_append_generation", lambda *a, **k: None)
+    from pyspark.sql import functions as F
+
+    from projekt_data_engineering_iubh_spark.catalog import load_table, spread
+
+    real_gen = ann_index.append_generation
+    monkeypatch.setattr(ann_index, "append_generation", lambda *a, **k: None)
     root = vq._ensure_ivfpq_appended_index(spark, SF)
-    monkeypatch.setattr(vq, "ivfpq_append_generation", real_gen)
+    monkeypatch.setattr(ann_index, "append_generation", real_gen)
     assert store._committed_versions(root) == [1]
+    emb = spread(load_table(spark, SF, "embeddings"))
 
     real_commit = store.commit_snapshot
     state = {"conflicted": False}
@@ -520,14 +535,20 @@ def test_append_retries_through_commit_conflict(spark, tmp_path, monkeypatch):
             state["conflicted"] = True
             # the concurrent winner lands [100, 200) first (its own
             # commit passes through — the flag is already set) ...
-            real_gen(spark, SF, r, lo=100, hi=200)
+            real_gen(
+                spark, r,
+                emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 200)),
+                vq.ivfpq_assign,
+            )
             # ... and our CAS loses
             raise store.CommitConflict("simulated lost CAS")
         return real_commit(r, build)
 
     monkeypatch.setattr(store, "commit_snapshot", racing_commit)
     try:
-        assert real_gen(spark, SF, root, lo=100) is True
+        assert real_gen(
+            spark, root, emb.filter(F.col("vec_id") >= 100), vq.ivfpq_assign
+        ) is True
     finally:
         monkeypatch.setattr(store, "commit_snapshot", real_commit)
 
@@ -558,10 +579,10 @@ def test_append_delta_dedups_within_one_batch(spark, tmp_path, monkeypatch):
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     vq._IVFPQ_CLIENT_CACHE.clear()
-    real_gen = vq.ivfpq_append_generation
-    monkeypatch.setattr(vq, "ivfpq_append_generation", lambda *a, **k: None)
+    real_gen = ann_index.append_generation
+    monkeypatch.setattr(ann_index, "append_generation", lambda *a, **k: None)
     root = vq._ensure_ivfpq_appended_index(spark, SF)
-    monkeypatch.setattr(vq, "ivfpq_append_generation", real_gen)
+    monkeypatch.setattr(ann_index, "append_generation", real_gen)
 
     late = (
         load_table(spark, SF, "embeddings")
@@ -569,7 +590,7 @@ def test_append_delta_dedups_within_one_batch(spark, tmp_path, monkeypatch):
         .select("vec_id", "embedding")
     )
     doubled = late.unionByName(late)  # overlapping files, one trigger
-    assert real_gen(spark, SF, root, vectors=doubled) is True
+    assert real_gen(spark, root, doubled, vq.ivfpq_assign) is True
     ids = [
         r.vec_id
         for r in spark.read.parquet(
@@ -590,9 +611,19 @@ def test_append_refuses_raw_metric_roots(spark, tmp_path, monkeypatch):
     legacy root without a meta artifact."""
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
     vq._IVFPQ_CLIENT_CACHE.clear()
+    from pyspark.sql import functions as F
+
+    from projekt_data_engineering_iubh_spark.catalog import load_table, spread
+
     raw_root = vq._ensure_ivfpq_index(spark, SF, normalized=False)
     with pytest.raises(ValueError, match="not an appendable"):
-        vq.ivfpq_append_generation(spark, SF, raw_root, lo=100)
+        ann_index.append_generation(
+            spark, raw_root,
+            spread(load_table(spark, SF, "embeddings")).filter(
+                F.col("vec_id") >= 100
+            ),
+            vq.ivfpq_assign,
+        )
 
 
 def test_append_derives_geometry_from_meta(spark, tmp_path, monkeypatch):
@@ -615,7 +646,9 @@ def test_append_derives_geometry_from_meta(spark, tmp_path, monkeypatch):
         .filter(F.col("vec_id") < 20)
         .select((F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding")
     )
-    assert vq.ivfpq_append_generation(spark, SF, root, vectors=fresh) is True
+    assert ann_index.append_generation(
+        spark, root, fresh, vq.ivfpq_assign
+    ) is True
     codes = spark.read.parquet(_os.path.join(store.resolve(root), "codes"))
     assert "c3" in codes.columns and "c4" not in codes.columns
     new = codes.filter(codes.vec_id >= 10_000_000).collect()
@@ -655,7 +688,10 @@ def test_delete_readd_compact_lifecycle(spark, tmp_path, monkeypatch):
         )
 
     def live_ids(snap):
-        return {r.vec_id for r in vq.read_live_codes(spark, snap).collect()}
+        return {
+            r.vec_id
+            for r in ann_index.read_live_codes(spark, snap).collect()
+        }
 
     all_rows = codes_rows(v2)
     all_ids = {r[0] for r in all_rows}
@@ -663,7 +699,7 @@ def test_delete_readd_compact_lifecycle(spark, tmp_path, monkeypatch):
 
     # (1) delete generation: codes untouched, tombstones appear
     keys = spark.createDataFrame([(i,) for i in dead], "vec_id long")
-    assert vq.ivfpq_delete_generation(spark, root, keys) is True
+    assert ann_index.delete_generation(spark, root, keys) is True
     v3 = store.resolve(root)
     assert v3 != v2
     assert codes_rows(v3) == all_rows  # no code row rewritten
@@ -675,7 +711,7 @@ def test_delete_readd_compact_lifecycle(spark, tmp_path, monkeypatch):
     again = spark.createDataFrame(
         [(dead[0],), (10_000_000,)], "vec_id long"
     )
-    assert vq.ivfpq_delete_generation(spark, root, again) is False
+    assert ann_index.delete_generation(spark, root, again) is False
     assert store.resolve(root) == v3
 
     # (3) re-add resurrects: append the first 5 dead ids again
@@ -684,7 +720,9 @@ def test_delete_readd_compact_lifecycle(spark, tmp_path, monkeypatch):
         .filter(F.col("vec_id").isin([int(i) for i in dead[:5]]))
         .select("vec_id", "embedding")
     )
-    assert vq.ivfpq_append_generation(spark, None, root, vectors=readd) is True
+    assert ann_index.append_generation(
+        spark, root, readd, vq.ivfpq_assign
+    ) is True
     v4 = store.resolve(root)
     assert live_ids(v4) == all_ids - set(dead[5:])
     # resurrected codes equal their original encode (frozen books)
@@ -698,13 +736,13 @@ def test_delete_readd_compact_lifecycle(spark, tmp_path, monkeypatch):
 
     # (4) compact: tombstones folded away, serving view unchanged
     before = live_ids(v4)
-    assert vq.ivfpq_compact(spark, root) is True
+    assert ann_index.compact(spark, root) is True
     v5 = store.resolve(root)
     assert not _os.path.isdir(_os.path.join(v5, "tombstones"))
     assert {r[0] for r in codes_rows(v5)} == before
     assert live_ids(v5) == before
     # compacting a compact index is a no-op
-    assert vq.ivfpq_compact(spark, root) is False
+    assert ann_index.compact(spark, root) is False
     assert store.resolve(root) == v5
 
 
@@ -743,7 +781,7 @@ def test_generation_commits_are_o_delta_hardlinks(spark, tmp_path, monkeypatch):
     fresh = emb.limit(3).select(
         (F.col("vec_id") + top + 1).alias("vec_id"), "embedding"
     )
-    assert vq.ivfpq_append_generation(spark, None, root, vectors=fresh)
+    assert ann_index.append_generation(spark, root, fresh, vq.ivfpq_assign)
     v3 = store.resolve(root)
     v3_inodes = _inodes(os.path.join(v3, "codes"))
     assert v2_inodes <= v3_inodes, "append rewrote existing codes files"
@@ -755,22 +793,22 @@ def test_generation_commits_are_o_delta_hardlinks(spark, tmp_path, monkeypatch):
 
     # (2) delete generation: codes inode-identical, tombstones linked
     dead = spark.createDataFrame([(0,), (2,)], "vec_id long")
-    assert vq.ivfpq_delete_generation(spark, root, dead)
+    assert ann_index.delete_generation(spark, root, dead)
     v4 = store.resolve(root)
     assert _inodes(os.path.join(v4, "codes")) == v3_inodes
     t4 = _inodes(os.path.join(v4, "tombstones"))
     more = spark.createDataFrame([(4,)], "vec_id long")
-    assert vq.ivfpq_delete_generation(spark, root, more)
+    assert ann_index.delete_generation(spark, root, more)
     v5 = store.resolve(root)
     assert t4 <= _inodes(os.path.join(v5, "tombstones"))
     assert _inodes(os.path.join(v5, "codes")) == v3_inodes
 
     # (3) force-compact with no tombstones: small files collapse
-    assert vq.ivfpq_compact(spark, root)  # folds the tombstones first
+    assert ann_index.compact(spark, root)  # folds the tombstones first
     v6 = store.resolve(root)
-    assert vq.ivfpq_compact(spark, root) is False  # nothing to fold
+    assert ann_index.compact(spark, root) is False  # nothing to fold
     before = _rows(spark.read.parquet(os.path.join(v6, "codes")))
-    assert vq.ivfpq_compact(spark, root, force=True)
+    assert ann_index.compact(spark, root, force=True)
     v7 = store.resolve(root)
     assert _rows(spark.read.parquet(os.path.join(v7, "codes"))) == before
     assert not (_inodes(os.path.join(v7, "codes")) & v3_inodes)
@@ -808,23 +846,25 @@ def test_delta_file_growth_is_bounded(spark, tmp_path, monkeypatch):
         .select((F.col("vec_id") + top + 1).alias("vec_id"), "embedding")
         .repartition(8)
     )
-    assert vq.ivfpq_append_generation(spark, None, root, vectors=fresh)
+    assert ann_index.append_generation(spark, root, fresh, vq.ivfpq_assign)
     after = _part_files(os.path.join(store.resolve(root), "codes"))
     assert len(after) == len(before) + 1
 
     # (2) tombstone generations fold at the threshold
     live = sorted(
         r.vec_id
-        for r in vq.read_live_codes(spark, store.resolve(root)).collect()
+        for r in ann_index.read_live_codes(
+            spark, store.resolve(root)
+        ).collect()
     )
-    n_gens = vq._TOMBSTONE_FOLD_FILES + 3
+    n_gens = ann_index._TOMBSTONE_FOLD_FILES + 3
     for i in range(n_gens):
         keys = spark.createDataFrame([(int(live[i]),)], "vec_id long")
-        assert vq.ivfpq_delete_generation(spark, root, keys)
+        assert ann_index.delete_generation(spark, root, keys)
         n_tomb = len(
             _part_files(os.path.join(store.resolve(root), "tombstones"))
         )
-        assert n_tomb <= vq._TOMBSTONE_FOLD_FILES, (
+        assert n_tomb <= ann_index._TOMBSTONE_FOLD_FILES, (
             f"gen {i}: {n_tomb} tombstone files"
         )
     # every deleted key is still dead after the folds
@@ -888,7 +928,7 @@ def test_routed_append_is_o_delta_with_frozen_router(
     late = load_table(spark, SF, "embeddings").filter(
         F.col("vec_id") % 2 == 0
     )
-    assert not vq.ivfr_append_generation(spark, SF, root, vectors=late)
+    assert not ann_index.append_generation(spark, root, late, vq.routed_assign)
     assert store.current_version(root) == 2
 
     # the grown index covers the whole corpus, one code row per vector
@@ -901,7 +941,8 @@ def test_routed_append_is_o_delta_with_frozen_router(
 def test_routed_compact_folds_small_files_router_intact(
     spark, tmp_path, monkeypatch
 ):
-    """ivfr_compact: after a chain of O(delta) appends the codes dir
+    """ann_index.compact on a routed root: after a chain of O(delta)
+    appends the codes dir
     holds one file per trigger; compaction folds them into a BOUNDED
     count (sized from bytes, not source file count), the router
     artifacts stay hardlinked (immutable across the lineage), the
@@ -919,7 +960,9 @@ def test_routed_compact_folds_small_files_router_intact(
             (F.col("vec_id") + top + 1 + 10 * i).alias("vec_id"),
             "embedding",
         )
-        assert vq.ivfr_append_generation(spark, SF, root, vectors=fresh)
+        assert ann_index.append_generation(
+            spark, root, fresh, vq.routed_assign
+        )
     cur = store.resolve(root)
     before_files = _part_files(os.path.join(cur, "codes"))
     assert len(before_files) >= 4
@@ -929,7 +972,7 @@ def test_routed_compact_folds_small_files_router_intact(
         for f in _part_files(os.path.join(cur, "supers"))
     }
 
-    assert vq.ivfr_compact(spark, root)
+    assert ann_index.compact(spark, root)
     cur2 = store.resolve(root)
     after_files = _part_files(os.path.join(cur2, "codes"))
     assert len(after_files) == 1  # tiny corpus: one ~128 MiB bucket
@@ -940,20 +983,20 @@ def test_routed_compact_folds_small_files_router_intact(
     for f, ino in sup_ino.items():
         assert os.stat(os.path.join(cur2, "supers", f)).st_ino == ino
 
-    assert not vq.ivfr_compact(spark, root)  # already compact: no-op
+    assert not ann_index.compact(spark, root)  # already compact: no-op
 
 
 def test_routed_delete_readd_compact_lifecycle(spark, tmp_path, monkeypatch):
     """The FAISS remove_ids lifecycle on the ROUTED tier (r12 — before
     this, a takedown against a routed root meant a full rebuild):
-    (1) ivfr_delete_generation tombstones keys WITHOUT touching any code
+    (1) ann_index.delete_generation tombstones keys WITHOUT touching any code
     row (codes byte-identical across the commit, tombstones artifact
     appears, router artifacts hardlinked); (2) the routed serving view
     (read_live_codes) excludes tombstoned ids the moment the version
     commits while a reader holding the PRIOR version still sees them;
     (3) re-appending a tombstoned id RESURRECTS it through the FROZEN
     router (tombstone dropped, code row identical to its original
-    routing); (4) ivfr_compact folds tombstones into a clean snapshot
+    routing); (4) ann_index.compact folds tombstones into a clean snapshot
     with an unchanged serving view; (5) unknown/already-dead keys
     commit NOTHING (idempotent under replay)."""
     import os as _os
@@ -973,7 +1016,10 @@ def test_routed_delete_readd_compact_lifecycle(spark, tmp_path, monkeypatch):
         )
 
     def live_ids(snap):
-        return {r.vec_id for r in vq.read_live_codes(spark, snap).collect()}
+        return {
+            r.vec_id
+            for r in ann_index.read_live_codes(spark, snap).collect()
+        }
 
     all_rows = codes_rows(v2)
     all_ids = {r[0] for r in all_rows}
@@ -982,7 +1028,7 @@ def test_routed_delete_readd_compact_lifecycle(spark, tmp_path, monkeypatch):
     # (1) delete generation: codes untouched, tombstones appear,
     # router artifacts inode-identical (nothing rewritten)
     keys = spark.createDataFrame([(i,) for i in dead], "vec_id long")
-    assert vq.ivfr_delete_generation(spark, root, keys) is True
+    assert ann_index.delete_generation(spark, root, keys) is True
     v3 = store.resolve(root)
     assert v3 != v2
     assert codes_rows(v3) == all_rows  # no code row rewritten
@@ -996,7 +1042,7 @@ def test_routed_delete_readd_compact_lifecycle(spark, tmp_path, monkeypatch):
 
     # (5) idempotency: unknown + already-dead keys commit nothing
     again = spark.createDataFrame([(dead[0],), (10_000_000,)], "vec_id long")
-    assert vq.ivfr_delete_generation(spark, root, again) is False
+    assert ann_index.delete_generation(spark, root, again) is False
     assert store.resolve(root) == v3
 
     # (3) re-add resurrects through the frozen router
@@ -1005,7 +1051,9 @@ def test_routed_delete_readd_compact_lifecycle(spark, tmp_path, monkeypatch):
         .filter(F.col("vec_id").isin([int(i) for i in dead[:5]]))
         .select("vec_id", "embedding")
     )
-    assert vq.ivfr_append_generation(spark, None, root, vectors=readd) is True
+    assert ann_index.append_generation(
+        spark, root, readd, vq.routed_assign
+    ) is True
     v4 = store.resolve(root)
     assert live_ids(v4) == all_ids - set(dead[5:])
     orig = {r[0]: r for r in all_rows}
@@ -1017,20 +1065,20 @@ def test_routed_delete_readd_compact_lifecycle(spark, tmp_path, monkeypatch):
 
     # (4) compact: tombstones folded away, serving view unchanged
     before = live_ids(v4)
-    assert vq.ivfr_compact(spark, root) is True
+    assert ann_index.compact(spark, root) is True
     v5 = store.resolve(root)
     assert not _os.path.isdir(_os.path.join(v5, "tombstones"))
     assert {r[0] for r in codes_rows(v5)} == before
     assert live_ids(v5) == before
     # compacting a compact root is a no-op
-    assert vq.ivfr_compact(spark, root) is False
+    assert ann_index.compact(spark, root) is False
     assert store.resolve(root) == v5
 
 
 def test_delete_generation_dispatches_by_root_kind(
     spark, tmp_path, monkeypatch
 ):
-    """vq.delete_generation (the takedown stream's entry point) must
+    """ann_index.delete_generation (the takedown stream's entry point) must
     pick the tier from the stored artifacts: a routed root gets a
     tombstone generation with its router hardlinked; the same call
     shape works against an IVF-PQ root (covered live by the delete
@@ -1039,11 +1087,13 @@ def test_delete_generation_dispatches_by_root_kind(
     root = vq._ensure_ivfr_appended_index(spark, SF)
     cur = store.resolve(root)
     some = spark.read.parquet(os.path.join(cur, "codes")).limit(7)
-    assert vq.delete_generation(spark, root, some.select("vec_id")) is True
+    assert ann_index.delete_generation(
+        spark, root, some.select("vec_id")
+    ) is True
     cur2 = store.resolve(root)
     assert os.path.isdir(os.path.join(cur2, "tombstones"))
     dead = {r.vec_id for r in some.collect()}
     live = {
-        r.vec_id for r in vq.read_live_codes(spark, cur2).collect()
+        r.vec_id for r in ann_index.read_live_codes(spark, cur2).collect()
     }
     assert dead.isdisjoint(live)

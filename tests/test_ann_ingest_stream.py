@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from projekt_data_engineering_iubh_spark.catalog import load_table
 from projekt_data_engineering_iubh_spark.operators import kmeans as km
-from projekt_data_engineering_iubh_spark.pipeline import store
+from projekt_data_engineering_iubh_spark.pipeline import ann_index, store
 from projekt_data_engineering_iubh_spark.plans import vector_queries as vq
 from projekt_data_engineering_iubh_spark.streaming import (
     ann_ingest_stream as ais,
@@ -175,7 +175,7 @@ def test_delete_stream_tombstones_exactly_once(spark, tmp_path):
     def live_ids():
         return {
             r.vec_id
-            for r in vq.read_live_codes(
+            for r in ann_index.read_live_codes(
                 spark, store.resolve(root)
             ).collect()
         }
@@ -227,7 +227,7 @@ def test_delete_stream_tombstones_exactly_once(spark, tmp_path):
         qd.stop()
 
     # compact folds the tombstones away; serving view unchanged
-    assert vq.ivfpq_compact(spark, root) is True
+    assert ann_index.compact(spark, root) is True
     assert live_ids() == final
 
 
@@ -316,7 +316,7 @@ def test_bootstrap_is_idempotent_on_grown_roots(spark, tmp_path):
 
     pq_root = str(tmp_path / "pq_root")
     ais.bootstrap_codes_index(spark, base, pq_root)
-    assert vq.ivfpq_append_generation(spark, None, pq_root, vectors=late)
+    assert ann_index.append_generation(spark, pq_root, late, vq.ivfpq_assign)
     v = store.current_version(pq_root)
     ais.bootstrap_codes_index(spark, base, pq_root)  # restart sequence
     assert store.current_version(pq_root) == v
@@ -327,7 +327,7 @@ def test_bootstrap_is_idempotent_on_grown_roots(spark, tmp_path):
 
     r_root = str(tmp_path / "r_root")
     ais.bootstrap_routed_index(spark, base, r_root)
-    assert vq.ivfr_append_generation(spark, None, r_root, vectors=late)
+    assert ann_index.append_generation(spark, r_root, late, vq.routed_assign)
     v = store.current_version(r_root)
     ais.bootstrap_routed_index(spark, base, r_root)
     assert store.current_version(r_root) == v
@@ -340,12 +340,12 @@ def test_bootstrap_is_idempotent_on_grown_roots(spark, tmp_path):
 def test_routed_delete_stream_grow_takedown_replay_compact(spark, tmp_path):
     """The takedown stream against a ROUTED root (r12): the SAME
     start_codes_delete_stream wiring dispatches to the routed tombstone
-    generation (vq.delete_generation kind-detects from the artifacts),
+    generation (ann_index.delete_generation is kind-free),
     so one delete-stream deployment serves both index tiers. Drive the
     full streaming lifecycle live: grow through the routed ingest,
     takedown keys spanning both generations, replay the drop (commits
     nothing), then the maintenance policy's tombstone-bytes trigger
-    folds the tombstones away through ivfr_compact from INSIDE a
+    folds the tombstones away through ann_index.compact from INSIDE a
     trigger."""
     from projekt_data_engineering_iubh_spark.pipeline import maintenance
 
@@ -380,7 +380,9 @@ def test_routed_delete_stream_grow_takedown_replay_compact(spark, tmp_path):
     def live_ids():
         return {
             r.vec_id
-            for r in vq.read_live_codes(spark, store.resolve(root)).collect()
+            for r in ann_index.read_live_codes(
+                spark, store.resolve(root)
+            ).collect()
         }
 
     try:

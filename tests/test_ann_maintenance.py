@@ -18,7 +18,11 @@ import os
 from pyspark.sql import functions as F
 
 from projekt_data_engineering_iubh_spark.catalog import load_table
-from projekt_data_engineering_iubh_spark.pipeline import maintenance, store
+from projekt_data_engineering_iubh_spark.pipeline import (
+    ann_index,
+    maintenance,
+    store,
+)
 from projekt_data_engineering_iubh_spark.plans import vector_queries as vq
 from projekt_data_engineering_iubh_spark.streaming import (
     ann_ingest_stream as ais,
@@ -104,7 +108,7 @@ def test_delete_tombstone_bytes_trigger_folds(spark, tmp_path):
         ), f"trigger {i} left tombstones behind"
         live = {
             r.vec_id
-            for r in vq.read_live_codes(
+            for r in ann_index.read_live_codes(
                 spark, store.resolve(root)
             ).collect()
         }
@@ -134,7 +138,7 @@ def test_tombstone_trigger_wins_over_file_trigger(spark, tmp_path):
     ais.make_codes_batch_processor(root)(
         embs.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 200)), 0
     )
-    vq.ivfpq_delete_generation(
+    ann_index.delete_generation(
         spark, root, spark.createDataFrame([(0,), (1,)], "vec_id long")
     )
     before = store._committed_versions(root)
@@ -245,7 +249,7 @@ def test_maintain_routed_root_folds_on_file_count(
     spark, tmp_path, monkeypatch
 ):
     """maintain_ann_root on a ROUTED root (r11 #157-#159): the same
-    policy object drives ivfr_compact when the codes file count crosses
+    policy object drives ann_index.compact when the codes file count crosses
     the threshold — kind detection from the artifacts present, no
     caller flag — and is a metadata-only no-op under it."""
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path / "idx"))
@@ -257,7 +261,9 @@ def test_maintain_routed_root_folds_on_file_count(
             (F.col("vec_id") + top + 1 + 10 * i).alias("vec_id"),
             "embedding",
         )
-        assert vq.ivfr_append_generation(spark, SF, root, vectors=fresh)
+        assert ann_index.append_generation(
+            spark, root, fresh, vq.routed_assign
+        )
     assert _codes_files(root) == 4  # v1 + three append deltas
 
     res = maintenance.maintain_ann_root(

@@ -276,7 +276,7 @@ class TestTakedownStreamDispatch:
 
     def test_processor_still_routes_ann_roots(self, spark, tmp_path):
         """The ANN dispatch is untouched: an IVF-PQ root still takes
-        vq.delete_generation tombstones through the same processor."""
+        ann_index.delete_generation tombstones through the same processor."""
         root = str(tmp_path / "pq_root")
         embs = (
             load_table(spark, SF, "embeddings")
@@ -284,13 +284,11 @@ class TestTakedownStreamDispatch:
             .select("vec_id", "embedding")
         )
         ais.bootstrap_codes_index(spark, embs, root)
-        from projekt_data_engineering_iubh_spark.plans import (
-            vector_queries as vq,
-        )
+        from projekt_data_engineering_iubh_spark.pipeline import ann_index
 
         before = {
             r.vec_id
-            for r in vq.read_live_codes(spark, store.resolve(root))
+            for r in ann_index.read_live_codes(spark, store.resolve(root))
             .select("vec_id")
             .collect()
         }
@@ -298,7 +296,7 @@ class TestTakedownStreamDispatch:
         proc(spark.createDataFrame([(3,), (4,)], "vec_id bigint"), 0)
         after = {
             r.vec_id
-            for r in vq.read_live_codes(spark, store.resolve(root))
+            for r in ann_index.read_live_codes(spark, store.resolve(root))
             .select("vec_id")
             .collect()
         }

@@ -38,8 +38,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from projekt_data_engineering_iubh_spark.catalog import load_table
-from projekt_data_engineering_iubh_spark.pipeline import maintenance, store
-from projekt_data_engineering_iubh_spark.plans import vector_queries as vq
+from projekt_data_engineering_iubh_spark.pipeline import (
+    ann_index,
+    maintenance,
+    store,
+)
 from projekt_data_engineering_iubh_spark.streaming import (
     ann_ingest_stream as ais,
     neardup_stream as nd,
@@ -229,12 +232,12 @@ def _ann_adapter(name, bootstrap_fn, proc_factory, compact_fn):
     ad.rebootstrap = rebootstrap
     ad.view_keys = lambda spark, ctx: [
         (r.vec_id,)
-        for r in vq.read_live_codes(spark, store.resolve(ctx["root"]))
+        for r in ann_index.read_live_codes(spark, store.resolve(ctx["root"]))
         .select("vec_id")
         .collect()
     ]
     ad.fold = lambda spark, ctx: compact_fn(spark, ctx["root"])
-    ad.delete = lambda spark, ctx, ids: vq.delete_generation(
+    ad.delete = lambda spark, ctx, ids: ann_index.delete_generation(
         spark, ctx["root"],
         spark.createDataFrame([(i,) for i in ids], "vec_id bigint"),
     )
@@ -250,13 +253,13 @@ def _adapters():
         "ivfpq",
         ais.bootstrap_codes_index,
         ais.make_codes_batch_processor,
-        lambda spark, root: vq.ivfpq_compact(spark, root, force=True),
+        lambda spark, root: ann_index.compact(spark, root, force=True),
     )
     routed = _ann_adapter(
         "routed",
         ais.bootstrap_routed_index,
         ais.make_routed_batch_processor,
-        vq.ivfr_compact,
+        ann_index.compact,
     )
     return [nd_ad, vs_ad, ivfpq, routed]
 

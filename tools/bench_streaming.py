@@ -368,9 +368,6 @@ def bench_deletes(spark, work: Path, sf_dir: str, batches: int) -> dict:
     from pyspark.sql import Window
 
     from projekt_data_engineering_iubh_spark.catalog import load_table
-    from projekt_data_engineering_iubh_spark.plans import (
-        vector_queries as vq,
-    )
     from projekt_data_engineering_iubh_spark.streaming.ann_ingest_stream import (
         bootstrap_codes_index,
         start_codes_delete_stream,
@@ -419,9 +416,9 @@ def bench_deletes(spark, work: Path, sf_dir: str, batches: int) -> dict:
         rows, secs, trig = _progress_stats(q)
     finally:
         q.stop()
-    from projekt_data_engineering_iubh_spark.pipeline import store
+    from projekt_data_engineering_iubh_spark.pipeline import ann_index, store
 
-    live = vq.read_live_codes(spark, store.resolve(root)).count()
+    live = ann_index.read_live_codes(spark, store.resolve(root)).count()
     return {
         "tier": "delete_stream",
         "sf_dir": sf_dir,

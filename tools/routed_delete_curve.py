@@ -8,12 +8,12 @@ built, measuring per step:
 * the delete-generation commit wall (expected O(|keys|) + hardlinks —
   NO growth with index size);
 * the warm serve wall through the tombstone-honoring plan
-  (_routed_serve_from_dir → read_live_codes anti-join) — expected
-  flat-ish while the key set stays broadcast-sized;
+  (_routed_serve_from_dir → ann_index.read_live_codes anti-join) —
+  expected flat-ish while the key set stays broadcast-sized;
 * the tombstone artifact bytes (the anti-join's broadcast build side);
 
-then runs ivfr_compact once and re-measures: post-compact the serve is
-a bare codes scan over survivors only.
+then runs ann_index.compact once and re-measures: post-compact the serve
+is a bare codes scan over survivors only.
 
 Deletes are CUMULATIVE (vec_id % 10 < 1 ⊂ < 3 ⊂ < 5 — a corpus
 shrinking over time), each step ONE delete generation. The plain
@@ -62,7 +62,7 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from projekt_data_engineering_iubh_spark.catalog import load_table
-    from projekt_data_engineering_iubh_spark.pipeline import store
+    from projekt_data_engineering_iubh_spark.pipeline import ann_index, store
     from projekt_data_engineering_iubh_spark.plans import (
         vector_queries as vq,
     )
@@ -101,7 +101,7 @@ def main() -> int:
     for tenth in args.tenths:
         keys = e.filter(F.col("vec_id") % 10 < tenth).select("vec_id")
         t0 = time.perf_counter()
-        committed = vq.ivfr_delete_generation(spark, args.root, keys)
+        committed = ann_index.delete_generation(spark, args.root, keys)
         t_del = round(time.perf_counter() - t0, 2)
         cur = store.resolve(args.root)
         walls = serve_walls()
@@ -124,7 +124,7 @@ def main() -> int:
         )
 
     t0 = time.perf_counter()
-    folded = vq.ivfr_compact(spark, args.root)
+    folded = ann_index.compact(spark, args.root)
     t_compact = round(time.perf_counter() - t0, 2)
     cur = store.resolve(args.root)
     walls = serve_walls()
