@@ -1,7 +1,7 @@
 # Convenience targets. The test suite itself is plain pytest; these wrap
 # the environment-gated flows that need services or non-default env.
 
-.PHONY: test test-full perfbench bench verify postgres-up \
+.PHONY: test test-full perfbench cds bench verify postgres-up \
         postgres-live-test postgres-down postgres-local-up \
         postgres-local-test postgres-local-down
 
@@ -33,6 +33,18 @@ perfbench:
 	for w in machine llm_curation; do \
 	  python3 perfbench/run.py --workload $$w --seed 1 --seconds 1 --tiny \
 	  | tail -n 1 | python3 -c $(CHECK_CORRECT) || exit 1; \
+	done
+
+# Provision the driver's class-data-sharing archive for the session
+# default heap (32g) and perfbench's (1g); their compressed-oops modes
+# differ, so each has its own archive. Nothing needs this: a session
+# without an archive dumps one at exit. A run on an existing archive
+# maps it and reports what a cold first query still pays.
+CDS_HEAPS ?= 32g 1g
+
+cds:
+	for h in $(CDS_HEAPS); do \
+	  SPARK_GRAFT_DRIVER_MEM=$$h python tools/cds_warmup.py || exit 1; \
 	done
 
 bench:

@@ -203,36 +203,6 @@ def signatures_from(d: DataFrame) -> DataFrame:
     )
 
 
-# session-scoped shared-signature cache (r7 headroom #2): within one
-# session, docs_minhash_lsh_pairs, docs_dedup_apply, docs_dedup_clusters*
-# and the occupancy probe each recompute the signature pipeline (~0.7 s at
-# sf0.1). Opt-in because a persisted intermediate is a semantics-VISIBLE
-# materialization: it holds executor memory/disk until invalidated and pins
-# the signature data of a table version (a concurrent overwrite of the
-# parquet dir mid-session would not be seen by a query that hits the
-# cache — exactly the snapshot behavior a cache implies, but the caller
-# must opt into it). Keyed like the probe memo by (app, path, mtime,
-# constants); a Spark re-write bumps the dir mtime, and the superseded
-# entry is unpersisted on replacement.
-_SIG_SHARE_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _share_signatures(spark: SparkSession) -> bool:
-    """True when the session opted into the shared-signature cache via
-    ``spark.graft.shareSignatures`` (runtime-settable conf) or the
-    ``SPARK_GRAFT_SHARE_SIGNATURES`` environment variable."""
-    import os
-
-    try:
-        v = spark.conf.get(
-            "spark.graft.shareSignatures",
-            os.environ.get("SPARK_GRAFT_SHARE_SIGNATURES", "false"),
-        )
-    except Exception:
-        v = os.environ.get("SPARK_GRAFT_SHARE_SIGNATURES", "false")
-    return str(v).lower() in ("1", "true", "yes")
-
-
 def _signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Signatures of the driver ``documents`` table (see signatures_from).
 
@@ -240,41 +210,8 @@ def _signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange inside — but that exchange is what AQE reuses across the
     two sides of the LSH band self-join, and eliding it also drops
     map-side partial aggregation of the exploded rows.
-
-    With the shared-signature option on (see :func:`_share_signatures`)
-    the result frame is persisted (MEMORY_AND_DISK) and memoized per
-    (application, table path, dir mtime, constants): consumers after the
-    first read the in-memory columnar signatures instead of re-running
-    tokenize→shingle→hash→min-aggregate. Default off — the cache is a
-    visible materialization (see the cache comment above).
     """
-    sig = signatures_from(spread(load_table(spark, sf_dir, "documents")))
-    if not _share_signatures(spark):
-        return sig
-    import os
-
-    from pyspark import StorageLevel
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        app = spark.sparkContext.applicationId
-        base = (app, os.path.abspath(path), _MINHASH_K, _LSH_BANDS)
-        key = base + (os.path.getmtime(path),)
-    except OSError:
-        return sig
-    hit = _SIG_SHARE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    # drop a superseded version of the same (app, path): its parquet part
-    # files are gone, keeping the stale persist pinned wastes memory
-    for k in [k for k in _SIG_SHARE_CACHE if k[:-1] == base]:
-        try:
-            _SIG_SHARE_CACHE.pop(k).unpersist()
-        except Exception:
-            pass
-    sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
-    _SIG_SHARE_CACHE[key] = sig
-    return sig
+    return signatures_from(spread(load_table(spark, sf_dir, "documents")))
 
 
 @register("docs_minhash_signatures", oracle=_MINHASH_SQL, driver=False)
@@ -359,7 +296,7 @@ def _lsh_pairs(
     signature explodes IT (min over the distinct set == min over the
     shingle multiset, since every hash is a pure function of the
     shingle — signatures are bit-identical, pinned by
-    tests/test_signature_cache.py::test_shset_signatures_identical),
+    tests/test_shset_signatures.py::test_shset_signatures_identical),
     and the set rides the band rows into the self-join, so the pair
     rows come out carrying (set_a, set_b) with NO second tokenization
     pass and NO id-joins to re-attach sets (docs_ngram_jaccard
