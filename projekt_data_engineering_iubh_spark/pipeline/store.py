@@ -14,8 +14,8 @@ dependencies):
   naming the current version;
 * every write — initial load, compaction, Z-order relayout, a corrected
   day — lands in a FRESH version dir, invisible to readers while being
-  written; the version dir is CLAIMED via atomic ``mkdir`` so two
-  writers can never interleave files in one snapshot;
+  written; the version is CLAIMED via an atomic ``mkdir`` in
+  ``_claims/`` so two writers can never interleave files in one snapshot;
 * the commit is ``os.replace(tmp, manifest)`` — atomic on POSIX (rename(2)
   within one filesystem), so a reader resolving the manifest sees the old
   snapshot or the new one, never a mix;
@@ -58,6 +58,8 @@ from pyspark.sql import DataFrame, SparkSession
 MANIFEST_FILE = "_MANIFEST.json"
 _LOCK_FILE = ".manifest.lock"
 _VERSION_FMT = "v{:08d}"
+# version claims of in-flight commits (hidden from parquet readers)
+_CLAIMS_DIR = "_claims"
 
 
 class CommitConflict(RuntimeError):
@@ -219,17 +221,27 @@ DEFAULT_BACKEND: CommitBackend = FlockBackend()
 
 
 def _claim_version_dir(root: Path, start: int) -> tuple[int, Path]:
-    """Atomically claim the next free version dir via mkdir (EEXIST ⇒
-    another writer holds it — move on). Two writers can therefore never
-    interleave files inside one snapshot dir."""
+    """Atomically claim the next free version via ``mkdir`` of a marker in
+    ``_claims/`` (EEXIST ⇒ another writer holds it — move on), then create
+    its data dir. The marker, not the data dir, is the claim: a write in
+    overwrite mode deletes and re-creates its output dir, and a claim held
+    by the data dir lapsed in that window, letting a second writer into the
+    same snapshot dir. A version whose data dir exists is taken."""
+    claims = root / _CLAIMS_DIR
+    claims.mkdir(exist_ok=True)
     version = start
     while True:
         data_dir = root / _VERSION_FMT.format(version)
         try:
-            data_dir.mkdir()
-            return version, data_dir
+            (claims / data_dir.name).mkdir()
         except FileExistsError:
             version += 1
+            continue
+        if not data_dir.exists():
+            data_dir.mkdir()
+            return version, data_dir
+        (claims / data_dir.name).rmdir()
+        version += 1
 
 
 def _publish(
@@ -306,6 +318,9 @@ def commit_snapshot(
     except BaseException:
         shutil.rmtree(data_dir, ignore_errors=True)
         raise
+    finally:
+        # released only after a failed attempt's dir is gone
+        (root / _CLAIMS_DIR / dir_name).rmdir()
     return Snapshot(version=version, data_dir=str(data_dir))
 
 
