@@ -372,3 +372,15 @@ def test_build_signature_index_respects_manifest_store(spark, tmp_path):
         f.write(b"x")
     with pytest.raises(RuntimeError, match="live append delta"):
         nd.build_signature_index(docs, idx)
+
+
+def test_claim_outlives_overwrite_recreating_the_dir(tmp_path):
+    """An overwrite-mode write deletes its output dir before re-creating
+    it; the version stays claimed meanwhile, so a concurrent writer moves
+    on to the next one instead of writing into the same snapshot dir."""
+    root = tmp_path / "claims"
+    root.mkdir()
+    version, data_dir = store._claim_version_dir(root, 1)
+    data_dir.rmdir()  # the overwrite's delete, before its job re-creates it
+    other, other_dir = store._claim_version_dir(root, 1)
+    assert (version, other) == (1, 2) and other_dir != data_dir
