@@ -34,6 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from projekt_data_engineering_iubh_spark.functions import zipimport_cache
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("asset_id", T.LongType(), False),
@@ -119,7 +121,7 @@ def extract_image_features(
     imgs = media.filter(F.col("media_type") == "image").select(
         "asset_id", "media_type", "payload"
     )
-    return imgs.mapInPandas(run, schema=IMAGE_FEATURES_SCHEMA)
+    return imgs.mapInPandas(zipimport_cache.attach(run), schema=IMAGE_FEATURES_SCHEMA)
 
 
 def sample_frames(
@@ -416,7 +418,7 @@ def resize_images(
     imgs = media.filter(F.col("media_type") == "image").select(
         "asset_id", "payload"
     )
-    return imgs.mapInPandas(run, schema=RESIZED_SCHEMA)
+    return imgs.mapInPandas(zipimport_cache.attach(run), schema=RESIZED_SCHEMA)
 
 
 # --- audio ----------------------------------------------------------------
@@ -578,4 +580,4 @@ def extract_audio_features(
     auds = media.filter(F.col("media_type") == "audio").select(
         "asset_id", "media_type", "payload"
     )
-    return auds.mapInPandas(run, schema=AUDIO_FEATURES_SCHEMA)
+    return auds.mapInPandas(zipimport_cache.attach(run), schema=AUDIO_FEATURES_SCHEMA)

@@ -26,8 +26,12 @@ NOT overturn NEXT.md fact #1, which is about the per-ROW 8-plane bucket
 assignment in emb_lsh_ann_pairs: each row is touched once there, so the
 compute per Arrow-transferred byte is far smaller — measured on the
 sf0.1 embeddings table, HOF buckets in 0.175 s vs 0.260 s for a numpy
-matmul mapInPandas; the Python worker stage floor dominates.) The engine still keeps the HOF fold for every
-oracle-checked query — the fold is the only formulation whose operation
+matmul mapInPandas. The mapInPandas time is mostly a fixed per-task cost,
+not compute: a Python task's ``importlib.invalidate_caches()`` re-reads
+every zip on the worker's path on Python 3.11, ~250 ms per task
+(cProfile of ``pyspark.worker.main``; ``functions/zipimport_cache.py``
+removes it for the package's own UDFs).) The engine still keeps the
+HOF fold for every oracle-checked query — the fold is the only formulation whose operation
 ORDER DuckDB can reproduce bit-identically — and offers this kernel for
 high-dim production columns where a documented ~1 ULP summation-order
 difference is acceptable.

@@ -32,6 +32,11 @@ log = logging.getLogger(__name__)
 _LAUNCH_LOCK = threading.Lock()
 _LAUNCHED: dict[str, object] = {}
 
+CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -101,6 +106,13 @@ def get_spark(
         # matching DuckDB's ns→µs handling).
         "spark.sql.legacy.parquet.nanosAsLong": "true",
         "spark.ui.enabled": "false",
+        # stream checkpoints (offsets, commits, state versions) through
+        # FileSystem renames: the default FileContext manager asks the
+        # local FS for link status, which without the native Hadoop
+        # library forks `readlink` per file operation. Rename is atomic
+        # on the local FS and HDFS; object stores need their platform's
+        # manager (extra_conf, or spark.conf.set before a query starts)
+        "spark.sql.streaming.checkpointFileManagerClass": CHECKPOINT_FILE_MANAGER,
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
         **(extra_conf or {}),
     }

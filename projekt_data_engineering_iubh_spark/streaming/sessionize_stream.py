@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from projekt_data_engineering_iubh_spark.functions import zipimport_cache
+
 OUTPUT_SCHEMA = (
     "machine_id string, session_seq long, session_start timestamp, "
     "session_end timestamp, n_events long, closed boolean"
@@ -143,7 +145,7 @@ def make_sessionizer(
         if out:
             yield pd.DataFrame(out)
 
-    return fn
+    return zipimport_cache.attach(fn)
 
 
 def sessionize_stream(

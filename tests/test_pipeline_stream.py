@@ -17,7 +17,12 @@ from projekt_data_engineering_iubh_spark.pipeline.generate_data import (
     simulate_day,
     write_csv,
 )
+from projekt_data_engineering_iubh_spark.session import CHECKPOINT_FILE_MANAGER
 from projekt_data_engineering_iubh_spark.streaming import pipeline_stream as ps
+from projekt_data_engineering_iubh_spark.streaming.sessionize_stream import (
+    sessionize_stream,
+)
+from tests.test_checkpoint_manager import checkpoint_manager
 
 
 def test_streaming_pipeline_end_to_end(spark, tmp_path):
@@ -219,3 +224,84 @@ def test_observed_metrics_match_batch_ground_truth(spark, tmp_path):
         F.sum(F.col("value").isNull().cast("long")).alias("n"),
     ).collect()[0]
     assert (got_rows, got_errors, got_nulls) == (want.r, want.e, want.n)
+
+
+def test_restart_onto_filesystem_checkpoint_manager_is_exactly_once(spark, tmp_path):
+    """Checkpoints written by Spark's default FileContext manager resume
+    under the FileSystem manager ``get_spark`` sets: the rollup partitions
+    and closed sessions of a run stopped after two drops and restarted in
+    a ``get_spark`` session equal those of one uninterrupted run, each
+    exactly once."""
+    default_session = spark.newSession()
+    default_session.conf.unset("spark.sql.streaming.checkpointFileManagerClass")
+    assert checkpoint_manager(spark, str(tmp_path)) == CHECKPOINT_FILE_MANAGER
+    assert checkpoint_manager(default_session, str(tmp_path)).endswith(
+        ".FileContextBasedCheckpointFileManager"
+    )
+
+    # two machines, time-ordered, cut into four drops (mid-cycle cuts
+    # carry open sessions and open hours across the restart), then a
+    # much later row that closes every hour
+    rows = sorted(
+        simulate_day("M_RA", "2024-08-03", hours=2.0, seed=21).rows
+        + simulate_day("M_RB", "2024-08-03", hours=2.0, seed=22).rows,
+        key=lambda r: r[0],
+    )
+    n = len(rows)
+    drops = [rows[i * n // 4 : (i + 1) * n // 4] for i in range(4)]
+    nudge = simulate_day("M_Rnudge", "2024-08-03", hours=0.01, seed=23).rows[:8]
+    drops.append([[r[0].replace("T00:", "T09:"), *r[1:]] for r in nudge])
+
+    def start(session, run):
+        src = str(tmp_path / run / "in")
+        rollup = ps.start_pipeline(
+            session, src, str(tmp_path / run / "rollup"), DEFAULT_RULES,
+            checkpoint_dir=str(tmp_path / run / "ckpt_rollup"),
+        )
+        sessions = (
+            sessionize_stream(da.cleanse(ps.read_event_stream(session, src)))
+            .writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", str(tmp_path / run / "sessions"))
+            .option("checkpointLocation", str(tmp_path / run / "ckpt_sessions"))
+            .start()
+        )
+        return rollup, sessions
+
+    def land(run, queries, first, last):
+        for i in range(first, last):
+            part = SimResult(rows=drops[i], error_rates={})
+            write_csv(part, tmp_path / run / "in" / f"drop_{i}.csv")
+            for q in queries:
+                q.processAllAvailable()
+
+    def lives(run, plan):
+        for session, first, last in plan:
+            queries = start(session, run)
+            try:
+                land(run, queries, first, last)
+            finally:
+                for q in queries:
+                    q.stop()
+        rollup = sorted(
+            tuple(r) for r in spark.read.parquet(str(tmp_path / run / "rollup")).collect()
+        )
+        sessions = sorted(
+            tuple(r)
+            for r in spark.read.parquet(str(tmp_path / run / "sessions"))
+            .where("closed")
+            .collect()
+        )
+        return rollup, sessions
+
+    (tmp_path / "restarted" / "in").mkdir(parents=True)
+    (tmp_path / "single" / "in").mkdir(parents=True)
+    got = lives("restarted", [(default_session, 0, 2), (spark, 2, len(drops))])
+    want = lives("single", [(spark, 0, len(drops))])
+
+    rollup, sessions = got
+    assert rollup and sessions
+    assert {r[0] for r in sessions} >= {"M_RA", "M_RB"}
+    assert len({r[-3:] for r in rollup}) == len(rollup)  # one row per partition
+    assert len({r[:2] for r in sessions}) == len(sessions)  # one row per session
+    assert got == want
