@@ -11,7 +11,8 @@ step is needed (Spark 4 runs on JDK 17+, which has both flags):
 * an archive for this JVM's key exists: the driver maps it;
 * none exists: the driver dumps one at exit into a temp file named after
   this process. Once the JVM has exited 0 and its CDS log says the dump
-  was written, this process publishes the file by atomic rename.
+  was written, this process publishes the file (``artifacts.py``: the
+  first publisher wins).
 
 Only a complete archive is ever mapped. A dump killed part-way leaves a
 temp file that no session maps, and that a later session sweeps once its
@@ -19,8 +20,9 @@ owner has gone. The archives live under
 ``${XDG_CACHE_HOME:-~/.cache}/spark-graft/cds/``, one per key:
 
 * the JDK build (``release``, ``libjvm.so`` and its base archives);
-* the driver class path: ``spark.driver.extraClassPath``, the conf dir
-  and the name, size and mtime of every jar;
+* the driver class path: ``spark.driver.extraClassPath`` (which holds
+  the jar of ``localfs.py``), the conf dir and the name, size and mtime
+  of every jar;
 * the compressed-oops mode, which follows the heap size (a JVM with a
   32g heap maps the JDK's ``classes_nocoops.jsa`` as its base, so an
   archive dumped at 1g cannot layer on it).
@@ -38,14 +40,14 @@ from __future__ import annotations
 
 import atexit
 import glob
-import hashlib
 import logging
 import os
-import secrets
 import shlex
 import shutil
 import subprocess
 from dataclasses import dataclass
+
+from projekt_data_engineering_iubh_spark import artifacts
 
 log = logging.getLogger(__name__)
 
@@ -59,8 +61,6 @@ WRITTEN_LINE = "Written dynamic archive"
 # a dump takes 13-17 s for a perfbench-sized session (4 cores); the wait
 # at interpreter exit gives it ample room and never hangs the process
 DUMP_WAIT_S = 300.0
-# session files whose owner still runs are kept up to this age
-STALE_S = 24 * 3600.0
 # largest heap that keeps compressed oops on JDK 17 / x86-64 (measured:
 # -Xmx32736m has them, -Xmx32752m does not)
 _COOPS_MAX_HEAP = (32 << 30) - (32 << 20)
@@ -68,10 +68,7 @@ _CDS_FLAGS = ("SharedArchiveFile", "ArchiveClassesAtExit", "-Xshare")
 
 
 def cache_dir() -> str:
-    base = os.environ.get("XDG_CACHE_HOME") or os.path.join(
-        os.path.expanduser("~"), ".cache"
-    )
-    return os.path.join(base, "spark-graft", "cds")
+    return artifacts.cache_dir("cds")
 
 
 def heap_bytes(spec: str) -> int:
@@ -97,27 +94,19 @@ def java_home() -> str | None:
     return os.path.dirname(os.path.dirname(os.path.realpath(java))) if java else None
 
 
-def _stat_line(path: str) -> str:
-    try:
-        st = os.stat(path)
-        return f"{path} {st.st_size} {st.st_mtime_ns}"
-    except OSError:
-        return f"{path} -"
-
-
 def archive_key(home: str, classpath: list[str], coops: bool) -> str:
     """Hash of everything the JVM checks before it maps a dynamic archive."""
     lines = [os.path.realpath(home)]
     for name in ("release", "lib/server/libjvm.so", "lib/server/classes.jsa",
                  "lib/server/classes_nocoops.jsa"):
-        lines.append(_stat_line(os.path.join(home, name)))
+        lines.append(artifacts.stat_line(os.path.join(home, name)))
     for entry in classpath:
         if entry.endswith("*"):  # a jar directory, expanded by the launcher
-            lines += [_stat_line(j) for j in sorted(glob.glob(entry + ".jar"))]
+            lines += [artifacts.stat_line(j) for j in sorted(glob.glob(entry + ".jar"))]
         else:
-            lines.append(_stat_line(entry))
+            lines.append(artifacts.stat_line(entry))
     lines.append(f"coops={coops}")
-    return hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
+    return artifacts.digest(lines)
 
 
 def submit_args(raw: str) -> dict[str, str]:
@@ -177,35 +166,6 @@ class Plan:
     tmp: str = ""
 
 
-def _owner_alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        pass
-    return True
-
-
-def sweep(directory: str, now: float) -> list[str]:
-    """Remove session files (``<key>.<pid>-<token>.*``) whose owning
-    process has gone or that are older than ``STALE_S``."""
-    removed = []
-    for path in glob.glob(os.path.join(directory, "*.*-*.*")):
-        try:
-            pid = int(os.path.basename(path).split(".")[1].split("-")[0])
-            stale = not _owner_alive(pid) or now - os.path.getmtime(path) > STALE_S
-        except (ValueError, IndexError, OSError):
-            continue
-        if stale and pid != os.getpid():
-            try:
-                os.unlink(path)
-                removed.append(path)
-            except OSError:
-                pass
-    return removed
-
-
 def plan_launch(conf: dict[str, str], now: float) -> Plan:
     """Decide, before the driver JVM starts, whether it maps or dumps."""
     if "PYSPARK_GATEWAY_PORT" in os.environ:
@@ -247,8 +207,8 @@ def plan_launch(conf: dict[str, str], now: float) -> Plan:
     except ValueError:
         return Plan("off:unparsed-driver-memory")
     key = archive_key(home, classpath, coops)
-    sweep(directory, now)
-    stem = os.path.join(directory, f"{key}.{os.getpid()}-{secrets.token_hex(3)}")
+    artifacts.sweep(directory, now)
+    stem = artifacts.session_stem(directory, key)
     p = Plan("dumping", key, os.path.join(directory, f"{key}.jsa"),
              conf_dir=empty_conf, log_path=stem + ".log")
     if os.path.exists(p.archive):
@@ -333,7 +293,7 @@ def verify(p: Plan, proc: subprocess.Popen | None) -> Plan:
 
 def publish(p: Plan, proc: subprocess.Popen, wait_s: float = DUMP_WAIT_S) -> bool:
     """At interpreter exit: let the dumping JVM finish and, if it exited 0
-    with the dump written, publish the archive by atomic rename."""
+    with the dump written, publish the archive (``artifacts.publish``)."""
     rc = proc.poll()
     if rc is None:
         try:
@@ -346,20 +306,9 @@ def publish(p: Plan, proc: subprocess.Popen, wait_s: float = DUMP_WAIT_S) -> boo
             return False
     written = WRITTEN_LINE in _read(p.log_path)
     done = rc == 0 and written and os.path.exists(p.tmp)
-    directory = os.path.dirname(p.archive)
-    if done and not os.path.exists(p.archive):
-        fd = os.open(p.tmp, os.O_RDONLY)
-        try:
-            os.fsync(fd)
-        finally:
-            os.close(fd)
-        os.replace(p.tmp, p.archive)
-        os.replace(p.log_path, os.path.join(directory, f"{p.key}.dump.log"))
-        dfd = os.open(directory, os.O_RDONLY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
+    if done and artifacts.publish(p.tmp, p.archive):
+        os.replace(p.log_path, os.path.join(os.path.dirname(p.archive),
+                                            f"{p.key}.dump.log"))
         return True
     if not done:
         log.warning("CDS dump into %s discarded: JVM exit code %s, dump %s",

@@ -6,9 +6,11 @@ For a 100 TB deployment the session must additionally enable AQE (runtime
 join re-planning + skew splitting + partition coalescing) and size shuffle
 parallelism to the cluster, so those are baked in here.
 
-A driver JVM that ``get_spark`` launches maps the class-data-sharing
-archive of ``cds.py``, or dumps one at exit. Each new session logs one
-start record (``gateway_s``, ``context_s``, ``cds``, ``cds_key``).
+A driver JVM that ``get_spark`` launches writes ``file://`` through the
+fork-free local file system of ``localfs.py`` and maps the
+class-data-sharing archive of ``cds.py``, or dumps one at exit. Each new
+session logs one start record (``gateway_s``, ``context_s``, ``cds``,
+``cds_key``, ``localfs``, ``localfs_compile_s``).
 """
 
 from __future__ import annotations
@@ -22,7 +24,7 @@ from pyspark import SparkConf, SparkContext
 from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import SparkSession
 
-from projekt_data_engineering_iubh_spark import cds
+from projekt_data_engineering_iubh_spark import cds, localfs
 
 log = logging.getLogger(__name__)
 
@@ -56,8 +58,11 @@ def _start_gateway(conf: dict[str, str], conf_dir: str | None) -> None:
 
 
 def _launch(base: dict[str, str]) -> tuple[dict[str, str], cds.Plan, float]:
-    """Start the driver JVM with the CDS flags of ``cds.plan_launch``;
-    returns the conf it ran with, the checked plan and the launch wall."""
+    """Start the driver JVM with the jar of ``localfs.plan`` and the CDS
+    flags of ``cds.plan_launch``; returns the conf it ran with, the
+    checked plan and the launch wall."""
+    fs = localfs.plan(base, time.time())
+    base = fs.apply(base)
     plan = cds.plan_launch(base, time.time())
     conf = dict(base)
     if plan.java_opts:
@@ -74,7 +79,7 @@ def _launch(base: dict[str, str]) -> tuple[dict[str, str], cds.Plan, float]:
         _start_gateway(conf, None)
     gateway_s = time.perf_counter() - t0
     plan = cds.verify(plan, getattr(SparkContext._gateway, "proc", None))
-    _LAUNCHED.update(gateway=SparkContext._gateway, plan=plan)
+    _LAUNCHED.update(gateway=SparkContext._gateway, plan=plan, localfs=fs)
     return conf, plan, gateway_s
 
 
@@ -121,20 +126,29 @@ def get_spark(
     with _LAUNCH_LOCK:
         if fresh and SparkContext._gateway is None:
             conf, plan, gateway_s = _launch(conf)
+            fs = _LAUNCHED["localfs"]
         elif _LAUNCHED and SparkContext._gateway is _LAUNCHED["gateway"]:
-            plan = _LAUNCHED["plan"]
+            plan, launched = _LAUNCHED["plan"], _LAUNCHED["localfs"]
+            # a new context in the same JVM: the class is on its class path
+            fs = localfs.Plan(launched.state, launched.jar)
+            if localfs.IMPL_KEY in conf:
+                fs = localfs.Plan(f"off:user-set:{conf[localfs.IMPL_KEY]}")
+            conf = fs.apply(conf)
         else:
             plan = cds.Plan("off:jvm-launched-outside")
+            fs = localfs.Plan("off:jvm-launched-outside")
     t0 = time.perf_counter()
     spark = SparkSession.builder.config(map=conf).getOrCreate()
     context_s = time.perf_counter() - t0
     if fresh:
         # one start record per new SparkContext
         log.info(
-            "spark session start: gateway %.2f s, context %.2f s, cds %s, key %s",
-            gateway_s, context_s, plan.state, plan.key or "-",
+            "spark session start: gateway %.2f s, context %.2f s, cds %s, key %s, "
+            "localfs %s (compile %.2f s)",
+            gateway_s, context_s, plan.state, plan.key or "-", fs.state, fs.compile_s,
             extra={"gateway_s": round(gateway_s, 3), "context_s": round(context_s, 3),
-                   "cds": plan.state, "cds_key": plan.key},
+                   "cds": plan.state, "cds_key": plan.key, "localfs": fs.state,
+                   "localfs_compile_s": round(fs.compile_s, 3)},
         )
     spark.sparkContext.setLogLevel("WARN")
     # cluster deployments point this at a DFS/object-store prefix so the
@@ -151,9 +165,13 @@ def prepare_session(spark: SparkSession) -> SparkSession:
 
     The verification driver creates its own SparkSession and hands it to
     ``__spark_entry__``; this applies the confs our plans rely on that can
-    be toggled at runtime.
+    be toggled at runtime. The local file system is chosen when the JVM
+    starts, so it logs which one this session writes ``file://`` through:
+    ``localfs`` is ``on`` only for a JVM that ``get_spark`` launched.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    state = localfs.session_state(spark)
+    log.info("spark session prepared: localfs %s", state, extra={"localfs": state})
     return spark

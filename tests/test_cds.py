@@ -23,7 +23,7 @@ from pathlib import Path
 
 import pytest
 
-from projekt_data_engineering_iubh_spark import cds
+from projekt_data_engineering_iubh_spark import artifacts, cds
 
 REPO = Path(__file__).resolve().parent.parent
 
@@ -97,7 +97,7 @@ def test_sweep_removes_files_of_ended_owners(tmp_path):
     archive = tmp_path / "k1.jsa"
     for p in (stale, live, archive):
         p.write_bytes(b"x")
-    assert cds.sweep(str(tmp_path), 0.0) == [str(stale)]
+    assert artifacts.sweep(str(tmp_path), 0.0) == [str(stale)]
     assert live.exists() and archive.exists()
 
 

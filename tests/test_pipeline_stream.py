@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from projekt_data_engineering_iubh_spark import localfs
 from projekt_data_engineering_iubh_spark.operators.rules import with_error_flag
 from projekt_data_engineering_iubh_spark.pipeline import daily_aggregator as da
 from projekt_data_engineering_iubh_spark.pipeline.config import (
@@ -226,19 +227,10 @@ def test_observed_metrics_match_batch_ground_truth(spark, tmp_path):
     assert (got_rows, got_errors, got_nulls) == (want.r, want.e, want.n)
 
 
-def test_restart_onto_filesystem_checkpoint_manager_is_exactly_once(spark, tmp_path):
-    """Checkpoints written by Spark's default FileContext manager resume
-    under the FileSystem manager ``get_spark`` sets: the rollup partitions
-    and closed sessions of a run stopped after two drops and restarted in
-    a ``get_spark`` session equal those of one uninterrupted run, each
-    exactly once."""
-    default_session = spark.newSession()
-    default_session.conf.unset("spark.sql.streaming.checkpointFileManagerClass")
-    assert checkpoint_manager(spark, str(tmp_path)) == CHECKPOINT_FILE_MANAGER
-    assert checkpoint_manager(default_session, str(tmp_path)).endswith(
-        ".FileContextBasedCheckpointFileManager"
-    )
-
+def _assert_restart_is_exactly_once(spark, before, tmp_path):
+    """Both streams run two drops in the session ``before``, stop, and
+    resume in ``spark``: their rollup partitions and closed sessions equal
+    those of one uninterrupted run in ``spark``, each exactly once."""
     # two machines, time-ordered, cut into four drops (mid-cycle cuts
     # carry open sessions and open hours across the restart), then a
     # much later row that closes every hour
@@ -296,7 +288,7 @@ def test_restart_onto_filesystem_checkpoint_manager_is_exactly_once(spark, tmp_p
 
     (tmp_path / "restarted" / "in").mkdir(parents=True)
     (tmp_path / "single" / "in").mkdir(parents=True)
-    got = lives("restarted", [(default_session, 0, 2), (spark, 2, len(drops))])
+    got = lives("restarted", [(before, 0, 2), (spark, 2, len(drops))])
     want = lives("single", [(spark, 0, len(drops))])
 
     rollup, sessions = got
@@ -305,3 +297,40 @@ def test_restart_onto_filesystem_checkpoint_manager_is_exactly_once(spark, tmp_p
     assert len({r[-3:] for r in rollup}) == len(rollup)  # one row per partition
     assert len({r[:2] for r in sessions}) == len(sessions)  # one row per session
     assert got == want
+
+
+def test_restart_onto_filesystem_checkpoint_manager_is_exactly_once(spark, tmp_path):
+    """Checkpoints written by Spark's default FileContext manager resume
+    under the FileSystem manager ``get_spark`` sets."""
+    default_session = spark.newSession()
+    default_session.conf.unset("spark.sql.streaming.checkpointFileManagerClass")
+    assert checkpoint_manager(spark, str(tmp_path)) == CHECKPOINT_FILE_MANAGER
+    assert checkpoint_manager(default_session, str(tmp_path)).endswith(
+        ".FileContextBasedCheckpointFileManager"
+    )
+    _assert_restart_is_exactly_once(spark, default_session, tmp_path)
+
+
+def file_system_class(session) -> str:
+    """Class of the ``file://`` file system a query of ``session`` uses."""
+    jvm = session.sparkContext._jvm
+    conf = session._jsparkSession.sessionState().newHadoopConf()
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI("file:///"), conf)
+    return fs.getClass().getName()
+
+
+def test_restart_onto_fork_free_local_fs_is_exactly_once(spark, tmp_path):
+    """Checkpoints and sinks written through the class ``file://``
+    resolves to without ``get_spark``'s setting (Hive's proxy) resume
+    under the fork-free local file system."""
+    jvm = spark.sparkContext._jvm
+    old = jvm.org.apache.hadoop.fs.FileSystem.getFileSystemClass(
+        "file", jvm.org.apache.hadoop.conf.Configuration()
+    ).getName()
+    old_session = spark.newSession()
+    old_session.conf.set("fs.file.impl", old)
+    # the FileSystem cache is keyed by scheme, not class
+    old_session.conf.set("fs.file.impl.disable.cache", "true")
+    assert file_system_class(spark) == localfs.CLASS
+    assert file_system_class(old_session) == old != localfs.CLASS
+    _assert_restart_is_exactly_once(spark, old_session, tmp_path)
