@@ -287,8 +287,8 @@ def kmeans_train(
     the trained centroids (cell, cq). Seeds are the k lowest vec_ids
     (deterministic — a production variant would hash-sample seeds, same
     shape). Exposed separately from :func:`kmeans_fixed_point` so callers
-    that need the CODEBOOK itself (per-subspace PQ training,
-    plans/vector_queries.py::emb_pq_adc_trained) reuse the exact same
+    that need the CODEBOOK itself (IVF coarse quantizers, e.g.
+    plans/vector_queries.py::ivfpq_train_and_write) reuse the exact same
     rounds the assignment query verifies cross-engine."""
     seed_rows = (
         vectors.filter(F.col("vec_id") < k)

@@ -1066,7 +1066,8 @@ def emb_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Product quantization + ADC search (the 100 TB vector-index memory lever)
+# Product-quantization geometry (the 100 TB vector-index memory lever),
+# shared by the IVF-PQ family below
 # ---------------------------------------------------------------------------
 
 _PQ_M = 4  # subvectors
@@ -1076,207 +1077,9 @@ _PQ_K = 10
 _PQ_QUERIES = 5
 
 
-def _pq_centroid(m: int, j: int) -> list[float]:
-    """Deterministic sub-codebook entry (the per-subvector k-means a real
-    PQ trains — operators/kmeans.py is that trainer; fixed md5 seeds keep
-    both engines and every run identical, same policy as CENTROIDS)."""
-    out = []
-    for i in range(_PQ_SUBDIM):
-        h = int(hashlib.md5(f"pq_{m}_{j}_{i}".encode()).hexdigest()[:8], 16)
-        out.append((h % 2001 - 1000) / 1000.0)
-    return out
-
-
-PQ_CODEBOOKS = [
-    [_pq_centroid(m, j) for j in range(_PQ_CODES)] for m in range(_PQ_M)
-]
-
-
-def _pq_subdist_spark(m: int, j: int, sub: F.Column) -> F.Column:
-    c = F.array(*[F.lit(v) for v in PQ_CODEBOOKS[m][j]])
-    sq = F.zip_with(
-        sub, c, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)
-    )
-    return F.aggregate(sq, F.lit(0.0), lambda acc, v: acc + v)
-
-
 def _pq_sub_sql(src_expr: str, m: int, subdim: int | None = None) -> str:
     sd = _PQ_SUBDIM if subdim is None else subdim
     return f"({src_expr})[{m * sd + 1}:{(m + 1) * sd}]"
-
-
-def _pq_subdist_sql(sub_expr: str, m: int, j: int) -> str:
-    lits = "[" + ", ".join(repr(v) for v in PQ_CODEBOOKS[m][j]) + "]"
-    sq = (
-        f"list_transform(range(1, {_PQ_SUBDIM} + 1), "
-        f"i -> (CAST(({sub_expr})[i] AS DOUBLE) - ({lits})[i])"
-        f" * (CAST(({sub_expr})[i] AS DOUBLE) - ({lits})[i]))"
-    )
-    return f"list_reduce({sq}, (x, y) -> x + y)"
-
-
-def _l2_full_sql(a: str, b: str) -> str:
-    sq = (
-        f"list_transform(range(1, {EMB_DIM} + 1), "
-        f"i -> (CAST(({a})[i] AS DOUBLE) - CAST(({b})[i] AS DOUBLE))"
-        f" * (CAST(({a})[i] AS DOUBLE) - CAST(({b})[i] AS DOUBLE)))"
-    )
-    return f"list_reduce({sq}, (x, y) -> x + y)"
-
-
-def _pq_dtab_sql(m: int) -> str:
-    return (
-        "["
-        + ", ".join(
-            _pq_subdist_sql(_pq_sub_sql("qe", m), m, j)
-            for j in range(_PQ_CODES)
-        )
-        + "]"
-    )
-
-
-_PQ_SQL = f"""
-WITH codes AS (
-  SELECT vec_id, embedding,
-         {", ".join(
-             f"CAST(list_position(d{m}, list_min(d{m})) - 1 AS INTEGER) AS c{m}"
-             for m in range(_PQ_M))}
-  FROM (
-    SELECT vec_id, embedding,
-           {", ".join(
-               "[" + ", ".join(
-                   _pq_subdist_sql(_pq_sub_sql("embedding", m), m, j)
-                   for j in range(_PQ_CODES)) + f"] AS d{m}"
-               for m in range(_PQ_M))}
-    FROM embeddings
-  )
-), qd AS (
-  SELECT vec_id AS query_id, embedding AS qe,
-         {", ".join(f"{_pq_dtab_sql(m)} AS t{m}" for m in range(_PQ_M))}
-  FROM embeddings WHERE vec_id < {_PQ_QUERIES}
-), cand AS (
-  SELECT query_id, c.vec_id AS neighbor_id,
-         {" + ".join(f"t{m}[c{m} + 1]" for m in range(_PQ_M))} AS adc_dist,
-         {_l2_full_sql('qe', 'c.embedding')} AS exact_dist
-  FROM qd JOIN codes c ON c.vec_id != query_id
-), r AS (
-  SELECT query_id, neighbor_id, adc_dist, exact_dist,
-         abs(adc_dist - exact_dist) AS abs_err,
-         CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY adc_dist, neighbor_id) AS INTEGER) AS rn
-  FROM cand
-)
-SELECT query_id, neighbor_id, adc_dist, exact_dist, abs_err, rn
-FROM r WHERE rn <= {_PQ_K}
-"""
-
-
-@register("emb_pq_adc", oracle=_PQ_SQL, driver=False)
-def emb_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantized ANN with asymmetric distance computation — the
-    compression rung between int8 SQ (emb_quantize_int8, 4×) and IVF
-    cells: 4 sub-codebooks × 16 centroids encode each vector as 4×4-bit
-    codes (64 float32 → 2 bytes, 128×), queries stay full-precision, and
-    candidate distance is the sum of 4 per-subvector TABLE LOOKUPS
-    against the query's precomputed distance tables (Jégou et al.'s ADC,
-    public knowledge). abs_err vs the exact L2² quantifies the recall
-    trade exactly like the int8 entry.
-
-    Scale shape: encoding is one map-side projection (argmin over 16
-    fixed-literal distance folds per subvector — the same
-    array/array_position CSE pattern as IVF's _with_cell); the scored
-    scan is broadcast-queries × corpus CODES (the 2-byte codes, not the
-    float arrays, are what a 100 TB index stores and shuffles — the
-    point of PQ); per-query top-k is the standard window. Codebooks are
-    fixed md5-seeded literals (the trained equivalent would come from
-    operators/kmeans.py per subvector) embedded identically in both
-    engines, so ranks and distances tie out bit-exactly.
-
-    Perf note, measured: the 64 interpreted distance folds per corpus row
-    (16 codes × 4 subvectors) make THIS formulation the oracle-exact
-    diagnostic, not the production encoder — a production encode is one
-    numpy ``(n, M, sub) × (M, sub, K)`` einsum via the Arrow kernel
-    (operators/similarity.py pattern; the pair-compute shape where numpy
-    wins at every dim, NEXT.md r4 fact #1), with this query as its
-    bit-exact correctness baseline.
-    """
-    e = spread(load_table(spark, sf_dir, "embeddings"))
-    dist_arrays = [
-        F.array(
-            *[
-                _pq_subdist_spark(
-                    m,
-                    j,
-                    F.slice(
-                        F.col("embedding"), m * _PQ_SUBDIM + 1, _PQ_SUBDIM
-                    ),
-                )
-                for j in range(_PQ_CODES)
-            ]
-        ).alias(f"d{m}")
-        for m in range(_PQ_M)
-    ]
-    with_d = e.select("vec_id", "embedding", *dist_arrays)
-    codes = with_d.select(
-        "vec_id",
-        "embedding",
-        *[
-            (
-                F.array_position(F.col(f"d{m}"), F.array_min(f"d{m}")) - 1
-            ).cast("int").alias(f"c{m}")
-            for m in range(_PQ_M)
-        ],
-    )
-    qd = e.filter(F.col("vec_id") < _PQ_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        *[
-            F.array(
-                *[
-                    _pq_subdist_spark(
-                        m,
-                        j,
-                        F.slice(F.col("embedding"), m * _PQ_SUBDIM + 1, _PQ_SUBDIM),
-                    )
-                    for j in range(_PQ_CODES)
-                ]
-            ).alias(f"t{m}")
-            for m in range(_PQ_M)
-        ],
-    )
-    adc = None
-    for m in range(_PQ_M):
-        term = F.element_at(F.col(f"t{m}"), F.col(f"c{m}") + 1)
-        adc = term if adc is None else adc + term
-    exact = F.aggregate(
-        F.zip_with(
-            F.col("qe"),
-            F.col("embedding"),
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    cand = codes.join(
-        F.broadcast(qd), F.col("vec_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        adc.alias("adc_dist"),
-        exact.alias("exact_dist"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id")
-    )
-    return (
-        cand.withColumn("abs_err", F.abs(F.col("adc_dist") - F.col("exact_dist")))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _PQ_K)
-        .select(
-            "query_id", "neighbor_id", "adc_dist", "exact_dist", "abs_err", "rn"
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1443,7 +1246,7 @@ def emb_ivf_ann_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-flat ANN over TRAINED cells: the coarse quantizer is the
     exact fixed-point Lloyd assignment (emb_kmeans's 3 rounds) instead
     of emb_ivf_ann's fixed pseudo-random centroids — the trained-index
-    counterpart, completing the pair with emb_pq_adc_trained. Search is
+    counterpart. Search is
     identical: probe the query's own cell (nprobe=1), exact cosine,
     per-query top-k. Trained cells track the data distribution, so cell
     sizes are balanced by construction (Lloyd's update equalizes
@@ -1620,194 +1423,11 @@ def emb_ivf_ann_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Trained product quantization: per-subspace k-means codebooks + ADC
+# Trained product-quantization codebook constants (IVF-PQ family)
 # ---------------------------------------------------------------------------
 
 _PQT_ITERS = 2
 _PQT_SCALE2 = float(km.FIXED_SCALE) ** 2  # squared-L2 fixed-point unit
-
-
-def _pqt_sql() -> str:
-    """The full trained-PQ oracle: per-subspace k-means CTE chains →
-    encoded corpus with chosen-centroid vectors attached → ADC vs exact
-    fixed-point squared-L2 → per-query top-k."""
-    parts = []
-    encs = []
-    for m in range(_PQ_M):
-        src = (
-            f"SELECT vec_id, {km.quantize_sql(_pq_sub_sql('embedding', m))}"
-            f" AS qemb FROM embeddings"
-        )
-        ctes, cent = km.kmeans_train_sql_ctes(
-            src, _PQ_CODES, _PQT_ITERS, _PQ_SUBDIM, f"s{m}"
-        )
-        parts.append(ctes)
-        parts.append(
-            f"s{m}enc AS (SELECT a.vec_id, a.cell, c.cq FROM "
-            f"({km._assign_sql(f's{m}qv', cent, _PQ_SUBDIM)}) a "
-            f"JOIN {cent} c USING (cell))"
-        )
-        encs.append(f"s{m}enc")
-    parts.append(
-        f"qfull AS (SELECT vec_id, {km.quantize_sql('embedding')} AS qemb"
-        f" FROM embeddings)"
-    )
-    parts.append(
-        f"qd AS (SELECT vec_id AS query_id, qemb FROM qfull"
-        f" WHERE vec_id < {_PQ_QUERIES})"
-    )
-    adc = " + ".join(
-        f"list_reduce(list_transform(range(1, {_PQ_SUBDIM} + 1), "
-        f"i -> (q.qemb[{m * _PQ_SUBDIM} + i] - e{m}.cq[i])"
-        f" * (q.qemb[{m * _PQ_SUBDIM} + i] - e{m}.cq[i])), (x, y) -> x + y)"
-        for m in range(_PQ_M)
-    )
-    exact = (
-        f"list_reduce(list_transform(range(1, {EMB_DIM} + 1), "
-        f"i -> (q.qemb[i] - x.qemb[i]) * (q.qemb[i] - x.qemb[i])), "
-        f"(x, y) -> x + y)"
-    )
-    enc_joins = " ".join(
-        f"JOIN {e} e{m} ON e{m}.vec_id = x.vec_id"
-        for m, e in enumerate(encs)
-    )
-    parts.append(
-        f"cand AS (SELECT q.query_id, x.vec_id AS neighbor_id, "
-        f"CAST({adc} AS DOUBLE) / {_PQT_SCALE2!r} AS adc_dist, "
-        f"CAST({exact} AS DOUBLE) / {_PQT_SCALE2!r} AS exact_dist "
-        f"FROM qd q JOIN qfull x ON x.vec_id != q.query_id {enc_joins})"
-    )
-    return (
-        "WITH "
-        + ",\n".join(parts)
-        + f"""
-, r AS (
-  SELECT query_id, neighbor_id, adc_dist, exact_dist,
-         abs(adc_dist - exact_dist) AS abs_err,
-         CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY adc_dist, neighbor_id) AS INTEGER) AS rn
-  FROM cand
-)
-SELECT query_id, neighbor_id, adc_dist, exact_dist, abs_err, rn
-FROM r WHERE rn <= {_PQ_K}
-"""
-    )
-
-
-_PQT_SQL = _pqt_sql()
-
-
-@register("emb_pq_adc_trained", oracle=_PQT_SQL, driver=False)
-def emb_pq_adc_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product quantization with TRAINED codebooks (r4 VERDICT #4):
-    per-subspace Lloyd k-means (operators/kmeans.py, the exact
-    fixed-point trainer emb_kmeans verifies) replaces emb_pq_adc's fixed
-    md5-seeded codebooks; same 4×16 geometry, same ADC search. Training
-    on the data cuts quantization error materially —
-    tests/test_pq_trained.py pins mean and max abs_err strictly below
-    the untrained variant's on the same queries.
-
-    Distances are exact fixed-point (bigint squared-L2 at 2^20 scale, as
-    the trainer): every engine computes bit-identical integers, and the
-    final /2^40 rescale to float units is a power-of-two exponent shift
-    — still exact. The codebooks are collected to the driver (4×16×16
-    bigints — k×dim-sized like the CC round counter, never data-sized)
-    and embedded as literals, so encoding is ONE map-side argmin scan
-    with no per-subspace shuffle; the oracle expresses the identical
-    argmin as its rn=1 assign join. Scale shape otherwise matches
-    emb_pq_adc: broadcast queries × corpus codes, per-query top-k
-    window; at 100 TB the 2-byte codes are the stored index and the
-    trainer runs on a sample.
-    """
-    e = spread(load_table(spark, sf_dir, "embeddings"))
-    qv = e.select("vec_id", km.quantize(F.col("embedding")).alias("qemb"))
-
-    # per-subspace training; codebooks are k×dim driver literals
-    books: list[tuple[list[int], list[list[int]]]] = []
-    for m in range(_PQ_M):
-        subv = qv.select(
-            "vec_id",
-            F.slice("qemb", m * _PQ_SUBDIM + 1, _PQ_SUBDIM).alias("qemb"),
-        )
-        cents = (
-            km.kmeans_train(subv, _PQ_CODES, _PQT_ITERS, _PQ_SUBDIM)
-            .orderBy("cell")
-            .collect()
-        )
-        books.append(([r.cell for r in cents], [list(r.cq) for r in cents]))
-
-    def sub(col: str, m: int) -> F.Column:
-        return F.slice(F.col(col), m * _PQ_SUBDIM + 1, _PQ_SUBDIM)
-
-    def isq(a: F.Column, b: F.Column) -> F.Column:
-        sq = F.zip_with(a, b, lambda x, y: (x - y) * (x - y))
-        return F.aggregate(sq, F.lit(0).cast("long"), lambda acc, v: acc + v)
-
-    # encode: argmin over the trained centroids (cell-ascending order →
-    # first-position-of-min reproduces the trainer's dist-then-lowest-cell
-    # tie-break, which the oracle's rn=1 join also implements)
-    code_cols = []
-    for m, (_cells, cqs) in enumerate(books):
-        dists = F.array(
-            *[
-                isq(sub("qemb", m), F.array(*[F.lit(v) for v in cq]))
-                for cq in cqs
-            ]
-        )
-        code_cols.append(
-            (F.array_position(dists, F.array_min(dists)) - 1)
-            .cast("int")
-            .alias(f"c{m}")
-        )
-    codes = qv.select("vec_id", "qemb", *code_cols)
-
-    # per-query ADC distance tables against the same literal codebooks
-    qd = qv.filter(F.col("vec_id") < _PQ_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("qemb").alias("qq"),
-        *[
-            F.array(
-                *[
-                    isq(
-                        F.slice(
-                            F.col("qemb"), m * _PQ_SUBDIM + 1, _PQ_SUBDIM
-                        ),
-                        F.array(*[F.lit(v) for v in cq]),
-                    )
-                    for cq in books[m][1]
-                ]
-            ).alias(f"t{m}")
-            for m in range(_PQ_M)
-        ],
-    )
-    adc = sum(
-        F.element_at(F.col(f"t{m}"), F.col(f"c{m}") + 1)
-        for m in range(_PQ_M)
-    )
-    cand = codes.join(
-        F.broadcast(qd), F.col("vec_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (adc.cast("double") / F.lit(_PQT_SCALE2)).alias("adc_dist"),
-        (
-            isq(F.col("qq"), F.col("qemb")).cast("double")
-            / F.lit(_PQT_SCALE2)
-        ).alias("exact_dist"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id")
-    )
-    return (
-        cand.withColumn(
-            "abs_err", F.abs(F.col("adc_dist") - F.col("exact_dist"))
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _PQ_K)
-        .select(
-            "query_id", "neighbor_id", "adc_dist", "exact_dist", "abs_err", "rn"
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -2026,145 +1646,6 @@ def emb_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("dist").cast("long").alias("min_sq_dist"),
         F.max("dist").cast("long").alias("radius_sq"),
         F.sum("dist").cast("long").alias("inertia"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Binary (sign) sketch + Hamming ANN (#111)
-# ---------------------------------------------------------------------------
-
-# 60 deterministic hyperplanes (same md5-seeded generator as the 8
-# bucketing planes — the first 8 coincide, which is fine: the sketch is
-# a superset signature). 60 keeps every `1 << j` literal positive in a
-# signed 64-bit BIGINT on both engines.
-_HAM_PLANES = 60
-_HAM_K = 10
-_HAM_QUERIES = 5
-
-
-def _sketch_spark() -> F.Column:
-    s = None
-    for j in range(_HAM_PLANES):
-        plane = F.array(*[F.lit(v) for v in _plane(j)])
-        dot = F.aggregate(
-            F.zip_with(
-                F.col("embedding"), plane, lambda x, y: x.cast("double") * y
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        term = F.when(dot > 0, F.lit(1 << j).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        s = term if s is None else s + term
-    return s
-
-
-def _ham_plane_dot_sql(j: int) -> str:
-    lits = "[" + ", ".join(repr(v) for v in _plane(j)) + "]"
-    prods = (
-        f"list_transform(range(1, len(embedding) + 1), "
-        f"i -> CAST(embedding[i] AS DOUBLE) * ({lits})[i])"
-    )
-    return f"list_reduce({prods}, (x, y) -> x + y)"
-
-
-def _sketch_sql() -> str:
-    terms = " + ".join(
-        f"(CASE WHEN {_ham_plane_dot_sql(j)} > 0 "
-        f"THEN CAST({1 << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-        for j in range(_HAM_PLANES)
-    )
-    return f"({terms})"
-
-
-_HAMMING_SQL = f"""
-WITH sk AS (
-  SELECT vec_id, {_sketch_sql()} AS sketch FROM embeddings
-), q AS (
-  SELECT vec_id AS query_id, sketch AS qsk FROM sk
-  WHERE vec_id < {_HAM_QUERIES}
-), h AS (
-  SELECT q.query_id, s.vec_id AS neighbor_id,
-         bit_count(xor(q.qsk, s.sketch)) AS hamming
-  FROM q JOIN sk s ON s.vec_id != q.query_id
-), r AS (
-  SELECT query_id, neighbor_id, hamming,
-         CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY hamming, neighbor_id) AS BIGINT) AS rn
-  FROM h
-), topk AS (
-  SELECT * FROM r WHERE rn <= {_HAM_K}
-)
-SELECT t.query_id, t.neighbor_id, t.hamming, t.rn,
-       {vx.cosine_sql('qe.embedding', 'ne.embedding')} AS cos_sim
-FROM topk t
-JOIN embeddings qe ON qe.vec_id = t.query_id
-JOIN embeddings ne ON ne.vec_id = t.neighbor_id
-"""
-
-
-@register("emb_hamming_ann", oracle=_HAMMING_SQL, driver=False)
-def emb_hamming_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-sketch ANN (#111): 60-plane sign sketch per vector (one
-    BIGINT), Hamming-distance top-k per query via ``bit_count(xor)``,
-    exact cosine re-ranking joined on only the survivors.
-
-    The classic bit-sliced prefilter: the sketch reduces each candidate
-    comparison from 64 float multiplies + adds to ONE xor + popcount
-    (~100x cheaper, 8 bytes vs 256 per vector in the shuffle), and the
-    expensive exact metric runs on k·queries rows instead of n·queries.
-    Sign-random-projection theory: E[hamming/planes] = angle/π, so
-    Hamming rank order approximates cosine rank order; the rerank
-    restores exactness on the shortlist.
-
-    Scale shape: sketches are one map-side pass (no shuffle); the
-    query×corpus Hamming scan is integer-only and embedding-free (the
-    scan after column pruning reads vec_id + 8-byte sketch); the rerank
-    join touches k·queries embedding rows. At 100 TB the same plan holds
-    with the sketch table as its own (tiny) stored projection.
-    Determinism: hamming is an integer, ties break on neighbor_id, and
-    the rerank cosine is the strict left-to-right fold — hash-exact on
-    both engines. bit_count/xor parity verified (18 on the probe pair).
-    """
-    e = spread(load_table(spark, sf_dir, "embeddings"))
-    sk = e.select("vec_id", _sketch_spark().alias("sketch"))
-    q = sk.filter(F.col("vec_id") < _HAM_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("sketch").alias("qsk")
-    )
-    h = (
-        q.join(sk.alias("s"), F.col("s.vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("s.vec_id").alias("neighbor_id"),
-            F.bit_count(
-                F.col("qsk").bitwiseXOR(F.col("s.sketch"))
-            ).cast("long").alias("hamming"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    topk = (
-        h.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= _HAM_K)
-    )
-    emb = load_table(spark, sf_dir, "embeddings")
-    qe = emb.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    ne = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("n_emb"),
-    )
-    return (
-        topk.join(qe, "query_id")
-        .join(ne, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "hamming",
-            "rn",
-            vx.cosine(F.col("q_emb"), F.col("n_emb")).alias("cos_sim"),
-        )
     )
 
 
@@ -3201,6 +2682,25 @@ def _ivfpq_search(
         .filter(F.col("rn") <= _PQ_K)
         .select(*out_cols, "rn")
     )
+
+
+def _plain_pq_reference(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Plain (non-residual) trained PQ, unregistered: the reference arm
+    of tests/test_curation_props.py::test_ivfpq_residual_beats_plain_pq_error,
+    which pins emb_ivfpq_residual's ADC error strictly below it. Plain PQ
+    is IVF-PQ with ONE all-zero coarse centroid (every residual is the
+    vector itself), so it is the IVF-PQ helpers with cells ``[0]``: the
+    same 4x16 stacked books, codes and ADC search, minus the cell
+    column — (query_id, neighbor_id, adc_dist, exact_dist, abs_err, rn)."""
+    e = spread(load_table(spark, sf_dir, "embeddings"))
+    qv = e.select("vec_id", km.quantize(F.col("embedding")).alias("qemb"))
+    cells, cqs = [0], [[0] * EMB_DIM]
+    res = _ivfpq_residuals(qv, cells, cqs)
+    _book_cells, books = _train_books(
+        res, _PQ_M, _PQ_CODES, _PQT_ITERS, _PQ_SUBDIM
+    )
+    codes = _ivfpq_encode_residuals(res, books, _PQ_SUBDIM)
+    return _ivfpq_search(qv, cells, cqs, books, codes).drop("cell")
 
 
 # ---------------------------------------------------------------------------
@@ -4516,7 +4016,8 @@ def ivfpq_train_and_write(
 ) -> None:
     """Train the cosine-faithful IVF-PQ quantizers over a (vec_id, qemb)
     frame of unit-normalized vectors — coarse Lloyd, one residual
-    checkpoint, per-subspace codebooks — and write the appendable-root
+    checkpoint, the stacked sub-codebooks (_train_books: one job per
+    round for all 16 books) — and write the appendable-root
     artifacts (coarse, books, codes, meta) into ``data_dir``: the one
     implementation behind every appendable IVF-PQ bootstrap (#150's v1
     and streaming/ann_ingest_stream.bootstrap_codes_index), so the
@@ -4530,19 +4031,9 @@ def ivfpq_train_and_write(
     cells = [r.cell for r in coarse]
     cqs = [list(r.cq) for r in coarse]
     res = _ivfpq_residuals(qv, cells, cqs).localCheckpoint(eager=True)
-    bcells, books = [], []
-    for m in range(_PQ_COS_M):
-        subv = res.select(
-            "vec_id",
-            F.slice("remb", m * subdim + 1, subdim).alias("qemb"),
-        )
-        cents = (
-            km.kmeans_train(subv, _PQ_CODES, _PQT_ITERS, subdim)
-            .orderBy("cell")
-            .collect()
-        )
-        bcells.append([r.cell for r in cents])
-        books.append([list(r.cq) for r in cents])
+    bcells, books = _train_books(
+        res, _PQ_COS_M, _PQ_CODES, _PQT_ITERS, subdim
+    )
     _write_ivfpq_artifacts(
         spark, data_dir, cells, cqs, bcells, books,
         _ivfpq_encode_residuals(res, books, subdim), _PQ_COS_M, _PQ_CODES,

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from projekt_data_engineering_iubh_spark.plans import all_queries
+from projekt_data_engineering_iubh_spark.plans import vector_queries as vq
 
 SF = "/root/testdata/sf0.01"
 _Q = all_queries()
@@ -774,7 +775,7 @@ def test_ivfpq_residual_beats_plain_pq_error(spark):
     within-cell structure. Plus structure: ranks are 1..k dense per
     query and no candidate repeats across probes."""
     ivfpq = _Q["emb_ivfpq_residual"].fn(spark, SF).collect()
-    plain = _Q["emb_pq_adc_trained"].fn(spark, SF).collect()
+    plain = vq._plain_pq_reference(spark, SF).collect()
     assert ivfpq and plain
     by_q: dict[int, list] = {}
     for r in ivfpq:

@@ -110,7 +110,6 @@ def test_flagship_single_scan_branches(spark):
         "docs_text_stats",
         "docs_minhash_signatures",
         "emb_knn_brute",
-        "emb_pq_adc",
         "events_sessionize",
         "docs_cms_heavy_hitters",
         "docs_lm_perplexity",

@@ -53,14 +53,15 @@ def _sequential_books(res, pq_m, pq_codes, iters, subdim):
 
 
 def test_stacked_books_equal_sequential(res):
-    seq_cells, seq_books = _sequential_books(
-        res, vq._PQ_M, vq._PQ_CODES, vq._PQT_ITERS, vq.EMB_DIM // vq._PQ_M
-    )
-    stk_cells, stk_books = vq._train_books(
-        res, vq._PQ_M, vq._PQ_CODES, vq._PQT_ITERS, vq.EMB_DIM // vq._PQ_M
-    )
-    assert stk_cells == seq_cells
-    assert stk_books == seq_books
+    """At both geometries _train_books serves: the 4x16 books of the
+    residual IVF-PQ entries and the 16x16 cosine books of
+    ivfpq_train_and_write (the appendable-root bootstrap)."""
+    for pq_m in (vq._PQ_M, vq._PQ_COS_M):
+        args = (res, pq_m, vq._PQ_CODES, vq._PQT_ITERS, vq.EMB_DIM // pq_m)
+        seq_cells, seq_books = _sequential_books(*args)
+        stk_cells, stk_books = vq._train_books(*args)
+        assert stk_cells == seq_cells, f"pq_m={pq_m}"
+        assert stk_books == seq_books, f"pq_m={pq_m}"
 
 
 def test_literal_trainer_equals_lazy_chain(spark):

@@ -55,7 +55,6 @@ LOCAL_ONLY_FAMILY = {
     "docs_lang_id",
     "emb_cosine_neardup",
     "emb_kmeans",
-    "emb_pq_adc",
     # round 7 additions (driver set at budget): the 3-round BPE train
     # (#103) and the trained-vocabulary corpus tokenizer (#104)
     # round 7: explicit HyperLogLog sketch (#114)
@@ -78,7 +77,6 @@ LOCAL_ONLY_FAMILY = {
     "docs_lm_perplexity",
     "docs_vocab_coverage",
     "emb_ivf_ann_trained",
-    "emb_pq_adc_trained",
     # round 8 additions (driver set at budget): the build/serve split of
     # the trained ANN indexes (#143-#146) — build persists quantizers +
     # codes via the snapshot store, serve answers from the stored index
@@ -122,7 +120,6 @@ LOCAL_ONLY_FAMILY = {
     "docs_dsir_weights",
     "docs_hll_union",
     "docs_boilerplate_prune",
-    "emb_hamming_ann",
     "emb_ivfpq_residual",
     # round 12 rotation #9: NINETEEN entries promoted — the whole
     # never-externally-checked backlog (docs_dedup_clusters,
