@@ -66,38 +66,11 @@ def hashed_shingles_sql(shingles_expr: str) -> str:
     return f"list_transform({shingles_expr}, s -> {md5_hash60_sql('s')} % {MERSENNE_P})"
 
 
-def minhash_signature(hashes: Column, k: int = 16) -> Column:
-    """MinHash signature (array<bigint> of length k) over pre-hashed
-    shingles (see :func:`hashed_shingles`).
-
-    Implemented as ONE ``aggregate`` fold with an array<bigint> accumulator
-    updating all k slots per shingle. This matters: expressing it as k
-    separate array_min(transform(...)) calls duplicates the ``hashes``
-    subtree k times, and Spark cannot eliminate common subexpressions
-    inside interpreted higher-order functions — the md5 hashing would run
-    k× per document (observed 17× slowdown at sf0.1).
-
-    Empty shingle sets keep the sentinel ``MERSENNE_P`` in every slot so
-    two empty docs collide (they are trivially duplicates).
-    """
-    a_consts = F.array(*[F.lit(a) for a, _ in MINHASH_COEFFS[:k]])
-    b_consts = F.array(*[F.lit(b) for _, b in MINHASH_COEFFS[:k]])
-    zero = F.array_repeat(F.lit(MERSENNE_P).cast("long"), k)
-
-    def step(acc: Column, h: Column) -> Column:
-        # per shingle: acc[j] = min(acc[j], (a_j*h + b_j) mod p) for all j
-        updated = F.zip_with(
-            a_consts,
-            b_consts,
-            lambda a, b: (a * h + b) % F.lit(MERSENNE_P),
-        )
-        return F.zip_with(acc, updated, lambda m, u: F.least(m, u))
-
-    return F.aggregate(hashes, zero, step)
-
-
 def minhash_signature_sql(hashes_expr: str, k: int = 16) -> str:
-    """DuckDB rendering of :func:`minhash_signature` (same constants).
+    """DuckDB rendering of the MinHash signature
+    (operators/minhash.py::signatures, same constants): k slots of
+    min((a*h + b) mod p) over the pre-hashed shingles. Empty shingle sets
+    keep the sentinel ``MERSENNE_P`` in every slot.
 
     ``hashes_expr`` should be a bare column/alias holding the pre-hashed
     shingle list so each of the k slots reuses it.
@@ -128,8 +101,10 @@ def simhash(tokens: Column, bits: int = SIMHASH_BITS) -> Column:
     one bigint (60 bits < 2^63).
 
     Single-pass fold with an array<int> vote accumulator — per-bit
-    aggregates would recompute the token hashing ``bits`` times (see
-    :func:`minhash_signature`).
+    aggregates would recompute the token hashing ``bits`` times: Spark
+    cannot eliminate common subexpressions inside interpreted
+    higher-order functions (observed 17× slowdown at sf0.1 for the same
+    shape over MinHash slots).
     """
     hashes = F.array_distinct(F.transform(tokens, md5_hash60))
     bit_masks = F.array(*[F.lit(2**i).cast("long") for i in range(bits)])

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
+from projekt_data_engineering_iubh_spark.functions import hashing
+
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
 
 # tiny per-language stopword lists for the language-ID heuristic; order of
@@ -132,6 +134,18 @@ def predicted_lang_sql(tokens_expr: str) -> str:
 # ---------------------------------------------------------------------------
 
 PUNCT_RE = "[^a-zA-Z0-9 ]"
+
+# The deterministic 80/20 train/test split: a pure function of
+# (salt, doc_id), so a document keeps its side across runs, engines,
+# partitionings and corpus growth, whether it arrives by stream or batch.
+SPLIT_SALT = "split_v1"
+SPLIT_PCT_TRAIN = 80
+
+
+def train_test_split(doc_id: Column) -> Column:
+    """'train' or 'test' for each ``doc_id`` (see SPLIT_SALT)."""
+    h = hashing.md5_hash60(F.concat(F.lit(SPLIT_SALT), doc_id.cast("string")))
+    return F.when(h % 100 < SPLIT_PCT_TRAIN, "train").otherwise("test")
 EN_STOPWORDS = LANG_STOPWORDS["en"]
 STOPWORDS_SQL = "[" + ", ".join(f"'{w}'" for w in EN_STOPWORDS) + "]"
 

@@ -84,27 +84,35 @@ def _require_local(root: str) -> None:
         )
 
 
-def append_one(df: DataFrame, root: str) -> None:
-    """Land ``df`` as ONE new delta file by atomic rename (empty frames
-    write nothing). Local-FS-only (see :func:`_require_local`); if Spark
-    wrote the temp dir somewhere this process cannot see (non-local
-    default filesystem), raise rather than silently dropping the rows."""
-    _require_local(root)
-    delta = appends_dir(root)
-    os.makedirs(delta, exist_ok=True)
-    tmp = os.path.join(delta, f".tmp-{uuid.uuid4().hex}")
+def land_file(df: DataFrame, dir_path: str) -> None:
+    """Land ``df`` as ONE new parquet file in ``dir_path`` by atomic
+    rename out of a hidden temp dir (empty frames write nothing) — the
+    single writer behind the ``_appends`` delta and the bucketed band
+    index's ``_tombstones`` sidecar. Local-FS-only (see
+    :func:`_require_local`); if Spark wrote the temp dir somewhere this
+    process cannot see (non-local default filesystem), raise rather than
+    silently dropping the rows."""
+    _require_local(dir_path)
+    os.makedirs(dir_path, exist_ok=True)
+    tmp = os.path.join(dir_path, f".tmp-{uuid.uuid4().hex}")
     df.coalesce(1).write.parquet(tmp)
     if not os.path.isdir(tmp):
         raise RuntimeError(
-            f"band_delta.append_one: Spark wrote {tmp!r} but it is not "
+            f"band_delta.land_file: Spark wrote {tmp!r} but it is not "
             "visible on the local filesystem — the session's default "
-            "filesystem is non-local, which would silently discard this "
-            "append. Use a local delta root (deploy/README.md)."
+            "filesystem is non-local, which would silently discard these "
+            "rows. Use a local delta root (deploy/README.md)."
         )
     part = glob.glob(os.path.join(tmp, "part-*.parquet"))
     if part:  # empty frames write no part file
-        os.replace(part[0], os.path.join(delta, f"{uuid.uuid4().hex}.parquet"))
+        name = f"{uuid.uuid4().hex}.parquet"
+        os.replace(part[0], os.path.join(dir_path, name))
     shutil.rmtree(tmp, ignore_errors=True)
+
+
+def append_one(df: DataFrame, root: str) -> None:
+    """Land ``df`` as ONE new delta file under ``root`` (:func:`land_file`)."""
+    land_file(df, appends_dir(root))
 
 
 def read_delta(spark: SparkSession, root: str) -> DataFrame | None:

@@ -10,8 +10,8 @@ components incrementally at ingest time.
 
 Layout under one index root:
   ``<root>/bands/``     LSH band rows (doc_id, band_no, band_key, minhash)
-                        — the same rows streaming/neardup_stream.py keeps,
-                        append-only;
+                        from operators/minhash.py::band_rows — the rows
+                        streaming/neardup_stream.py keeps, append-only;
   ``<root>/clusters/``  the cluster map (doc_id, cluster_id), rewritten
                         per ingest (only touched rows change value).
 
@@ -26,7 +26,7 @@ maintaining the from-scratch query's own candidate rule incrementally:
 every band row carries ``rn`` — the doc's 1-based rank within its
 (band_no, band_key) bucket ordered by doc_id — and candidate edges only
 ever originate from rows with ``rn <= max_bucket``, exactly
-plans/text_queries.py::_lsh_pairs's capped left side. Ranks stay
+operators/minhash.py::lsh_pairs's capped left side. Ranks stay
 correct incrementally because ingest REQUIRES monotone doc_ids (every
 batch id greater than every stored id — the natural append-only corpus
 contract, validated per ingest): a new doc ranks strictly after every
@@ -73,15 +73,14 @@ from projekt_data_engineering_iubh_spark.functions import hashing
 from projekt_data_engineering_iubh_spark.operators.connected_components import (
     connected_components,
 )
-from projekt_data_engineering_iubh_spark.pipeline import store
-from projekt_data_engineering_iubh_spark.plans.text_queries import (
+from projekt_data_engineering_iubh_spark.operators.minhash import (
     _MINHASH_K,
+    BAND_ROW_KEY,
     LSH_MAX_BUCKET,
-    signatures_from,
-)
-from projekt_data_engineering_iubh_spark.streaming.neardup_stream import (
     band_rows,
+    signatures,
 )
+from projekt_data_engineering_iubh_spark.pipeline import store
 
 DEFAULT_TAU = 0.5  # signature-agreement threshold, same as docs_dedup_apply
 
@@ -109,7 +108,7 @@ def _pairs_within(
     """Near-dup edges among one band-row set.
 
     ``max_bucket`` applies the from-scratch query's hot-bucket guard
-    (plans/text_queries.py::_lsh_pairs): only rows whose ``rn`` column
+    (operators/minhash.py::lsh_pairs): only rows whose ``rn`` column
     (bucket rank by doc_id) is at or under the cap originate edges —
     ``bands`` must carry ``rn`` when the cap is set. Uncapped callers
     (small frames: one batch's internal edges in pipeline/ingest.py's
@@ -147,7 +146,7 @@ def init_cluster_index(
     full-batch cluster map (one CC over the corpus's CAPPED near-dup
     graph — the same LSH_MAX_BUCKET candidate rule as the registered
     docs_dedup_clusters, so the map starts in exact parity)."""
-    bands = band_rows(signatures_from(docs)).withColumn(
+    bands = band_rows(signatures(docs)).withColumn(
         "rn", F.row_number().over(_bucket_w()).cast("long")
     )
     bands.write.mode("overwrite").parquet(_bands_dir(root))
@@ -236,7 +235,7 @@ def ingest_batch(
     idx = spark.read.parquet(_bands_dir(root)).join(
         batch.select("doc_id"), "doc_id", "left_anti"
     )
-    bb = bands if bands is not None else band_rows(signatures_from(batch))
+    bb = bands if bands is not None else band_rows(signatures(batch))
     # union bucket ranks for the batch rows: stored occupancy (distinct
     # docs — crash-retry duplicates don't inflate) + in-batch rank.
     # Occupancy is aggregated over the TOUCHED buckets only.
@@ -343,7 +342,8 @@ def maintain(
     (r5 VERDICT #4): pass ``band_table`` to fold the batch tier's
     bucketed band index delta (corpus_store.compact_band_index) and/or
     ``signature_index`` to fold the streaming near-dup index delta
-    (streaming/neardup_stream.compact_signature_index) — both run the
+    (delta_index.fold_index on the band-row key, what
+    streaming/neardup_stream.compact_signature_index runs) — both run the
     shared pipeline/band_delta.py fold protocol, so one compaction
     invariant (live-list → integrate → ledger, one-cycle folded grace)
     covers every index in the deployment.
@@ -398,10 +398,8 @@ def maintain(
             spark, band_table
         )
     if signature_index is not None:
-        from projekt_data_engineering_iubh_spark.streaming.neardup_stream import (
-            compact_signature_index,
-        )
+        from projekt_data_engineering_iubh_spark.pipeline import delta_index
 
-        compact_signature_index(spark, signature_index)
+        delta_index.fold_index(spark, signature_index, BAND_ROW_KEY)
         out["signature_index_compactions"] = 1
     return out

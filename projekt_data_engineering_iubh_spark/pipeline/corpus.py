@@ -9,8 +9,9 @@ into the job an LLM-data team actually runs.
       → deterministic hash train/test split
       → parquet partitioned by (split, lang)
 
-Every stage is one of the registry's oracle-verified operators
-(plans/text_queries.py) — this module only composes them, so the
+Every stage is built from the expressions and operators behind the
+registry's oracle-verified queries (functions/text.py,
+operators/minhash.py) — this module only composes them, so the
 pipeline's correctness budget is the already-driver-checked pieces plus
 the composition test (tests/test_corpus_pipeline.py).
 
@@ -23,23 +24,16 @@ partition-pruned.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from projekt_data_engineering_iubh_spark.catalog import load_table
-from projekt_data_engineering_iubh_spark.functions import hashing, text as tx
+from projekt_data_engineering_iubh_spark.catalog import load_table, spread
+from projekt_data_engineering_iubh_spark.functions import text as tx
+from projekt_data_engineering_iubh_spark.operators import minhash as mh
 from projekt_data_engineering_iubh_spark.operators.connected_components import (
     connected_components,
-)
-from projekt_data_engineering_iubh_spark.plans.text_queries import (
-    LSH_MAX_BUCKET,
-    _PUNCT_RE,
-    _SPLIT_PCT_TRAIN,
-    _SPLIT_SALT,
-    _lsh_pairs,
-    quality_score_expr,
-    stopword_count_expr,
 )
 
 DEFAULT_LANGS = ("en", "de", "es", "fr")
@@ -96,7 +90,7 @@ class CorpusStats:
 def _quality_lane(
     d: DataFrame, langs: tuple[str, ...], min_quality: float
 ) -> DataFrame:
-    # the score and its inputs come from text_queries' shared helpers —
+    # the score and its inputs come from functions/text.py's helpers —
     # the SAME expressions behind the oracle-verified docs_text_stats
     # query and the _CORPUS_SQL oracle, so the shipped corpus cannot
     # drift from the verified score (r2 ADVICE: the former inline copy
@@ -107,10 +101,10 @@ def _quality_lane(
         "*",
         F.size(toks).alias("_nt"),
         F.length("text").alias("_nc"),
-        F.regexp_count("text", F.lit(_PUNCT_RE)).alias("_punct"),
-        stopword_count_expr(toks).alias("_stop"),
+        F.regexp_count("text", F.lit(tx.PUNCT_RE)).alias("_punct"),
+        tx.stopword_count_expr(toks).alias("_stop"),
     ).filter(F.col("_nt") > 0)
-    score = quality_score_expr(
+    score = tx.quality_score_expr(
         F.col("_nt"), F.col("_nc"), F.col("_punct"), F.col("_stop")
     )
     return stats.filter(score >= min_quality).select(d.columns)
@@ -129,9 +123,9 @@ def curate(
 
     NOT fully lazy since round 5: the capped near-dup candidate
     generator eagerly materializes the banded signature rows
-    (localCheckpoint inside _lsh_pairs — the skew guard's exchange-reuse
-    fix), so CONSTRUCTING this frame already runs the signature
-    pipeline. Callers that only need the schema or plan shape should not
+    (localCheckpoint inside minhash.lsh_pairs — the skew guard's
+    exchange-reuse fix), so CONSTRUCTING this frame already runs the
+    signature pipeline. Callers that only need the schema or plan shape should not
     call curate().
 
     ``_quality`` lets :func:`run` share one (persisted) quality lane
@@ -147,21 +141,12 @@ def curate(
     # transitive near-dup removal over the SURVIVING docs (graph edges
     # come from the full-corpus LSH pairs; restricting components to the
     # quality lane keeps a quality doc that duplicated a filtered one).
-    # Occupancy probe (r13, same gate as docs_dedup_apply): when no band
-    # bucket exceeds the cap, the capped plan's row_number window and its
-    # eager banded-signature materialization are output-neutral — the
-    # edge SET is identical — and are skipped.
-    from projekt_data_engineering_iubh_spark.plans.text_queries import (
-        _max_band_occupancy,
-    )
-
-    cap = (
-        LSH_MAX_BUCKET
-        if _max_band_occupancy(spark, sf_dir) > LSH_MAX_BUCKET
-        else None
-    )
-    edges = _lsh_pairs(spark, sf_dir, max_bucket=cap).filter(
-        F.col("est_jaccard") >= NEAR_DUP_JACCARD
+    # Occupancy probe (r13, the gate docs_dedup_apply shares): see
+    # minhash.lsh_edges.
+    edges = mh.lsh_edges(
+        mh.signatures(spread(load_table(spark, sf_dir, "documents"))),
+        os.path.join(sf_dir, "documents.parquet"),
+        NEAR_DUP_JACCARD,
     )
     if _quality is None:
         # the scorer's fit+score is the pipeline's most expensive stage
@@ -190,13 +175,7 @@ def curate(
     keep = comp.filter(F.col("doc_id") == F.col("cluster_id")).select("doc_id")
     deduped = quality.join(keep, "doc_id", "left_semi")
 
-    h = hashing.md5_hash60(
-        F.concat(F.lit(_SPLIT_SALT), F.col("doc_id").cast("string"))
-    )
-    return deduped.withColumn(
-        "split",
-        F.when(h % 100 < _SPLIT_PCT_TRAIN, "train").otherwise("test"),
-    )
+    return deduped.withColumn("split", tx.train_test_split(F.col("doc_id")))
 
 
 def run(

@@ -30,6 +30,13 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from projekt_data_engineering_iubh_spark.functions import hashing
+from projekt_data_engineering_iubh_spark.operators.minhash import (
+    _MINHASH_K,
+    BAND_ROW_KEY,
+    band_rows,
+    signatures,
+)
 from projekt_data_engineering_iubh_spark.pipeline import band_delta
 
 DEFAULT_BUCKETS = 16  # sized for tests; production sizes to ~executor count
@@ -82,17 +89,6 @@ def _write_bands(bands: DataFrame, table: str, mode: str, buckets: int) -> None:
     )
 
 
-def _band_rows_of(docs: DataFrame) -> DataFrame:
-    from projekt_data_engineering_iubh_spark.plans.text_queries import (
-        signatures_from,
-    )
-    from projekt_data_engineering_iubh_spark.streaming.neardup_stream import (
-        band_rows,
-    )
-
-    return band_rows(signatures_from(docs))
-
-
 def write_bucketed_corpus(
     df: DataFrame, table: str, *, buckets: int = DEFAULT_BUCKETS
 ) -> None:
@@ -122,7 +118,7 @@ def append_band_index(
     it into the bucketed table on the maintenance cadence. ``bands``
     lets a caller that already computed the batch's band rows (the
     composed ingest) avoid re-running the signature pipeline."""
-    rows = bands if bands is not None else _band_rows_of(docs)
+    rows = bands if bands is not None else band_rows(signatures(docs))
     spark = rows.sparkSession
     band_delta.append_one(rows, table_location(spark, table))
 
@@ -175,19 +171,10 @@ def delete_band_docs(
     resurrect_band_docs first (the same rule the streaming processors
     apply automatically) — until then the id stays dead, including its
     not-yet-compacted delta rows."""
-    band_delta._require_local(table_location(spark, table))
-    tomb_dir = _tombstones_dir(spark, table)
-    os.makedirs(tomb_dir, exist_ok=True)
-    tmp = os.path.join(tomb_dir, f".tmp-{uuid.uuid4().hex}")
-    doc_ids.select("doc_id").dropDuplicates(["doc_id"]).coalesce(
-        1
-    ).write.parquet(tmp)
-    part = glob.glob(os.path.join(tmp, "part-*.parquet"))
-    if part:
-        os.replace(
-            part[0], os.path.join(tomb_dir, f"{uuid.uuid4().hex}.parquet")
-        )
-    shutil.rmtree(tmp, ignore_errors=True)
+    band_delta.land_file(
+        doc_ids.select("doc_id").dropDuplicates(["doc_id"]),
+        _tombstones_dir(spark, table),
+    )
 
 
 def _overwrite_bands_preserving_sidecars(
@@ -326,11 +313,10 @@ def compact_band_index(
         # zero rows. The base side is the bucketed table (small delta
         # side shuffles to it; base stays scan-only).
         if listed:
-            rows = spark.read.parquet(*listed).dropDuplicates(
-                ["doc_id", "band_no"]
-            )
-            base_keys = spark.table(table).select("doc_id", "band_no")
-            fresh = rows.join(base_keys, ["doc_id", "band_no"], "left_anti")
+            key = list(BAND_ROW_KEY)
+            rows = spark.read.parquet(*listed).dropDuplicates(key)
+            base_keys = spark.table(table).select(*key)
+            fresh = rows.join(base_keys, key, "left_anti")
         else:
             fresh = None
         if tomb is None:
@@ -370,7 +356,7 @@ def write_band_index(
     so band_no is already folded into it and a band_key equi-join alone
     is exact; bucketing on the single key is what lets the corpus side
     skip its shuffle entirely."""
-    _write_bands(_band_rows_of(docs), table, "overwrite", buckets)
+    _write_bands(band_rows(signatures(docs)), table, "overwrite", buckets)
 
 
 def near_matches(
@@ -402,13 +388,8 @@ def near_matches(
     on the index side; the LSH_MAX_BUCKET cap applies to the candidate
     generators (from-scratch AND, since r6, cluster_index's incremental
     path), not this diagnostic match tier."""
-    from projekt_data_engineering_iubh_spark.functions import hashing
-    from projekt_data_engineering_iubh_spark.plans.text_queries import (
-        _MINHASH_K,
-    )
-
     base, delta = band_index_frames(spark, table)
-    bb = bands if bands is not None else _band_rows_of(batch)
+    bb = bands if bands is not None else band_rows(signatures(batch))
     est = hashing.signature_agreement(
         F.col("minhash"), F.col("c_minhash"), _MINHASH_K
     )

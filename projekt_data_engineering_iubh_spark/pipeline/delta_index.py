@@ -32,6 +32,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from projekt_data_engineering_iubh_spark.operators.minhash import BAND_ROW_KEY
 from projekt_data_engineering_iubh_spark.pipeline import ann_index
 from projekt_data_engineering_iubh_spark.pipeline import band_delta as _delta
 
@@ -292,7 +293,7 @@ def detect_key_cols(spark: SparkSession, index_path: str) -> tuple[str, ...]:
 
     cols = spark.read.parquet(store.resolve(index_path)).columns
     if "band_no" in cols:
-        return ("doc_id", "band_no")
+        return BAND_ROW_KEY
     if "vec_id" in cols:
         return ("vec_id",)
     raise ValueError(

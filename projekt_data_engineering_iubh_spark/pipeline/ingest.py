@@ -23,9 +23,10 @@ signatures compute ONCE (checkpointed band rows threaded into every
 consumer); the cluster-map CC runs over the touched subgraph only.
 Per-batch cost is linear in batch size and nothing rescans corpus text.
 Bucket-occupancy caveat: the stored-index joins are per-batch linear
-but bucket-unbounded (the LSH_MAX_BUCKET cap guards the from-scratch
-candidate generator, not the stored index — see cluster_index.py's
-parity contract for why, and the batch rerun for the reconciliation).
+but bucket-unbounded (operators/minhash.py's LSH_MAX_BUCKET cap guards
+the from-scratch candidate generator, not the stored index — see
+cluster_index.py's parity contract for why, and the batch rerun for the
+reconciliation).
 
 Crash recovery: RE-RUN THE FAILED BATCH — every step tolerates replay.
 cluster_index.ingest_batch is idempotent (prior map rows recomputed),
@@ -49,6 +50,10 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from projekt_data_engineering_iubh_spark.operators.minhash import (
+    band_rows,
+    signatures,
+)
 from projekt_data_engineering_iubh_spark.pipeline import cluster_index, corpus_store
 
 
@@ -81,7 +86,7 @@ def ingest(
     """
     batch = batch.localCheckpoint(eager=True)  # one stable input snapshot
     # the batch's band rows compute ONCE for every consumer below
-    bb = corpus_store._band_rows_of(batch).localCheckpoint(eager=True)
+    bb = band_rows(signatures(batch)).localCheckpoint(eager=True)
 
     exact = corpus_store.exact_matches(spark, batch, corpus_table).select(
         "doc_id", F.col("match_doc_id").alias("exact_match")

@@ -30,11 +30,14 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from projekt_data_engineering_iubh_spark.catalog import load_table, spread
 from projekt_data_engineering_iubh_spark.functions import hashing, text as tx
-from projekt_data_engineering_iubh_spark.plans.registry import register
-from projekt_data_engineering_iubh_spark.plans.text_queries import (
+from projekt_data_engineering_iubh_spark.operators import minhash as mh
+from projekt_data_engineering_iubh_spark.operators.minhash import (
     _LSH_BANDS,
     _LSH_ROWS,
     _MINHASH_K,
+)
+from projekt_data_engineering_iubh_spark.plans.registry import register
+from projekt_data_engineering_iubh_spark.plans.text_queries import (
     _SIG_CTE,
     _signatures,
 )
@@ -417,28 +420,10 @@ def docs_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("c_doc").alias("exact_match")
     )
 
-    p = hashing.MERSENNE_P
-    sig = _signatures(spark, sf_dir).filter(
-        F.element_at(F.col("minhash"), 1) < F.lit(p)
-    )
-    sig_src = sig.join(d.select("doc_id", "source"), "doc_id")
-    band = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band_no"),
-                    F.xxhash64(
-                        F.lit(b),
-                        F.slice("minhash", b * _LSH_ROWS + 1, _LSH_ROWS),
-                    ).alias("band_key"),
-                )
-                for b in range(_LSH_BANDS)
-            ]
-        )
-    )
-    bands = sig_src.select(
-        "doc_id", "source", "minhash", band.alias("band")
-    ).select("doc_id", "source", "minhash", "band.band_no", "band.band_key")
+    # sentinel signatures leave before the source join (band_rows'
+    # exclusion, applied early)
+    sig = _signatures(spark, sf_dir).filter(mh.has_shingles())
+    bands = mh.band_rows(sig.join(d.select("doc_id", "source"), "doc_id"))
     a = bands.filter(F.col("source") != "src0").alias("a")
     c = bands.filter(F.col("source") == "src0").alias("c")
     est = (

@@ -17,12 +17,21 @@ it survives big corpora; use it to verify LSH candidates, not to scan.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from projekt_data_engineering_iubh_spark.catalog import load_table, spread
 from projekt_data_engineering_iubh_spark.functions import hashing, text as tx
+from projekt_data_engineering_iubh_spark.operators import minhash as mh
 from projekt_data_engineering_iubh_spark.operators.connected_components import (
     connected_components,
+)
+from projekt_data_engineering_iubh_spark.operators.minhash import (
+    _LSH_BANDS,
+    _LSH_ROWS,
+    _MINHASH_K,
+    LSH_MAX_BUCKET,
 )
 from projekt_data_engineering_iubh_spark.plans.registry import register
 
@@ -71,79 +80,6 @@ def docs_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MinHash signatures + LSH candidate pairs
 # ---------------------------------------------------------------------------
 
-_MINHASH_K = 16
-_LSH_BANDS = 4
-_LSH_ROWS = _MINHASH_K // _LSH_BANDS
-
-# Hot-bucket skew guard (r4 VERDICT #1): a boilerplate-heavy corpus can
-# put B near-identical docs into ONE band bucket, and an uncapped
-# self-join materializes B²/2 candidate pairs there before any filtering.
-# With the cap, each member pairs only with the bucket's LSH_MAX_BUCKET
-# smallest doc_ids, so an oversized bucket emits ≤ B·cap pairs (linear in
-# B) while staying CONNECTED: member k>cap still gets edges to members
-# 1..cap, and min-label propagation collapses the whole bucket to one
-# component exactly as all-pairs would. Buckets at or under the cap are
-# bit-identical to the uncapped join (driver data tops out at occupancy 4
-# — see tools/scale_sweep.py --adversarial for the case where it binds).
-LSH_MAX_BUCKET = 32
-
-
-# occupancy-probe memo (r7, mirrors plans/vector_queries._OCC_CACHE):
-# max band-bucket occupancy is a pure function of the documents table's
-# bytes and the MinHash/LSH constants, so repeated plan builds in one
-# process pay the probe once per table version.
-_BAND_OCC_CACHE: dict[tuple, int] = {}
-
-
-def _max_band_occupancy(spark: SparkSession, sf_dir: str) -> int:
-    """Max LSH band-bucket occupancy over the documents table — one
-    aggregate into (band_no, band_key) groups, map-side combined. This is
-    the runtime decision input for the hot-bucket guard: when NO bucket
-    exceeds LSH_MAX_BUCKET (driver data tops out at occupancy 4), the
-    capped plan's row_number window + eager materialization are provably
-    output-neutral and can be skipped entirely (r6 VERDICT #1's probe,
-    applied to the text path). Memoized by (path, mtime): a Spark
-    re-write of the dataset deletes/creates part files and bumps the
-    directory mtime."""
-    import os
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        key = (
-            os.path.abspath(path),
-            os.path.getmtime(path),
-            _MINHASH_K,
-            _LSH_BANDS,
-        )
-    except OSError:
-        key = None
-    if key is not None and key in _BAND_OCC_CACHE:
-        return _BAND_OCC_CACHE[key]
-    sig = _signatures(spark, sf_dir).filter(
-        F.element_at(F.col("minhash"), 1) < F.lit(hashing.MERSENNE_P)
-    )
-    band = F.explode(
-        F.array(
-            *[
-                F.xxhash64(
-                    F.lit(b), F.slice("minhash", b * _LSH_ROWS + 1, _LSH_ROWS)
-                )
-                for b in range(_LSH_BANDS)
-            ]
-        )
-    )
-    row = (
-        sig.select(band.alias("band_key"))
-        .groupBy("band_key")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.max("n").alias("mx"))
-        .first()
-    )
-    occ = int(row["mx"]) if row["mx"] is not None else 0
-    if key is not None:
-        _BAND_OCC_CACHE[key] = occ
-    return occ
-
 _SIG_CTE = f"""
 WITH toks AS (
   SELECT doc_id, {tx.tokens_sql('text')} AS toks FROM documents
@@ -161,57 +97,20 @@ _MINHASH_SQL = _SIG_CTE + (
 )
 
 
-def signatures_from(d: DataFrame) -> DataFrame:
-    """MinHash signatures for any (doc_id, text, …) frame via explode →
-    codegen'd md5 → k min-aggregates.
-
-    The array-fold formulation (functions/hashing.py::minhash_signature)
-    is correct but runs md5 inside an interpreted lambda (~660µs/doc).
-    Exploding shingles moves the hashing into whole-stage codegen and the
-    k universal hashes into vectorized projections; partial aggregation
-    min-combines map-side, so the shuffle carries only docs × k longs.
-    Same constants → identical signatures (the DuckDB oracle is unchanged).
-
-    Shared by the batch queries (via :func:`_signatures`) and the
-    streaming near-dup tier (streaming/neardup_stream.py), so stream and
-    batch produce bit-identical signatures for the same text.
-    """
-    # tokenize once into a projected column: shingles() references its
-    # token input ~5× (size + 3 slices + guard), and the tokenizer ends
-    # in an interpreted filter HOF that gets no CSE (measured 1.11s →
-    # 0.91s at sf0.1 for the signature pipeline)
-    t = d.select("doc_id", tx.tokens(F.col("text")).alias("toks"))
-    exploded = t.select(
-        "doc_id", F.explode_outer(tx.shingles(F.col("toks"))).alias("s")
-    )
-    h = (hashing.md5_hash60(F.col("s")) % F.lit(hashing.MERSENNE_P)).alias("h")
-    hashed = exploded.select("doc_id", h)
-    p = F.lit(hashing.MERSENNE_P).cast("long")
-    mins = [
-        F.coalesce(
-            F.min((F.lit(a) * F.col("h") + F.lit(b)) % p), p
-        ).alias(f"mh{i}")
-        for i, (a, b) in enumerate(hashing.MINHASH_COEFFS[:_MINHASH_K])
-    ]
-    return (
-        hashed.groupBy("doc_id")
-        .agg(*mins)
-        .select(
-            "doc_id",
-            F.array(*[f"mh{i}" for i in range(_MINHASH_K)]).alias("minhash"),
-        )
-    )
+def _documents_path(sf_dir: str) -> str:
+    """The ``documents`` table's directory (keys the occupancy memo)."""
+    return os.path.join(sf_dir, "documents.parquet")
 
 
 def _signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Signatures of the driver ``documents`` table (see signatures_from).
+    """Signatures of the driver ``documents`` table (operators/minhash.py).
 
     Keyless spread: partitioning by doc_id would elide the groupBy
     exchange inside — but that exchange is what AQE reuses across the
     two sides of the LSH band self-join, and eliding it also drops
     map-side partial aggregation of the exploded rows.
     """
-    return signatures_from(spread(load_table(spark, sf_dir, "documents")))
+    return mh.signatures(spread(load_table(spark, sf_dir, "documents")))
 
 
 @register("docs_minhash_signatures", oracle=_MINHASH_SQL, driver=False)
@@ -229,15 +128,8 @@ def docs_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Empty shingle sets (docs with <3 tokens) carry the all-MERSENNE_P
-# sentinel signature (functions/hashing.py::minhash_signature). Banding
-# them would put EVERY short doc in one shared bucket: est_jaccard 1.0
-# between unrelated documents, and a single quadratic hot bucket in the
-# self-join at scale. They are excluded from candidate generation and
-# stay singletons in the transitive dedup (the CC vertex set is all
-# docs). Non-empty signatures always have minhash[1] < p (each slot is
-# min((a*h+b) mod p) ≤ p-1), so `minhash[1] < p` is the exact, portable
-# "has shingles" predicate on both engines.
+# The oracle's band rows: the sentinel exclusion of
+# operators/minhash.py::band_rows, spelled as SQL.
 def _bands_branches_sql(sig_rel: str, carry_minhash: bool = False) -> str:
     carry = " minhash," if carry_minhash else ""
     return "\n  UNION ALL\n".join(
@@ -274,178 +166,12 @@ def _lsh_pairs(
     max_bucket: int | None = None,
     with_shsets: bool = False,
 ) -> DataFrame:
-    """Candidate pairs with signature-estimated Jaccard (see the registered
-    query below for the design notes).
-
-    ``max_bucket``: hot-bucket skew guard (see LSH_MAX_BUCKET). When set,
-    the left join side is restricted to each bucket's ``max_bucket``
-    smallest doc_ids (row_number over the bucket, ordered by doc_id) —
-    buckets at or under the cap produce the exact all-pairs set, oversized
-    buckets produce the multi-star that keeps the bucket connected at
-    O(B·cap) pairs. The capped form may emit a pair once per agreeing
-    band (the first-agreeing-band dedup predicate is unsound under
-    capping: a pair can agree on an earlier band in which neither doc was
-    within that bucket's cap, so "earlier band agrees" no longer implies
-    "already emitted"); duplicates are harmless for the CC consumer
-    (min-label propagation over a multigraph) and est_jaccard is
-    identical per emission.
-
-    ``with_shsets`` (r14, VERDICT r13 #3): ONE tokenization feeds both
-    the MinHash signatures and the exact shingle sets — the per-doc
-    ``shset`` (array_distinct of the shingles) is computed first, the
-    signature explodes IT (min over the distinct set == min over the
-    shingle multiset, since every hash is a pure function of the
-    shingle — signatures are bit-identical, pinned by
-    tests/test_shset_signatures.py::test_shset_signatures_identical),
-    and the set rides the band rows into the self-join, so the pair
-    rows come out carrying (set_a, set_b) with NO second tokenization
-    pass and NO id-joins to re-attach sets (docs_ngram_jaccard
-    previously tokenized+shingled the corpus two more times). The band
-    shuffle carries each doc's set once per band — bounded by
-    _LSH_BANDS× the set bytes — against two whole corpus scans +
-    tokenizations + two join shuffles removed; only the uncapped path
-    supports it (the capped path's localCheckpoint would materialize
-    the sets)."""
-    # sentinel exclusion: see _bands_branches_sql. Docs with empty
-    # shingle sets never enter candidate generation (they'd otherwise
-    # share one band bucket and pair quadratically with est_jaccard 1.0).
-    if with_shsets:
-        assert max_bucket is None, "with_shsets: uncapped path only"
-        d = spread(load_table(spark, sf_dir, "documents"))
-        s = d.select(
-            "doc_id",
-            F.array_distinct(
-                tx.shingles(tx.tokens(F.col("text")))
-            ).alias("shset"),
-        )
-        # only the pos==0 row carries the set bytes into the partial
-        # aggregate (every other exploded row ships a null), so the
-        # agg input is sets×1, not sets×|shset|
-        exploded = s.select(
-            "doc_id",
-            "shset",
-            F.posexplode_outer("shset").alias("pos", "sh"),
-        ).select(
-            "doc_id",
-            (hashing.md5_hash60(F.col("sh")) % F.lit(hashing.MERSENNE_P)).alias("h"),
-            F.when(F.col("pos") == 0, F.col("shset")).alias("shset0"),
-        )
-        p = F.lit(hashing.MERSENNE_P).cast("long")
-        mins = [
-            F.coalesce(
-                F.min((F.lit(ca) * F.col("h") + F.lit(cb)) % p), p
-            ).alias(f"mh{i}")
-            for i, (ca, cb) in enumerate(hashing.MINHASH_COEFFS[:_MINHASH_K])
-        ]
-        sig = (
-            exploded.groupBy("doc_id")
-            .agg(*mins, F.first("shset0", ignorenulls=True).alias("shset"))
-            .select(
-                "doc_id",
-                F.array(*[f"mh{i}" for i in range(_MINHASH_K)]).alias(
-                    "minhash"
-                ),
-                "shset",
-            )
-        )
-    else:
-        sig = _signatures(spark, sf_dir)
-    sig = sig.filter(
-        F.element_at(F.col("minhash"), 1) < F.lit(hashing.MERSENNE_P)
-    )
-    # band_key is xxhash64(band_no, slice) — a single bigint join key
-    # instead of the '-'-joined string (shrinks the shuffle rows by the
-    # string key and skips the per-row string build; VERDICT r1 #7). The
-    # oracle joins on the string key: the candidate SETS agree because
-    # slice equality ⇔ key equality on both sides (64-bit collisions
-    # across ~4n keys are negligible, and a collision would also need the
-    # doc pair to survive the est_jaccard comparison identically).
-    band = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band_no"),
-                    F.xxhash64(
-                        F.lit(b), F.slice("minhash", b * _LSH_ROWS + 1, _LSH_ROWS)
-                    ).alias("band_key"),
-                )
-                for b in range(_LSH_BANDS)
-            ]
-        )
-    )
-    carry = ["shset"] if with_shsets else []
-    bands = sig.select("doc_id", "minhash", *carry, band.alias("band")).select(
-        "doc_id", "minhash", *carry, "band.band_no", "band.band_key"
-    )
-    if max_bucket is not None:
-        # Materialize the banded signature rows ONCE (eager localCheckpoint;
-        # at cluster scale configure a checkpoint dir and use checkpoint —
-        # same note as operators/connected_components.py). Capping only ONE
-        # side of the self-join otherwise breaks Spark's exchange reuse
-        # (the sides' plans differ), re-running the signature pipeline once
-        # per reference — measured 3.1 s → 5.5 s for docs_dedup_apply at
-        # sf0.1. From the shared materialization the signatures compute
-        # exactly once, and the capped left side is pruned BEFORE its join
-        # shuffle, so an adversarial hot bucket ships only `cap` left rows
-        # instead of B.
-        w = Window.partitionBy("band_no", "band_key").orderBy("doc_id")
-        bands = bands.withColumn("rn", F.row_number().over(w)).localCheckpoint(
-            eager=True
-        )
-        a = bands.filter(F.col("rn") <= F.lit(max_bucket)).alias("a")
-    else:
-        a = bands.alias("a")
-    b = bands.alias("b")
-    overlap = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    )
-    # dedup without a distinct: a pair agreeing on several bands would be
-    # emitted once per band, so keep only the FIRST agreeing band — earlier
-    # bands' agreement is decidable from the carried signatures (band_key
-    # is the '-'-join of that slice, so slice equality ⇔ key equality)
-    def earlier_bands_disagree() -> F.Column:
-        cond = F.lit(True)
-        for bprev in range(_LSH_BANDS - 1):
-            sa = F.slice(F.col("a.minhash"), bprev * _LSH_ROWS + 1, _LSH_ROWS)
-            sb = F.slice(F.col("b.minhash"), bprev * _LSH_ROWS + 1, _LSH_ROWS)
-            cond = cond & ((F.col("a.band_no") <= bprev) | (sa != sb))
-        return cond
-
-    cond = (
-        (F.col("a.band_no") == F.col("b.band_no"))
-        & (F.col("a.band_key") == F.col("b.band_key"))
-        & (F.col("a.doc_id") < F.col("b.doc_id"))
-    )
-    joined = a.join(b, cond)
-    if max_bucket is None:
-        joined = joined.filter(earlier_bands_disagree())
-    carry_pairs = (
-        [
-            F.col("a.shset").alias("set_a"),
-            F.col("b.shset").alias("set_b"),
-        ]
-        if with_shsets
-        else []
-    )
-    return (
-        joined
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.minhash").alias("sig_a"),
-            F.col("b.minhash").alias("sig_b"),
-            *carry_pairs,
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            (overlap / F.lit(float(_MINHASH_K))).alias("est_jaccard"),
-            *(["set_a", "set_b"] if with_shsets else []),
-        )
-    )
+    """Candidate pairs of the driver ``documents`` table
+    (operators/minhash.py::lsh_pairs). ``with_shsets`` builds the
+    signatures with their shingle sets, which then ride the pair rows as
+    (set_a, set_b) — uncapped path only."""
+    d = spread(load_table(spark, sf_dir, "documents"))
+    return mh.lsh_pairs(mh.signatures(d, with_shset=with_shsets), max_bucket)
 
 
 @register("docs_minhash_lsh_pairs", oracle=_LSH_PAIRS_SQL, headline=True)
@@ -495,7 +221,7 @@ def docs_lsh_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the adversarial fixture. Production consumers (docs_dedup_apply)
     run the same plan at cap=LSH_MAX_BUCKET, where normal buckets are
     untouched. Pair set is distinct'd because the capped form may emit a
-    pair once per agreeing band (see _lsh_pairs)."""
+    pair once per agreeing band (see operators/minhash.py::lsh_pairs)."""
     return _lsh_pairs(spark, sf_dir, max_bucket=1).dropDuplicates(
         ["doc_a", "doc_b"]
     )
@@ -569,26 +295,7 @@ def docs_neardup_takedown_filter(
     signatures, per-doc min/max aggregation. No all-pairs term; the
     erased-set exclusion is a filter pushed below the join (in
     production an anti-join against the broadcast tombstone key set)."""
-    sig = _signatures(spark, sf_dir).filter(
-        F.element_at(F.col("minhash"), 1) < F.lit(hashing.MERSENNE_P)
-    )
-    band = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band_no"),
-                    F.xxhash64(
-                        F.lit(b),
-                        F.slice("minhash", b * _LSH_ROWS + 1, _LSH_ROWS),
-                    ).alias("band_key"),
-                )
-                for b in range(_LSH_BANDS)
-            ]
-        )
-    )
-    bands = sig.select("doc_id", "minhash", band.alias("band")).select(
-        "doc_id", "minhash", "band.band_no", "band.band_key"
-    )
+    bands = mh.band_rows(_signatures(spark, sf_dir))
     corpus = bands.filter(
         (F.col("doc_id") % 2 == 0)
         & (F.col("doc_id") % _TKD_ERASED_MOD != _TKD_ERASED_RES)
@@ -1085,7 +792,7 @@ def docs_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive CTE.
 
     Hot-bucket skew guard (round 5): candidate generation caps each band
-    bucket at LSH_MAX_BUCKET left-side members (see _lsh_pairs) so a
+    bucket at LSH_MAX_BUCKET left-side members (see minhash.lsh_pairs) so a
     boilerplate template cluster of B docs costs O(B·cap) edges, not
     O(B²); the multi-star keeps every oversized bucket one connected
     component, and the cap is mirrored in the oracle's edges CTE, so the
@@ -1100,22 +807,11 @@ def docs_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     exceeds the cap. When none does — always true on the driver data
     (max occupancy 4 vs cap 32) — the capped plan's row_number window
     and its eager localCheckpoint materialization are skipped and the
-    uncapped exchange-reuse self-join runs instead. Output-identical
-    either way: at-or-under-cap buckets produce the exact same candidate
-    set, and the two paths' different duplicate-emission policies (the
-    uncapped path dedups on first-agreeing-band, the capped path may
-    emit a pair once per agreeing band) are invisible through
-    connected components — min-label propagation is multigraph-safe and
-    est_jaccard is identical per emission, so the edge SET after the
-    ≥0.5 filter, and hence every component, is the same."""
+    uncapped exchange-reuse self-join runs instead — output-identical
+    either way (operators/minhash.py::lsh_edges)."""
     d = load_table(spark, sf_dir, "documents")
-    cap = (
-        LSH_MAX_BUCKET
-        if _max_band_occupancy(spark, sf_dir) > LSH_MAX_BUCKET
-        else None
-    )
-    edges = _lsh_pairs(spark, sf_dir, max_bucket=cap).filter(
-        F.col("est_jaccard") >= 0.5
+    edges = mh.lsh_edges(
+        _signatures(spark, sf_dir), _documents_path(sf_dir), 0.5
     )
     comp = connected_components(
         d.select("doc_id"),
@@ -1210,13 +906,8 @@ def docs_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange-reuse path is edge-set-identical and the capped plan's
     row_number window + eager banded materialization are skipped)."""
     d = load_table(spark, sf_dir, "documents")
-    cap = (
-        LSH_MAX_BUCKET
-        if _max_band_occupancy(spark, sf_dir) > LSH_MAX_BUCKET
-        else None
-    )
-    edges = _lsh_pairs(spark, sf_dir, max_bucket=cap).filter(
-        F.col("est_jaccard") >= 0.5
+    edges = mh.lsh_edges(
+        _signatures(spark, sf_dir), _documents_path(sf_dir), 0.5
     )
     comp = connected_components(
         d.select("doc_id"),
@@ -1291,13 +982,8 @@ def docs_dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     occupancy-probe gate: edges feed only multigraph-safe CC) with a
     per-source rollup; registry query #100."""
     d = load_table(spark, sf_dir, "documents")
-    cap = (
-        LSH_MAX_BUCKET
-        if _max_band_occupancy(spark, sf_dir) > LSH_MAX_BUCKET
-        else None
-    )
-    edges = _lsh_pairs(spark, sf_dir, max_bucket=cap).filter(
-        F.col("est_jaccard") >= 0.5
+    edges = mh.lsh_edges(
+        _signatures(spark, sf_dir), _documents_path(sf_dir), 0.5
     )
     comp = connected_components(
         d.select("doc_id"),
@@ -1419,8 +1105,8 @@ def docs_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SPLIT_PCT_TRAIN = 80
-_SPLIT_SALT = "split_v1"
+_SPLIT_PCT_TRAIN = tx.SPLIT_PCT_TRAIN
+_SPLIT_SALT = tx.SPLIT_SALT
 
 _SPLIT_SQL = f"""
 SELECT doc_id, lang,
@@ -1444,15 +1130,8 @@ def docs_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-lang fractions converge to 80/20). One narrow projection; no
     shuffle at all."""
     d = load_table(spark, sf_dir, "documents")
-    h = hashing.md5_hash60(
-        F.concat(F.lit(_SPLIT_SALT), F.col("doc_id").cast("string"))
-    )
     return d.select(
-        "doc_id",
-        "lang",
-        F.when(h % 100 < _SPLIT_PCT_TRAIN, "train").otherwise("test").alias(
-            "split"
-        ),
+        "doc_id", "lang", tx.train_test_split(F.col("doc_id")).alias("split")
     )
 
 
@@ -2193,7 +1872,7 @@ def docs_neardup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver action; edge list and degrees are reused branches."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
     # materialize the DISTINCTed edge list once (eager localCheckpoint —
-    # same contract as _lsh_pairs' banded rows and the CC operator: swap
+    # same contract as minhash.lsh_pairs' banded rows and the CC operator: swap
     # to checkpoint() + SPARK_GRAFT_CHECKPOINT_DIR on a cluster). The
     # graph is consumed by FIVE downstream branches (deg, both wedge
     # sides, closure, final); without truncation each branch replays the

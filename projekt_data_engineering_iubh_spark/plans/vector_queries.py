@@ -283,7 +283,7 @@ def emb_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Hot-bucket skew guard (r4 VERDICT #1), same shape as the text LSH cap
-# (plans/text_queries.py::LSH_MAX_BUCKET): each member pairs only with
+# (operators/minhash.py::LSH_MAX_BUCKET): each member pairs only with
 # its bucket's ANN_MAX_BUCKET smallest vec_ids, bounding an adversarial
 # B-member bucket (e.g. thousands of duplicated vectors hashing to one
 # code) at B·cap pairs instead of B²/2. Buckets at or under the cap are
@@ -2648,7 +2648,7 @@ def _ivfpq_search(
 
     adc = sum(
         F.element_at(F.col(f"t{m}"), F.col(f"c{m}") + 1)
-        for m in range(_PQ_M)
+        for m in range(len(books))
     )
     lean = "qemb" not in codes.columns
     proj = [

@@ -26,12 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from projekt_data_engineering_iubh_spark.functions import hashing
+from projekt_data_engineering_iubh_spark.functions import text as tx
 from projekt_data_engineering_iubh_spark.pipeline.corpus import _quality_lane
-from projekt_data_engineering_iubh_spark.plans.text_queries import (
-    _SPLIT_PCT_TRAIN,
-    _SPLIT_SALT,
-)
 from projekt_data_engineering_iubh_spark.streaming.dedup_stream import (
     exact_dedup_stream,
 )
@@ -55,13 +51,7 @@ def curate_stream(
     deduped = exact_dedup_stream(
         quality, ts_col=ts_col, dedup_horizon=dedup_horizon
     )
-    h = hashing.md5_hash60(
-        F.concat(F.lit(_SPLIT_SALT), F.col("doc_id").cast("string"))
-    )
-    return deduped.withColumn(
-        "split",
-        F.when(h % 100 < _SPLIT_PCT_TRAIN, "train").otherwise("test"),
-    )
+    return deduped.withColumn("split", tx.train_test_split(F.col("doc_id")))
 
 
 def start_corpus_stream(

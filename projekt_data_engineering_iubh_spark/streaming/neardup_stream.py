@@ -5,9 +5,9 @@ near-duplicates of already-ingested corpus at the trigger boundary).
 
 Per micro-batch:
 
-    batch docs → MinHash signatures (plans/text_queries.signatures_from —
-    bit-identical to the batch/oracle pipeline)
-      → LSH band rows (same xxhash64 band keys as docs_minhash_lsh_pairs)
+    batch docs → MinHash signatures and LSH band rows
+    (operators/minhash.py — bit-identical signatures and the same
+    xxhash64 band keys as the batch/oracle pipeline)
       → EQUI-join on (band_no, band_key) against the persisted index
       → signature-agreement gate (est Jaccard ≥ τ) → drop near-dups
       → surviving docs appended to the store AND their band rows appended
@@ -42,46 +42,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from projekt_data_engineering_iubh_spark.functions import hashing
-from projekt_data_engineering_iubh_spark.plans.text_queries import (
-    _LSH_BANDS,
-    _LSH_ROWS,
-    _MINHASH_K,
-    signatures_from,
-)
+from projekt_data_engineering_iubh_spark.operators import minhash as mh
+from projekt_data_engineering_iubh_spark.pipeline import band_delta as _delta
 from projekt_data_engineering_iubh_spark.streaming.corpus_stream import (
     curate_stream,
 )
 
 NEAR_TAU = 0.5  # signature-agreement drop gate (matches the batch tier)
-
-
-def band_rows(sig: DataFrame) -> DataFrame:
-    """(doc_id, minhash) → (doc_id, band_no, band_key, minhash) band rows.
-
-    Same xxhash64 band keys as the batch LSH queries; sentinel (empty
-    shingle) signatures are excluded — a short doc can never be dropped
-    by the near tier (r2 ADVICE rule, carried over from the batch path).
-    """
-    no_sentinel = sig.filter(
-        F.element_at(F.col("minhash"), 1) < F.lit(hashing.MERSENNE_P)
-    )
-    band = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band_no"),
-                    F.xxhash64(
-                        F.lit(b),
-                        F.slice("minhash", b * _LSH_ROWS + 1, _LSH_ROWS),
-                    ).alias("band_key"),
-                )
-                for b in range(_LSH_BANDS)
-            ]
-        )
-    )
-    return no_sentinel.select("doc_id", "minhash", band.alias("b")).select(
-        "doc_id", "b.band_no", "b.band_key", "minhash"
-    )
 
 
 def build_signature_index(docs: DataFrame, index_path: str) -> None:
@@ -100,7 +67,7 @@ def build_signature_index(docs: DataFrame, index_path: str) -> None:
     from projekt_data_engineering_iubh_spark.pipeline import delta_index
 
     delta_index.rebuild_index(
-        band_rows(signatures_from(docs)),
+        mh.band_rows(mh.signatures(docs)),
         index_path,
         compact_hint="compact_signature_index()",
     )
@@ -123,11 +90,11 @@ def neardup_filter_batch(
     the caller reuse already-computed batch band rows (the per-trigger
     processor computes them once for every consumer)."""
     bb = (
-        bands if bands is not None else band_rows(signatures_from(batch))
+        bands if bands is not None else mh.band_rows(mh.signatures(batch))
     ).withColumnRenamed("minhash", "b_minhash")
 
     def _est(a: str, b: str) -> F.Column:
-        return hashing.signature_agreement(F.col(a), F.col(b), _MINHASH_K)
+        return hashing.signature_agreement(F.col(a), F.col(b), mh._MINHASH_K)
 
     drops = (
         bb.join(
@@ -162,24 +129,7 @@ def neardup_filter_batch(
 # load_index(); compact_signature_index() folds exactly the delta files
 # it listed into the next snapshot (appends that race the compaction
 # stay in the delta and remain visible — no lost rows, the property a
-# resolved-dir append could not give). The thin wrappers below keep this
-# module's historical names.
-from projekt_data_engineering_iubh_spark.pipeline import band_delta as _delta
-
-_APPENDS_SUBDIR = _delta.APPENDS_SUBDIR
-_FOLDED_LEDGER = _delta.FOLDED_LEDGER
-
-
-def _appends_dir(index_path: str) -> str:
-    return _delta.appends_dir(index_path)
-
-
-def _folded_names(index_path: str) -> set[str]:
-    return _delta.folded_names(index_path)
-
-
-def _append_files(index_path: str, *, include_folded: bool = False) -> list[str]:
-    return _delta.live_files(index_path, include_folded=include_folded)
+# resolved-dir append could not give).
 
 
 def load_index(spark, index_path: str) -> DataFrame:
@@ -202,7 +152,7 @@ def compact_signature_index(spark, index_path: str, *, _on_listed=None):
     from projekt_data_engineering_iubh_spark.pipeline import delta_index
 
     delta_index.fold_index(
-        spark, index_path, ("doc_id", "band_no"), _on_listed=_on_listed
+        spark, index_path, mh.BAND_ROW_KEY, _on_listed=_on_listed
     )
 
 
@@ -306,7 +256,7 @@ def make_batch_processor(
         # every consumer below (filter, delta append, cluster ingest) —
         # the batch plan must never recompute through the stream source
         stable = batch_df.localCheckpoint(eager=True)
-        bb = band_rows(signatures_from(stable)).localCheckpoint(eager=True)
+        bb = mh.band_rows(mh.signatures(stable)).localCheckpoint(eager=True)
         kept = neardup_filter_batch(stable, index, tau=tau, bands=bb)
         kept = kept.localCheckpoint(eager=True)
         (
@@ -338,8 +288,6 @@ def make_batch_processor(
         _delta.append_one(kept_bands, index_path)
 
         if cluster_root is not None:
-            # lazy import: cluster_index imports band_rows from THIS
-            # module at load time
             from projekt_data_engineering_iubh_spark.pipeline import (
                 cluster_index,
             )

@@ -300,8 +300,7 @@ def test_signature_maintain_reports_lost_race_distinctly(
         raise store.CommitConflict("concurrent fold won")
 
     monkeypatch.setattr(
-        "projekt_data_engineering_iubh_spark.streaming."
-        "neardup_stream.compact_signature_index",
+        "projekt_data_engineering_iubh_spark.pipeline.delta_index.fold_index",
         _lose,
     )
     res = maintenance.maintain_signature_index(

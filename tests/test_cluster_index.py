@@ -138,11 +138,9 @@ def test_randomized_ingest_equals_from_scratch(spark, tmp_path, seed):
     from projekt_data_engineering_iubh_spark.operators.connected_components import (
         connected_components,
     )
-    from projekt_data_engineering_iubh_spark.plans.text_queries import (
-        signatures_from,
-    )
-    from projekt_data_engineering_iubh_spark.streaming.neardup_stream import (
+    from projekt_data_engineering_iubh_spark.operators.minhash import (
         band_rows,
+        signatures as signatures_from,
     )
 
     rng = random.Random(seed)
@@ -355,9 +353,9 @@ def test_maintain_prunes_orphan_band_rows(spark, tmp_path):
     ci.init_cluster_index(spark, corpus, root)
 
     # simulate the crash: band rows for doc 99 land, the map never does
-    from projekt_data_engineering_iubh_spark.streaming.neardup_stream import (
+    from projekt_data_engineering_iubh_spark.operators.minhash import (
         band_rows,
-        signatures_from,
+        signatures as signatures_from,
     )
 
     orphan = _docs(spark, [(99, _A + " orphantoken", "en", "crashed")])

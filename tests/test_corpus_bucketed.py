@@ -108,11 +108,9 @@ def test_band_index_near_tier_exchange_free_and_correct(spark, tmp_path):
             spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
         # inline reference: same signatures, unbucketed join
-        from projekt_data_engineering_iubh_spark.plans.text_queries import (
-            signatures_from,
-        )
-        from projekt_data_engineering_iubh_spark.streaming.neardup_stream import (
+        from projekt_data_engineering_iubh_spark.operators.minhash import (
             band_rows,
+            signatures as signatures_from,
         )
 
         bb = band_rows(signatures_from(batch))
@@ -150,11 +148,9 @@ def test_band_delta_append_fold_cycle(spark, tmp_path):
     (cluster_index.maintain(band_table=...) drives the same fold — see
     the next test.)"""
     from projekt_data_engineering_iubh_spark.pipeline import band_delta
-    from projekt_data_engineering_iubh_spark.plans.text_queries import (
-        signatures_from,
-    )
-    from projekt_data_engineering_iubh_spark.streaming.neardup_stream import (
+    from projekt_data_engineering_iubh_spark.operators.minhash import (
         band_rows,
+        signatures as signatures_from,
     )
 
     docs = load_table(spark, SF_DIR, "documents")
@@ -273,11 +269,9 @@ def test_band_delta_racing_append_stays_live(spark, tmp_path):
         assert got.get(3_000_001) == 1  # matches corpus doc 1 (lowest)
         # next cycle folds the racer; nothing lost
         assert corpus_store.compact_band_index(spark, table) == 1
-        from projekt_data_engineering_iubh_spark.plans.text_queries import (
-            signatures_from,
-        )
-        from projekt_data_engineering_iubh_spark.streaming.neardup_stream import (
+        from projekt_data_engineering_iubh_spark.operators.minhash import (
             band_rows,
+            signatures as signatures_from,
         )
 
         n1 = band_rows(signatures_from(first)).count()
@@ -335,3 +329,31 @@ def test_band_delta_rejects_remote_root(spark):
         band_delta.append_one(docs, "s3a://bucket/warehouse/band_index")
     with _pytest.raises(ValueError, match="local-filesystem-only"):
         band_delta.live_files("hdfs://nn/warehouse/band_index")
+
+
+def test_band_delete_raises_when_write_lands_nothing(spark, monkeypatch):
+    """A takedown key file lands through band_delta's one atomic-file
+    writer: when Spark's write leaves nothing visible on the local
+    filesystem, a non-empty delete raises like a delta append does,
+    rather than returning with no tombstone written."""
+    from pyspark.sql import DataFrameWriter
+
+    from projekt_data_engineering_iubh_spark.pipeline import band_delta
+
+    docs = load_table(spark, SF_DIR, "documents")
+    table = "band_delete_lands_nothing_test"
+    try:
+        corpus_store.write_band_index(docs, table)
+        monkeypatch.setattr(DataFrameWriter, "parquet", lambda self, path: None)
+        with pytest.raises(RuntimeError, match="not visible"):
+            band_delta.append_one(
+                docs.select("doc_id"), corpus_store.table_location(spark, table)
+            )
+        with pytest.raises(RuntimeError, match="not visible"):
+            corpus_store.delete_band_docs(
+                spark, table, docs.filter(F.col("doc_id") < 3)
+            )
+        monkeypatch.undo()
+        assert corpus_store.band_tombstones(spark, table) is None
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")

@@ -186,12 +186,12 @@ def test_neardup_index_join_is_equi_join(spark):
     """The scale contract: the per-batch candidate lookup must be a
     hash/merge EQUI-join on the band key — never a nested-loop/cartesian
     pairing against the index."""
-    from projekt_data_engineering_iubh_spark.streaming.neardup_stream import (
+    from projekt_data_engineering_iubh_spark.operators.minhash import (
         band_rows,
-        neardup_filter_batch,
+        signatures as signatures_from,
     )
-    from projekt_data_engineering_iubh_spark.plans.text_queries import (
-        signatures_from,
+    from projekt_data_engineering_iubh_spark.streaming.neardup_stream import (
+        neardup_filter_batch,
     )
 
     corpus = spark.createDataFrame([(1000, GOOD_EN, "en", _ts(0))], SCHEMA)
@@ -242,12 +242,12 @@ def test_neardup_within_single_trigger_dropped(spark, tmp_path):
     """Two near-dups of EACH OTHER (neither in the index) arriving in the
     same micro-batch: the lower doc_id survives, the higher is dropped by
     the within-batch tier."""
-    from projekt_data_engineering_iubh_spark.streaming.neardup_stream import (
+    from projekt_data_engineering_iubh_spark.operators.minhash import (
         band_rows,
-        neardup_filter_batch,
+        signatures as signatures_from,
     )
-    from projekt_data_engineering_iubh_spark.plans.text_queries import (
-        signatures_from,
+    from projekt_data_engineering_iubh_spark.streaming.neardup_stream import (
+        neardup_filter_batch,
     )
 
     empty_index = band_rows(
@@ -363,6 +363,8 @@ def test_index_compaction_never_loses_racing_appends(spark, tmp_path):
     """compact_signature_index folds exactly the delta files it listed;
     an append landing between listing and commit survives in the delta
     and stays visible through load_index()."""
+    from projekt_data_engineering_iubh_spark.operators import minhash as mh
+    from projekt_data_engineering_iubh_spark.pipeline import band_delta
     from projekt_data_engineering_iubh_spark.streaming import neardup_stream as ns
 
     index_path = str(tmp_path / "idx")
@@ -373,11 +375,11 @@ def test_index_compaction_never_loses_racing_appends(spark, tmp_path):
     def delta_append(doc_id, text):
         import os, uuid, glob as g, shutil
 
-        delta = ns._appends_dir(index_path)
+        delta = band_delta.appends_dir(index_path)
         os.makedirs(delta, exist_ok=True)
         tmp = os.path.join(delta, f".tmp-{uuid.uuid4().hex}")
-        ns.band_rows(
-            ns.signatures_from(
+        mh.band_rows(
+            mh.signatures(
                 spark.createDataFrame([(doc_id, text)], "doc_id long, text string")
             )
         ).coalesce(1).write.parquet(tmp)
@@ -406,16 +408,16 @@ def test_index_compaction_never_loses_racing_appends(spark, tmp_path):
 
     snap = spark.read.parquet(store.resolve(index_path))
     assert {r.doc_id for r in snap.select("doc_id").distinct().collect()} == {1000, 1}
-    assert len(ns._append_files(index_path)) == 1  # live: the racing append
+    assert len(band_delta.live_files(index_path)) == 1  # live: the racing append
 
     # folded files get a one-compaction grace window: still on disk
     # (ledgered, invisible to live listings) until the NEXT compaction
-    assert len(ns._append_files(index_path, include_folded=True)) == 2
+    assert len(band_delta.live_files(index_path, include_folded=True)) == 2
     ns.compact_signature_index(spark, index_path)
     # doc 1's folded file was purged (its window ended); doc 2's file was
     # folded THIS cycle, so it stays on disk in its own grace window
-    assert ns._append_files(index_path) == []
-    assert len(ns._append_files(index_path, include_folded=True)) == 1
+    assert band_delta.live_files(index_path) == []
+    assert len(band_delta.live_files(index_path, include_folded=True)) == 1
     final = ns.load_index(spark, index_path)
     assert {r.doc_id for r in final.select("doc_id").distinct().collect()} == {
         1000, 1, 2,
@@ -428,6 +430,7 @@ def test_signature_compaction_crash_before_ledger_is_idempotent(spark, tmp_path)
     on (doc_id, band_no) keeps the snapshot duplicate-free."""
     import os
 
+    from projekt_data_engineering_iubh_spark.operators import minhash as mh
     from projekt_data_engineering_iubh_spark.pipeline import band_delta, store
     from projekt_data_engineering_iubh_spark.streaming import neardup_stream as ns
 
@@ -435,9 +438,9 @@ def test_signature_compaction_crash_before_ledger_is_idempotent(spark, tmp_path)
     ns.build_signature_index(
         spark.createDataFrame([(1000, GOOD_EN, "en", _ts(0))], SCHEMA), index_path
     )
-    ns._delta.append_one(
-        ns.band_rows(
-            ns.signatures_from(
+    band_delta.append_one(
+        mh.band_rows(
+            mh.signatures(
                 spark.createDataFrame([(1, GOOD_FR)], "doc_id long, text string")
             )
         ),
@@ -451,7 +454,7 @@ def test_signature_compaction_crash_before_ledger_is_idempotent(spark, tmp_path)
     os.remove(
         os.path.join(band_delta.appends_dir(index_path), band_delta.FOLDED_LEDGER)
     )
-    assert len(ns._append_files(index_path)) == 1
+    assert len(band_delta.live_files(index_path)) == 1
 
     ns.compact_signature_index(spark, index_path)
     snap2 = spark.read.parquet(store.resolve(index_path))

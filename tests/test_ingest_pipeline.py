@@ -219,7 +219,12 @@ def test_crash_replay_is_idempotent(spark, tmp_path):
         )
         # simulate the crash: map ingest + band append happened, corpus
         # append did NOT (the documented worst window)
-        bb = corpus_store._band_rows_of(batch)
+        from projekt_data_engineering_iubh_spark.operators.minhash import (
+            band_rows,
+            signatures,
+        )
+
+        bb = band_rows(signatures(batch))
         ci.ingest_batch(spark, batch, root)
         corpus_store.append_band_index(batch, "ing_rp_bands", bands=bb)
 

@@ -1,8 +1,9 @@
-"""Layering guard: modules under pipeline/ never import the vector query
-module. Storage mechanics live in pipeline/; plans/ holds query plans
-and may call down into pipeline/, never the other way round, so a
-kind-specific kernel reaches the store only as an argument (e.g. the
-``assign`` callable of pipeline/ann_index.append_generation)."""
+"""Layering guards. Storage mechanics live in pipeline/; plans/ holds
+query plans and may call down into pipeline/, never the other way round,
+so a kind-specific kernel reaches the store only as an argument (e.g.
+the ``assign`` callable of pipeline/ann_index.append_generation) or
+from operators/ (MinHash-LSH: operators/minhash.py). streaming/ builds
+on pipeline/, so pipeline/ never imports streaming/."""
 
 from __future__ import annotations
 
@@ -10,7 +11,7 @@ import ast
 from pathlib import Path
 
 _PKG = "projekt_data_engineering_iubh_spark"
-_PIPELINE = Path(__file__).resolve().parent.parent / _PKG / "pipeline"
+_ROOT = Path(__file__).resolve().parent.parent / _PKG
 _FORBIDDEN = f"{_PKG}.plans.vector_queries"
 
 
@@ -31,12 +32,31 @@ def _imported_modules(tree: ast.AST, module: str):
                 yield node.lineno, f"{base}.{alias.name}"
 
 
+def _offenders(layers: tuple[str, ...], forbidden: tuple[str, ...]):
+    out = []
+    for layer in layers:
+        for path in sorted((_ROOT / layer).glob("*.py")):
+            module = f"{_PKG}.{layer}.{path.stem}"
+            tree = ast.parse(path.read_text(), filename=str(path))
+            for line, name in _imported_modules(tree, module):
+                if any(name == f or name.startswith(f + ".") for f in forbidden):
+                    out.append(f"{layer}/{path.name}:{line} imports {name}")
+    return out
+
+
 def test_pipeline_never_imports_vector_queries():
-    offenders = []
-    for path in sorted(_PIPELINE.glob("*.py")):
-        module = f"{_PKG}.pipeline.{path.stem}"
-        tree = ast.parse(path.read_text(), filename=str(path))
-        for line, name in _imported_modules(tree, module):
-            if name == _FORBIDDEN or name.startswith(_FORBIDDEN + "."):
-                offenders.append(f"{path.name}:{line} imports {name}")
+    offenders = _offenders(("pipeline",), (_FORBIDDEN,))
+    assert not offenders, "\n".join(offenders)
+
+
+def test_pipeline_and_streaming_never_import_text_plans():
+    offenders = _offenders(
+        ("pipeline", "streaming"),
+        (f"{_PKG}.plans.text_queries", f"{_PKG}.plans.curation_queries"),
+    )
+    assert not offenders, "\n".join(offenders)
+
+
+def test_pipeline_never_imports_streaming():
+    offenders = _offenders(("pipeline",), (f"{_PKG}.streaming",))
     assert not offenders, "\n".join(offenders)

@@ -153,3 +153,32 @@ def test_derived_seeds_equal_self_collected_on_coarse_tie(spark):
         _derived_vs_self_collected(
             res, seed_rows, cqs, pq_m, pq_codes, iters, dim // pq_m
         )
+
+
+def test_ivfpq_search_scores_every_book(spark):
+    """_ivfpq_search sums one ADC term per codebook it is given: with
+    M=16 books (the cosine geometry) the score is the sum over all 16
+    tables, not over the module's default four subspaces."""
+    m, subdim, codes = 16, 2, 3
+    rng = random.Random(16)
+    books = [
+        [[rng.randrange(-50, 50) for _ in range(subdim)] for _ in range(codes)]
+        for _ in range(m)
+    ]
+    q = [rng.randrange(-50, 50) for _ in range(m * subdim)]
+    code = [rng.randrange(codes) for _ in range(m)]
+    qv = spark.createDataFrame([(0, q)], "vec_id long, qemb array<bigint>")
+    enc = spark.createDataFrame(
+        [(7, 0, *code)],
+        "vec_id long, cell int, " + ", ".join(f"c{i} int" for i in range(m)),
+    )
+    got = vq._ivfpq_search(qv, [0], [[0] * (m * subdim)], books, enc).collect()
+    want = sum(
+        sum(
+            (q[i * subdim + j] - books[i][code[i]][j]) ** 2
+            for j in range(subdim)
+        )
+        for i in range(m)
+    )
+    assert [(r.query_id, r.neighbor_id) for r in got] == [(0, 7)]
+    assert got[0].adc_dist == want / vq._PQT_SCALE2

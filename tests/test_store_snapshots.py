@@ -343,6 +343,7 @@ def test_build_signature_index_respects_manifest_store(spark, tmp_path):
     live _appends delta files exist (they would be silently orphaned)."""
     import os
 
+    from projekt_data_engineering_iubh_spark.pipeline import band_delta
     from projekt_data_engineering_iubh_spark.streaming import neardup_stream as nd
 
     docs = spark.createDataFrame(
@@ -366,7 +367,7 @@ def test_build_signature_index_respects_manifest_store(spark, tmp_path):
     assert spark.read.parquet(store.resolve(idx)).count() > v1_rows
 
     # live delta files → refuse (compaction must fold them first)
-    delta = nd._appends_dir(idx)
+    delta = band_delta.appends_dir(idx)
     os.makedirs(delta, exist_ok=True)
     with open(os.path.join(delta, "stray.parquet"), "wb") as f:
         f.write(b"x")

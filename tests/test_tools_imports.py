@@ -2,8 +2,10 @@
 
 The tools under tools/ and bench.py run by hand, so no other test
 imports them: a package helper deleted or moved under a kept tool would
-only show when someone next runs it. This walks each file's AST (the
-tools are not executed and no Spark session starts) and checks that
+only show when someone next runs it. The test files are walked too:
+many import package names inside test bodies, and the heavy-gated ones
+never run by default. This walks each file's AST (nothing is executed
+and no Spark session starts) and checks that
 
 - every ``from <package module> import name`` resolves to an attribute
   or a submodule of that module;
@@ -26,7 +28,11 @@ import pytest
 REPO = Path(__file__).resolve().parent.parent
 PKG = "projekt_data_engineering_iubh_spark"
 SIBLING_DIRS = (REPO / "tools", REPO / "tests", REPO)
-FILES = sorted((REPO / "tools").glob("*.py")) + [REPO / "bench.py"]
+FILES = (
+    sorted((REPO / "tools").glob("*.py"))
+    + [REPO / "bench.py"]
+    + sorted((REPO / "tests").glob("*.py"))
+)
 
 
 def _top_level_names(tree: ast.Module) -> set[str]:
